@@ -976,28 +976,22 @@ object Scale10x {
         // mode: "force" = point read unconditionally (its raw cost, even
         // where the byte gate would decline), "off" = streaming shape
         // pinned, "auto" = production pick (byte-gated)
-        def trickleConf(mode: String): Unit = {
-          spark.conf.set("spark.graft.bandPointRead.enabled",
-            (mode != "off").toString)
-          spark.conf.set("spark.graft.bandPointRead.force",
-            (mode == "force").toString)
+        def trickleCands(table: String, mode: String): DataFrame = {
+          val bands = Dedup.bandedBatchKeys(trickleDf, "doc_id", "text", 8, 4, 3)
+          val ex = Some(trickleDf.select(col("doc_id")))
+          def join = Dedup.joinBandCandidates(bands, table, "doc_id", ex)
+          mode match {
+            case "force" => Dedup.pointReadBandCandidates(bands, table,
+              "doc_id", ex, maxStateBytes = Long.MaxValue).getOrElse(join)
+            case "off" => join
+            case _ => Dedup.bandTableCandidates(bands, table, "doc_id", ex)
+          }
         }
-        def trickleCandShape(table: String, mode: String): Long = {
-          trickleConf(mode)
-          try force(Dedup.bandTableCandidates(
-            Dedup.bandedBatchKeys(trickleDf, "doc_id", "text", 8, 4, 3),
-            table, "doc_id", Some(trickleDf.select(col("doc_id")))))
-          finally trickleConf("auto")
-        }
-        def trickleCandSet(table: String, mode: String): Set[(Long, Long)] = {
-          trickleConf(mode)
-          try Dedup.bandTableCandidates(
-              Dedup.bandedBatchKeys(trickleDf, "doc_id", "text", 8, 4, 3),
-              table, "doc_id", Some(trickleDf.select(col("doc_id"))))
-            .select(col("doc_a"), col("doc_b"))
+        def trickleCandShape(table: String, mode: String): Long =
+          force(trickleCands(table, mode))
+        def trickleCandSet(table: String, mode: String): Set[(Long, Long)] =
+          trickleCands(table, mode).select(col("doc_a"), col("doc_b"))
             .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-          finally trickleConf("auto")
-        }
         require(trickleCandSet(tableN, "force") == trickleCandSet(tableN, "off"),
           "point-read candidates diverge from the streaming shape")
         val (tp1, tpr1) = bo2(trickleCandShape(table1, "force"))

@@ -731,10 +731,6 @@ object Dedup {
       bandTableCandidates(batchBands, bandTable, id, excludeCorpusDocs),
       batch, corpus, id, text, shingleN, threshold)
 
-  /** The candidate stage of [[probeBandTable]] — everything except the
-    * jaccard verify — factored out so the scale harness's decomposition
-    * row times EXACTLY the probe's own candidate plan (no drift).
-    */
   /** Trickle-batch crossover knobs for [[pointReadBandCandidates]] —
     * set from MEASUREMENT (Scale10x gate_pointread_* A/B rows), and the
     * measurement refutes the obvious intuition, so it is recorded here:
@@ -758,7 +754,8 @@ object Dedup {
     * freshly-compacted state, where it answers in one driver read with
     * ZERO Spark jobs against the state (the readStatsDfMap latency
     * property) — hence the BYTE gate below (default 256 KB, both
-    * crossover points measured above it), not a row/bucket heuristic.
+    * crossover points measured above it; a per-call cap, see
+    * [[pointReadBandCandidates]]), not a row/bucket heuristic.
     * The bucket floor keeps fixture-sized tables (tests and sf oracles
     * use 4–8 buckets with batches of hundreds of docs) on the join
     * paths their plan pins certify.
@@ -781,22 +778,18 @@ object Dedup {
     * [[PointReadMaxPlanBytes]] by plan stats, distinct bh count ≤
     * [[PointReadKeysPerBucket]]·buckets, any exclusion frame itself
     * collectable, and — the measured crossover, see the knob scaladoc —
-    * bucket-pruned file bytes ≤ [[PointReadMaxStateBytes]] (bypassable
-    * with `spark.graft.bandPointRead.force=true`). Candidate sets are
-    * identical to the join shapes by construction (exact (band, bh)
+    * bucket-pruned file bytes ≤ `maxStateBytes` (default
+    * [[PointReadMaxStateBytes]]; the scale harness passes `Long.MaxValue`
+    * to time the point read's raw cost). Candidate sets are identical
+    * to the join shapes by construction (exact (band, bh)
     * equality, same exclusion, same pair dedup) — spec-pinned in
     * DedupSpec.
     */
   private[graft] def pointReadBandCandidates(
       batchBands: DataFrame, bandTable: String, id: String,
-      excludeCorpusDocs: Option[DataFrame]): Option[DataFrame] = {
+      excludeCorpusDocs: Option[DataFrame],
+      maxStateBytes: Long = PointReadMaxStateBytes): Option[DataFrame] = {
     val spark = batchBands.sparkSession
-    // session kill switch (`spark.graft.bandPointRead.enabled=false`):
-    // lets an operator pin the join shapes, and lets the scale harness
-    // A/B the two paths on the SAME batch
-    if (!spark.sessionState.conf
-        .getConfString("spark.graft.bandPointRead.enabled", "true")
-        .toBoolean) return None
     import org.apache.spark.sql.types.{IntegerType, LongType}
     val shapeOk =
       batchBands.schema.fieldNames.toSeq == Seq("doc", "band", "bh") &&
@@ -865,15 +858,7 @@ object Dedup {
       // pruned byte — fine while that is a few MB, hopeless against the
       // executor-parallel scan once it is hundreds (1000× gate fixture:
       // 11.3 s driver vs 2.4 s streaming for the SAME 50-doc batch).
-      // `spark.graft.bandPointRead.force=true` bypasses the gate for
-      // measurement and for operators who know their layout.
-      val force = spark.sessionState.conf
-        .getConfString("spark.graft.bandPointRead.force", "false").toBoolean
-      val maxBytes = spark.sessionState.conf
-        .getConfString("spark.graft.bandPointRead.maxStateBytes",
-          PointReadMaxStateBytes.toString).toLong
-      val bytesOk = force ||
-        fileStatuses.iterator.map(_.getLen).sum <= maxBytes
+      val bytesOk = fileStatuses.iterator.map(_.getLen).sum <= maxStateBytes
       if (byBh.size > PointReadKeysPerBucket.toLong * buckets || !bytesOk) None
       else {
         val excluded: Set[Long] = excludeCorpusDocs.fold(Set.empty[Long])(
@@ -940,15 +925,28 @@ object Dedup {
     }
   }
 
+  /** The candidate stage of [[probeBandTable]] — everything except the
+    * jaccard verify — factored out so the scale harness's decomposition
+    * row times EXACTLY the probe's own candidate plan (no drift). THREE
+    * shapes: a trickle batch (keys ≪ buckets·cap — see the saturation
+    * scaladoc at [[PointReadKeysPerBucket]]) short-circuits to the
+    * driver-direct [[pointReadBandCandidates]]; otherwise the two
+    * [[joinBandCandidates]] shapes.
+    */
   private[graft] def bandTableCandidates(
+      batchBands: DataFrame, bandTable: String, id: String,
+      excludeCorpusDocs: Option[DataFrame]): DataFrame =
+    pointReadBandCandidates(batchBands, bandTable, id, excludeCorpusDocs)
+      .getOrElse(joinBandCandidates(batchBands, bandTable, id,
+        excludeCorpusDocs))
+
+  /** The two JOIN shapes of [[bandTableCandidates]], picked by the
+    * planner's own broadcast test; same candidate set as the point read.
+    */
+  private[graft] def joinBandCandidates(
       batchBands: DataFrame, bandTable: String, id: String,
       excludeCorpusDocs: Option[DataFrame]): DataFrame = {
     val spark = batchBands.sparkSession
-    // THREE shapes. A trickle batch (keys ≪ buckets·cap — see the
-    // saturation scaladoc at [[PointReadKeysPerBucket]]) short-circuits
-    // to the driver-direct point read; otherwise TWO join shapes,
-    // picked by the planner's own broadcast test:
-    //
     // (1) MICRO-BATCH (band rows under the broadcast threshold — the
     // steady-state ingest/gate case): the batch's bands broadcast and
     // the state table STREAMS through the probe side (bucketed read, no
@@ -981,9 +979,6 @@ object Dedup {
     // keeps the candidate set exact. The eligibility test mirrors the
     // planner's (optimized-plan size vs autoBroadcastJoinThreshold), so
     // the fused shape is used exactly when the broadcast would happen.
-    val viaPointRead =
-      pointReadBandCandidates(batchBands, bandTable, id, excludeCorpusDocs)
-    if (viaPointRead.isDefined) return viaPointRead.get
     val bandsKeyed = batchBands
       .withColumn("__bk", xxhash64(col("band"), col("bh")))
     val smallBatch = try {

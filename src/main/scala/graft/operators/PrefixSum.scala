@@ -49,27 +49,12 @@ private[graft] object PrefixSum {
     */
   def inclusiveCum(df: DataFrame, valueCol: Column, orderCol: Column,
                    orderImage: Column, outCol: String): DataFrame = {
-    // Busy-cluster profile knob (r18 negative result 3's flip side,
-    // shipped r19 as an operable conf): the default LAZY shape references
-    // the bucketed input from the totals aggregate, the offsets join and
-    // the window pass, so the upstream subtree executes several times —
-    // which costs little WALL on an idle cluster (the copies run
-    // concurrently on spare cores; materializing instead measured q30
-    // 1.22/1.60 → 2.07/2.35 s locally) but multiplies total WORK. On a
-    // saturated cluster, where spare cores don't exist and total work is
-    // the binding resource, set spark.graft.prefixsum.materialize=true to
-    // persist the bucketed frame once and pay the serial barrier instead.
-    // Default OFF: the bench-certified shape. Blocks from the opt-in
-    // persist are dropped by the ContextCleaner once the frame is
-    // unreferenced (no unpersist hook exists in a lazy builder), so the
-    // knob trades bounded cache residency for the duplicated executions.
-    val materialize = df.sparkSession.sessionState.conf.getConfString(
-      "spark.graft.prefixsum.materialize", "false").toBoolean
-    val parted0 = bucketed(df, orderImage)
-    val parted =
-      if (materialize)
-        parted0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else parted0
+    // The bucketed input is referenced from the totals aggregate, the
+    // offsets join and the window pass, so its subtree executes several
+    // times. On an idle cluster the copies run concurrently on spare
+    // cores; persisting the frame instead measured slower (q30
+    // 1.22/1.60 → 2.07/2.35 s), so the shape stays lazy.
+    val parted = bucketed(df, orderImage)
     val totals = parted.groupBy(col("__psBkt")).agg(sum(valueCol).as("__psT"))
     val offsets = totals.select(col("__psBkt"))
       .join(totals.select(col("__psBkt").as("__psQ"), col("__psT")),

@@ -66,12 +66,10 @@ object Experiment {
     // construction) and run the same single metadata pass per scalar the
     // cross-join form executed anyway. NOTE prepare() is therefore EAGER:
     // it runs ONE bounded collect job at DAG-construction time (plan
-    // capture and spec setup included; 1 + |catCols| jobs on the
-    // degenerate-config fallback below), so analysis errors surface at
+    // capture and spec setup included), so analysis errors surface at
     // construction, not first action.
     // Categorical modes FUSED into the same one-row aggregation (r19):
-    // filling one column never changes another column's values, so when
-    // the catCols are distinct and none of them is the age column, each
+    // filling one column never changes another column's values, so each
     // column's mode over the progressively-filled frame equals its mode
     // over `meta` itself — ONE collect job gathers the mean/min/max AND
     // every categorical (mode, non-null count) pair, instead of
@@ -79,17 +77,15 @@ object Experiment {
     // the cohort subtree) at construction time. `mode(c, deterministic
     // = true)` is exactly the reference tie rule (most frequent, ties
     // toward the LOWEST value = the old orderBy(count desc, value asc)
-    // limit 1). Degenerate configs where the precondition fails (a
-    // repeated catCol, or a catCol equal to the age column) fall back to
-    // the sequential per-column jobs below with identical semantics.
-    val fuseModes = cfg.catCols.distinct.size == cfg.catCols.size &&
-      !cfg.catCols.contains(a)
-    val catAggs =
-      if (fuseModes)
-        cfg.catCols.flatMap(c => Seq(
-          mode(col(c), deterministic = true).as(s"__mode_$c"),
-          count(col(c)).as(s"__cnt_$c")))
-      else Nil
+    // limit 1). The degenerate configs agree with the sequential fill
+    // too (pinned by ExperimentSpec): a REPEATED catCol's second fill is
+    // a no-op, since filling only grows the mode's count; a catCol equal
+    // to the AGE column has no nulls left after the mean fill, so its
+    // coalesce is a no-op, and an all-null age gives count 0 and the
+    // same empty frame.
+    val catAggs = cfg.catCols.flatMap(c => Seq(
+      mode(col(c), deterministic = true).as(s"__mode_$c"),
+      count(col(c)).as(s"__cnt_$c")))
     val baseAggs = Seq(avg(col(a)).cast("double").as("__mean"),
       min(col(a)).cast("double").as("__min"),
       max(col(a)).cast("double").as("__max")) ++ catAggs
@@ -119,20 +115,10 @@ object Experiment {
     // which would silently widen the column through coalesce — the old
     // modeImpute coalesced against a same-typed column and never could
     val imputed =
-      if (fuseModes)
-        cfg.catCols.zipWithIndex.foldLeft(scaled) { case (d, (c, i)) =>
-          if (statsRow.getLong(4 + 2 * i) == 0L) d.where(lit(false))
-          else d.withColumn(c,
-            coalesce(col(c), lit(statsRow.get(3 + 2 * i)).cast(d.schema(c).dataType)))
-        }
-      else cfg.catCols.foldLeft(scaled) { (d, c) =>
-        val m = d.filter(col(c).isNotNull)
-          .groupBy(col(c)).agg(count(lit(1)).as("__cnt"))
-          .orderBy(col("__cnt").desc, col(c).asc)
-          .limit(1).select(col(c)).collect()
-        if (m.isEmpty) d.where(lit(false))
+      cfg.catCols.zipWithIndex.foldLeft(scaled) { case (d, (c, i)) =>
+        if (statsRow.getLong(4 + 2 * i) == 0L) d.where(lit(false))
         else d.withColumn(c,
-          coalesce(col(c), lit(m(0).get(0)).cast(d.schema(c).dataType)))
+          coalesce(col(c), lit(statsRow.get(3 + 2 * i)).cast(d.schema(c).dataType)))
       }
     val encoded = Encode.bucketize(imputed, a, Seq(30.0, 60.0), s"${a}_class")
     val folded = StratifiedFolds.assignSets(

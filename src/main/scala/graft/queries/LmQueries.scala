@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Memo, Tables}
 import graft.ml.NgramLm
 import graft.operators.Sampling
 import org.apache.spark.sql.functions._
@@ -190,17 +190,16 @@ object LmQueries {
   /** The q73 model artifact with its drift sidecar: the q5k self-fit
     * saved once per sf dir, baseline stat over the SAME fit corpus.
     */
-  private val lmDriftCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  private val lmDriftCache = new Memo[String, String]
   private def ensureLmDriftPath(s: org.apache.spark.sql.SparkSession,
                                 d: String): String =
-    lmDriftCache.getOrElseUpdate(d, {
+    lmDriftCache(d) {
       val path = sessionTmp(s, "q73_lm_drift", d)
       NgramLm.save(s, ensureSelfModel(s, d), path)
       NgramLm.writeDriftSidecar(s, path, Tables.documents(s, d),
         col("doc_id"), col("text"))
       path
-    })
+    }
 
   /** The q7a artifact: the q73 serving lifecycle (self-fit save + drift
     * baseline) on its OWN path — q73 keeps serving the original model
@@ -208,11 +207,10 @@ object LmQueries {
     * reference slice, once per sf dir, so the scoring genuinely serves
     * the post-swap artifact.
     */
-  private val refitLmCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  private val refitLmCache = new Memo[String, String]
   private def ensureRefitLmPath(s: org.apache.spark.sql.SparkSession,
                                 d: String): String =
-    refitLmCache.getOrElseUpdate(d, {
+    refitLmCache(d) {
       val path = sessionTmp(s, "q7a_lm_refit", d)
       val docs = Tables.documents(s, d)
       NgramLm.save(s, ensureSelfModel(s, d), path)
@@ -222,7 +220,7 @@ object LmQueries {
       val refit = NgramLm.fit(slice, col("text"), UniCap, BiCap)
       NgramLm.refitAndSwap(s, refit, slice, col("doc_id"), col("text"), path)
       path
-    })
+    }
 
   /** The q5k Spark side against any documents frame (Scale10x reuses it). */
   def lmScore(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
@@ -288,11 +286,10 @@ object LmQueries {
     * because refitting reproduces the same model bit-for-bit, which
     * NgramLmSpec pins).
     */
-  private val fitCache =
-    scala.collection.concurrent.TrieMap.empty[String, NgramLm.LmModel]
+  private val fitCache = new Memo[String, NgramLm.LmModel]
   private def ensureSelfModel(s: org.apache.spark.sql.SparkSession,
                               d: String): NgramLm.LmModel =
-    fitCache.getOrElseUpdate(d,
+    fitCache(d)(
       NgramLm.fit(Tables.documents(s, d), col("text"), UniCap, BiCap))
 
   /** The backoff self-fit at the q5t caps, memoized per sf dir — q5t and
@@ -300,11 +297,10 @@ object LmQueries {
     * [[ensureSelfModel]] discipline; the bench gives the oracle the same
     * amortization via [[benchFixtures]], keeping the ratio symmetric).
     */
-  private val boFitCache =
-    scala.collection.concurrent.TrieMap.empty[String, NgramLm.BackoffLm]
+  private val boFitCache = new Memo[String, NgramLm.BackoffLm]
   private def ensureBackoffModel(s: org.apache.spark.sql.SparkSession,
                                  d: String): NgramLm.BackoffLm =
-    boFitCache.getOrElseUpdate(d,
+    boFitCache(d)(
       NgramLm.fitBackoff(Tables.documents(s, d), col("text"), order = 3,
         caps = Seq(BoUniCap, BoBiCap, BoTriCap), alpha = BoAlpha))
 
@@ -325,17 +321,16 @@ object LmQueries {
     * (BpeSpec additionally pins loaded == fitted bit-for-bit). One fit
     * job per sf dir serves both queries.
     */
-  private val bpeCache = scala.collection.concurrent.TrieMap
-    .empty[String, graft.ml.BpeTokenizer.BpeModel]
+  private val bpeCache = new Memo[String, graft.ml.BpeTokenizer.BpeModel]
   private def ensureBpeModel(s: org.apache.spark.sql.SparkSession,
                              d: String): graft.ml.BpeTokenizer.BpeModel =
-    bpeCache.getOrElseUpdate(d, {
+    bpeCache(d) {
       val fitted = graft.ml.BpeTokenizer.fitModel(Tables.documents(s, d),
         col("text"), vocabCap = BpeVocabCap, nMerges = BpeNMerges)
       val path = sessionTmp(s, "bpe_model", d)
       graft.ml.BpeTokenizer.save(s, fitted, path)
       graft.ml.BpeTokenizer.load(s, path)
-    })
+    }
   private def ensureBpeMerges(s: org.apache.spark.sql.SparkSession,
                               d: String): Seq[(String, String)] =
     ensureBpeModel(s, d).merges

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Memo, Tables}
 import graft.ml.MetaClassifier
 import graft.pipeline.Experiment
 import graft.sources.Sources
@@ -41,12 +41,12 @@ object PipelineQueries {
   // per consuming query. Deterministic (fixed seed, bootstrap=false): a
   // memo hit is bit-identical to a refit, so Verify's independent reruns
   // agree either way.
-  private val rfMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.ml.classification.RandomForestClassificationModel]()
+  private val rfMemo =
+    new Memo[String, org.apache.spark.ml.classification.RandomForestClassificationModel]
 
   private def h5Model(s: org.apache.spark.sql.SparkSession,
                       d: String): org.apache.spark.ml.classification.RandomForestClassificationModel =
-    rfMemo.computeIfAbsent(s"${System.identityHashCode(s)}:$d", _ =>
+    rfMemo(s"${System.identityHashCode(s)}:$d")(
       MetaClassifier.fit(
         h5Folded(s, d).filter(col("set") === "train"), h5Feats, "label",
         MetaClassifier.Config(numTrees = 21, maxDepth = 5, seed = 0L)))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Memo, Tables}
 import graft.operators.Similarity
 import org.apache.spark.sql.functions._
 
@@ -612,82 +612,77 @@ object SimilarityQueries {
     * once per sf dir per session at a deterministic tmp root; the replay
     * clears and rewrites only the survivor segments (seg=b*) under it.
     */
-  private val semCellCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  private val semCellCache = new Memo[String, String]
   private def ensureSemCellTable(s: org.apache.spark.sql.SparkSession,
                                  d: String): String =
-    semCellCache.getOrElseUpdate(d, {
+    semCellCache(d) {
       val root = LmQueries.sessionTmp(s, "q6p_celltable", d)
       Similarity.writeSemCellSegment(
         Tables.embeddings(s, d).where(col("vec_id") % 11 =!= 0),
         "vec_id", ensureSemGateCentroids(s, d), root, "corpus")
       root
-    })
+    }
 
   /** The q6z drift sidecar on the q6p cell table's root: the baseline
     * stat over the gate corpus, written once per sf dir (the replays
     * only clear seg=b* survivor segments — the sidecar persists).
     */
-  private val semDriftCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  private val semDriftCache = new Memo[String, String]
   private def ensureSemDriftSidecar(s: org.apache.spark.sql.SparkSession,
                                     d: String): String =
-    semDriftCache.getOrElseUpdate(d, {
+    semDriftCache(d) {
       val root = ensureSemCellTable(s, d)
       Similarity.writeSemDriftSidecar(s, root,
         Tables.embeddings(s, d).where(col("vec_id") % 11 =!= 0),
         ensureSemGateCentroids(s, d))
       root
-    })
+    }
 
   /** The q5y PQ codebook fit, memoized per sf dir — the query and its
     * dynamic oracle must embed the IDENTICAL codebook (the ensureSelfModel
     * discipline; the fit itself is deterministic for a given corpus+seed,
     * spec-pinned).
     */
-  private val pqCache =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[Seq[Seq[Double]]]]
+  private val pqCache = new Memo[String, Seq[Seq[Seq[Double]]]]
   private def ensurePqCodebooks(s: org.apache.spark.sql.SparkSession,
                                 d: String): Seq[Seq[Seq[Double]]] =
-    pqCache.getOrElseUpdate(d,
+    pqCache(d)(
       Similarity.fitPq(Tables.embeddings(s, d).where(col("vec_id") >= 5)))
 
   /** The q6h IVF-PQ fit (coarse cells + residual codebooks), memoized per
     * sf dir — same ensure discipline as the PQ codebooks above.
     */
-  private val ivfPqCache = scala.collection.concurrent.TrieMap
-    .empty[String, (Seq[Seq[Double]], Seq[Seq[Seq[Double]]])]
+  private val ivfPqCache =
+    new Memo[String, (Seq[Seq[Double]], Seq[Seq[Seq[Double]]])]
   private def ensureIvfPq(s: org.apache.spark.sql.SparkSession, d: String)
       : (Seq[Seq[Double]], Seq[Seq[Seq[Double]]]) =
-    ivfPqCache.getOrElseUpdate(d,
+    ivfPqCache(d)(
       Similarity.fitIvfPq(Tables.embeddings(s, d).where(col("vec_id") >= 5)))
 
   /** The q6n persisted index: the q6h model encoded + written once per
     * sf dir (fit → write → serve-from-disk sits inside the correctness
     * gate; the oracle replays from the PRE-WRITE model literals).
     */
-  private val ivfPqIndexCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  private val ivfPqIndexCache = new Memo[String, String]
   private def ensureIvfPqIndex(s: org.apache.spark.sql.SparkSession,
                                d: String): String =
-    ivfPqIndexCache.getOrElseUpdate(d, {
+    ivfPqIndexCache(d) {
       val path = LmQueries.sessionTmp(s, "q6n_ivfpq_index", d)
       val (coarse, cbs) = ensureIvfPq(s, d)
       Similarity.writeIvfPqIndex(
         Tables.embeddings(s, d).where(col("vec_id") >= 5), "vec_id",
         path, coarse, cbs)
       path
-    })
+    }
 
   /** The q6q two-batch index: built from the even corpus half, the odd
     * half appended with the saved model — once per sf dir, so the search
     * serves a genuinely incrementally-built index.
     */
-  private val ivfPqAppendCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  private val ivfPqAppendCache = new Memo[String, String]
   private def ensureIvfPqAppendedIndex(s: org.apache.spark.sql.SparkSession,
                                        d: String): String =
-    ivfPqAppendCache.getOrElseUpdate(d, {
+    ivfPqAppendCache(d) {
       val path = LmQueries.sessionTmp(s, "q6q_ivfpq_append", d)
       val (coarse, cbs) = ensureIvfPq(s, d)
       val corpus = Tables.embeddings(s, d).where(col("vec_id") >= 5)
@@ -696,7 +691,7 @@ object SimilarityQueries {
       Similarity.appendIvfPqIndex(corpus.where(col("vec_id") % 2 =!= 0),
         "vec_id", path)
       path
-    })
+    }
 
   /** The q6y refit model: a SECOND deterministic fit over the full
     * corpus with a different seed — genuinely different centroids and
@@ -704,12 +699,12 @@ object SimilarityQueries {
     * the old index would produce old-model results against a new-model
     * oracle.
     */
-  private val ivfPqRefitCache = scala.collection.concurrent.TrieMap
-    .empty[String, (Seq[Seq[Double]], Seq[Seq[Seq[Double]]])]
+  private val ivfPqRefitCache =
+    new Memo[String, (Seq[Seq[Double]], Seq[Seq[Seq[Double]]])]
   private def ensureIvfPqRefit(s: org.apache.spark.sql.SparkSession,
                                d: String)
       : (Seq[Seq[Double]], Seq[Seq[Seq[Double]]]) =
-    ivfPqRefitCache.getOrElseUpdate(d,
+    ivfPqRefitCache(d)(
       Similarity.fitIvfPq(
         Tables.embeddings(s, d).where(col("vec_id") >= 5), seed = 43L))
 
@@ -718,11 +713,10 @@ object SimilarityQueries {
     * corpus — once per sf dir, so the search genuinely serves the
     * post-swap artifact.
     */
-  private val ivfPqRefitIdxCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  private val ivfPqRefitIdxCache = new Memo[String, String]
   private def ensureIvfPqRefitIndex(s: org.apache.spark.sql.SparkSession,
                                     d: String): String =
-    ivfPqRefitIdxCache.getOrElseUpdate(d, {
+    ivfPqRefitIdxCache(d) {
       val path = LmQueries.sessionTmp(s, "q6y_ivfpq_refit", d)
       val (coarse, cbs) = ensureIvfPq(s, d)
       val corpus = Tables.embeddings(s, d).where(col("vec_id") >= 5)
@@ -733,7 +727,7 @@ object SimilarityQueries {
       val (c1, b1) = ensureIvfPqRefit(s, d)
       Similarity.refitIvfPqIndex(corpus, "vec_id", path, c1, b1)
       path
-    })
+    }
 
   /** The q77 index: the q6q lifecycle with the odd half appended as TWO
     * separate batches — each append lands its own part files, so the
@@ -741,11 +735,10 @@ object SimilarityQueries {
     * compacted to one file per cell. Built once per sf dir, so the
     * search genuinely serves the post-compaction tree.
     */
-  private val ivfPqCompactCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  private val ivfPqCompactCache = new Memo[String, String]
   private def ensureIvfPqCompactedIndex(s: org.apache.spark.sql.SparkSession,
                                         d: String): String =
-    ivfPqCompactCache.getOrElseUpdate(d, {
+    ivfPqCompactCache(d) {
       val path = LmQueries.sessionTmp(s, "q77_ivfpq_compact", d)
       val (coarse, cbs) = ensureIvfPq(s, d)
       val corpus = Tables.embeddings(s, d).where(col("vec_id") >= 5)
@@ -757,17 +750,16 @@ object SimilarityQueries {
         "vec_id", path)
       Similarity.compactIvfPqIndex(s, path)
       path
-    })
+    }
 
   /** The q6t cell table: the q6o corpus written as TWO segments (a base
     * and a survivor-style increment) then compacted into one — built once
     * per sf dir, so the gate genuinely serves post-compaction state.
     */
-  private val semCompactCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  private val semCompactCache = new Memo[String, String]
   private def ensureCompactedCellTable(s: org.apache.spark.sql.SparkSession,
                                        d: String): String =
-    semCompactCache.getOrElseUpdate(d, {
+    semCompactCache(d) {
       val root = LmQueries.sessionTmp(s, "q6t_celltable", d)
       val corpus = Tables.embeddings(s, d).where(col("vec_id") % 11 =!= 0)
       val cents = ensureSemGateCentroids(s, d)
@@ -781,18 +773,17 @@ object SimilarityQueries {
       Similarity.compactSemCellTable(s, root, "corpus2",
         keepLatestBatchSeg = false)
       root
-    })
+    }
 
   /** The q7b refit centroids: a SECOND deterministic fit over the gate
     * corpus with a different seed — genuinely different blocking than
     * [[ensureSemGateCentroids]]', so a swap that silently kept the old
     * table would mis-cell state rows against the new assignment.
     */
-  private val semRefitCentCache =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[Seq[Double]]]
+  private val semRefitCentCache = new Memo[String, Seq[Seq[Double]]]
   private def ensureSemRefitCentroids(s: org.apache.spark.sql.SparkSession,
                                       d: String): Seq[Seq[Double]] =
-    semRefitCentCache.getOrElseUpdate(d,
+    semRefitCentCache(d)(
       Similarity.fitSemDedupCentroids(
         Tables.embeddings(s, d).where(col("vec_id") % 11 =!= 0), seed = 43L))
 
@@ -803,11 +794,10 @@ object SimilarityQueries {
     * that wrote b7 is quiesced by construction here (the refit folds
     * every segment — the single-maintainer contract).
     */
-  private val semRefitCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  private val semRefitCache = new Memo[String, String]
   private def ensureRefitCellTable(s: org.apache.spark.sql.SparkSession,
                                    d: String): String =
-    semRefitCache.getOrElseUpdate(d, {
+    semRefitCache(d) {
       val root = LmQueries.sessionTmp(s, "q7b_celltable", d)
       val corpus = Tables.embeddings(s, d).where(col("vec_id") % 11 =!= 0)
       val cents = ensureSemGateCentroids(s, d)
@@ -819,24 +809,22 @@ object SimilarityQueries {
       // the drift contract fired: refit the blocking, re-block, swap
       Similarity.refitSemCellTable(s, root, ensureSemRefitCentroids(s, d))
       root
-    })
+    }
 
   /** The q6i SemDeDup centroid fit, memoized per sf dir. */
-  private val semCache =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[Seq[Double]]]
+  private val semCache = new Memo[String, Seq[Seq[Double]]]
   private def ensureSemCentroids(s: org.apache.spark.sql.SparkSession,
                                  d: String): Seq[Seq[Double]] =
-    semCache.getOrElseUpdate(d,
+    semCache(d)(
       Similarity.fitSemDedupCentroids(Tables.embeddings(s, d)))
 
   /** The q6o gate centroid fit — corpus side only (the blocking model
     * exists before any batch arrives), memoized per sf dir.
     */
-  private val semGateCache =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[Seq[Double]]]
+  private val semGateCache = new Memo[String, Seq[Seq[Double]]]
   private def ensureSemGateCentroids(s: org.apache.spark.sql.SparkSession,
                                      d: String): Seq[Seq[Double]] =
-    semGateCache.getOrElseUpdate(d,
+    semGateCache(d)(
       Similarity.fitSemDedupCentroids(
         Tables.embeddings(s, d).where(col("vec_id") % 11 =!= 0)))
 

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Memo, Tables}
 import graft.functions.TextFunctions
 import graft.operators.{Curate, Dedup, Multimodal}
 import org.apache.spark.sql.functions._
@@ -56,18 +56,18 @@ object TextQueries {
     * the SAME fitted coefficients within a session, exactly like q34's
     * forest cache.
     */
-  private val qmodelCache = scala.collection.concurrent.TrieMap
-    .empty[String, org.apache.spark.ml.classification.LogisticRegressionModel]
+  private val qmodelCache =
+    new Memo[String, org.apache.spark.ml.classification.LogisticRegressionModel]
   private val QmBuckets = 64
   private def ensureQualityModel(s: org.apache.spark.sql.SparkSession,
                                  d: String): org.apache.spark.ml.classification.LogisticRegressionModel =
-    qmodelCache.getOrElseUpdate(d, {
+    qmodelCache(d) {
       val train = Tables.documents(s, d)
         .where(col("doc_id") % 10 < 8)
         .select(col("text"),
           (col("lang") === "en").cast("double").as("y"))
       graft.ml.TextClassifier.fit(train, "text", "y", k = QmBuckets)
-    })
+    }
 
   /** The classifier margin chain as a WITH prefix ending in CTE
     * `m(doc_id, margin)`, parameterized on the exported model and the
@@ -133,33 +133,32 @@ object TextQueries {
     * round-tripped through save→load once per sf dir (the q6k discipline
     * — the oracle embeds the pre-save coefficients, Spark serves these).
     */
-  private val servedQmCache = scala.collection.concurrent.TrieMap
-    .empty[String, graft.ml.TextClassifier.LinearTextModel]
+  private val servedQmCache =
+    new Memo[String, graft.ml.TextClassifier.LinearTextModel]
   private def ensureServedQualityModel(s: org.apache.spark.sql.SparkSession,
                                        d: String)
       : graft.ml.TextClassifier.LinearTextModel =
-    servedQmCache.getOrElseUpdate(d, {
+    servedQmCache(d) {
       val path = LmQueries.sessionTmp(s, "q70_quality_model", d)
       graft.ml.TextClassifier.save(s,
         graft.ml.TextClassifier.export(ensureQualityModel(s, d)), path)
       graft.ml.TextClassifier.load(s, path)
-    })
+    }
 
   /** The q75 fixture: the q70 saved-model path with a `_drift.json`
     * baseline over the FIT corpus (train slice) written once per sf dir
     * — the q72/q73 drift-path discipline on the quality axis.
     */
-  private val qmDriftCache = scala.collection.concurrent.TrieMap
-    .empty[String, String]
+  private val qmDriftCache = new Memo[String, String]
   private def ensureQualityDriftPath(s: org.apache.spark.sql.SparkSession,
                                      d: String): String =
-    qmDriftCache.getOrElseUpdate(d, {
+    qmDriftCache(d) {
       ensureServedQualityModel(s, d) // materializes the artifact
       val path = LmQueries.sessionTmp(s, "q70_quality_model", d)
       graft.ml.TextClassifier.writeDriftSidecar(s, path,
         Tables.documents(s, d).where(col("doc_id") % 10 < 8), "text")
       path
-    })
+    }
 
   /** The q7c replay at k=256: the k smallest distinct md5-60-bit token
     * hashes by a global DISTINCT + ORDER BY (exactly the vocabulary-
@@ -189,29 +188,28 @@ object TextQueries {
     * than [[ensureQualityModel]]'s, so a swap that silently kept the old
     * artifact would produce old-model scores against a new-model oracle.
     */
-  private val refitQmCache = scala.collection.concurrent.TrieMap
-    .empty[String, graft.ml.TextClassifier.LinearTextModel]
+  private val refitQmCache =
+    new Memo[String, graft.ml.TextClassifier.LinearTextModel]
   private def ensureRefitQualityModel(s: org.apache.spark.sql.SparkSession,
                                       d: String)
       : graft.ml.TextClassifier.LinearTextModel =
-    refitQmCache.getOrElseUpdate(d, {
+    refitQmCache(d) {
       val train = Tables.documents(s, d).where(col("doc_id") % 10 < 6)
         .select(col("text"),
           (col("lang") === "en").cast("double").as("y"))
       graft.ml.TextClassifier.export(
         graft.ml.TextClassifier.fit(train, "text", "y", k = QmBuckets))
-    })
+    }
 
   /** The q78 artifact: the q70 serving lifecycle (save + drift baseline)
     * on its OWN path — q70/q74/q75 keep serving the original model from
     * theirs — then a refit-and-swap with the fresh model, once per sf
     * dir, so the scoring genuinely serves the post-swap artifact.
     */
-  private val refitQmPathCache = scala.collection.concurrent.TrieMap
-    .empty[String, String]
+  private val refitQmPathCache = new Memo[String, String]
   private def ensureRefitQualityPath(s: org.apache.spark.sql.SparkSession,
                                      d: String): String =
-    refitQmPathCache.getOrElseUpdate(d, {
+    refitQmPathCache(d) {
       val path = LmQueries.sessionTmp(s, "q78_quality_refit", d)
       graft.ml.TextClassifier.save(s,
         graft.ml.TextClassifier.export(ensureQualityModel(s, d)), path)
@@ -221,7 +219,7 @@ object TextQueries {
       graft.ml.TextClassifier.refitAndSwap(s, ensureRefitQualityModel(s, d),
         Tables.documents(s, d).where(col("doc_id") % 10 < 6), "text", path)
       path
-    })
+    }
 
   /** The planted cross-batch near-dup pair for q6c: 3000000 (even → replay
     * batch 0, novel vs the corpus, survives round 0) and 3000001 (odd →
@@ -1980,74 +1978,69 @@ object TextQueries {
   /** Memoized per-sf-dir DSIR fit (target = every 7th doc) — the query
     * and its dynamic oracle must embed the identical delta table.
     */
-  private val dsirCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.ml.Dsir.DsirModel]
+  private val dsirCache = new Memo[String, graft.ml.Dsir.DsirModel]
   private def ensureDsirModel(s: org.apache.spark.sql.SparkSession,
                               d: String): graft.ml.Dsir.DsirModel =
-    dsirCache.getOrElseUpdate(d, {
+    dsirCache(d) {
       val docs = Tables.documents(s, d)
       graft.ml.Dsir.fit(
         docs.where(col("doc_id") % 7 === 0),
         docs.where(col("doc_id") % 7 =!= 0), "text", buckets = 256)
-    })
+    }
 
   /** The q6k served model: [[ensureDsirModel]] round-tripped through
     * save→load once per sf dir, so persistence sits inside the
     * correctness gate (load is spec-pinned bit-identical, hence the
     * oracle may embed the pre-save deltas).
     */
-  private val dsirLoadedCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.ml.Dsir.DsirModel]
+  private val dsirLoadedCache = new Memo[String, graft.ml.Dsir.DsirModel]
   private def ensureDsirLoaded(s: org.apache.spark.sql.SparkSession,
                                d: String): graft.ml.Dsir.DsirModel =
-    dsirLoadedCache.getOrElseUpdate(d, {
+    dsirLoadedCache(d) {
       val path = LmQueries.sessionTmp(s, "q6k_dsir_model", d)
       graft.ml.Dsir.save(s, ensureDsirModel(s, d), path)
       graft.ml.Dsir.load(s, path)
-    })
+    }
 
   /** The q72 model artifact with its drift sidecar: q6k's save→load path
     * discipline plus `writeDriftSidecar` over the RAW fit corpus — once
     * per sf dir (the sidecar survives, the oracle recomputes it).
     */
-  private val dsirDriftCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  private val dsirDriftCache = new Memo[String, String]
   private def ensureDsirDriftPath(s: org.apache.spark.sql.SparkSession,
                                   d: String): String =
-    dsirDriftCache.getOrElseUpdate(d, {
+    dsirDriftCache(d) {
       val path = LmQueries.sessionTmp(s, "q72_dsir_drift", d)
       graft.ml.Dsir.save(s, ensureDsirModel(s, d), path)
       graft.ml.Dsir.writeDriftSidecar(s, path,
         Tables.documents(s, d).where(col("doc_id") % 7 =!= 0), "text")
       path
-    })
+    }
 
   /** The q79 refit model: a SECOND deterministic fit with a DIFFERENT
     * target slice (every 5th doc) — genuinely different deltas than
     * [[ensureDsirModel]]'s, so a swap that silently kept the old
     * artifact would produce old-delta scores against a new-delta oracle.
     */
-  private val refitDsirCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.ml.Dsir.DsirModel]
+  private val refitDsirCache = new Memo[String, graft.ml.Dsir.DsirModel]
   private def ensureRefitDsirModel(s: org.apache.spark.sql.SparkSession,
                                    d: String): graft.ml.Dsir.DsirModel =
-    refitDsirCache.getOrElseUpdate(d, {
+    refitDsirCache(d) {
       val docs = Tables.documents(s, d)
       graft.ml.Dsir.fit(
         docs.where(col("doc_id") % 5 === 0),
         docs.where(col("doc_id") % 5 =!= 0), "text", buckets = 256)
-    })
+    }
 
   /** The q79 artifact: the q72 serving lifecycle (save + drift baseline)
     * on its OWN path — q72/q6k keep serving the original model from
     * theirs — then a refit-and-swap with the fresh model, once per sf
     * dir, so the selection genuinely serves the post-swap artifact.
     */
-  private val refitDsirPathCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  private val refitDsirPathCache = new Memo[String, String]
   private def ensureRefitDsirPath(s: org.apache.spark.sql.SparkSession,
                                   d: String): String =
-    refitDsirPathCache.getOrElseUpdate(d, {
+    refitDsirPathCache(d) {
       val path = LmQueries.sessionTmp(s, "q79_dsir_refit", d)
       val docs = Tables.documents(s, d)
       graft.ml.Dsir.save(s, ensureDsirModel(s, d), path)
@@ -2057,7 +2050,7 @@ object TextQueries {
       graft.ml.Dsir.refitAndSwap(s, ensureRefitDsirModel(s, d),
         docs.where(col("doc_id") % 5 =!= 0), "text", path)
       path
-    })
+    }
 
   /** Shared windows→islands CTE chain for the ExactSubstr oracles (k=8,
     * minDocs=2): per-doc 0-based window positions by zipped unnest, hot

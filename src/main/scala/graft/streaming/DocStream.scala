@@ -38,16 +38,10 @@ object DocStream {
     * conf is set on the STREAM'S OWN session: foreachBatch hands each
     * micro-batch a session CLONED per stream at start, so the mutation
     * cannot race concurrent batch queries on the parent session
-    * (spec-pinned in DocStreamSpec). Deployments running LARGE
-    * micro-batches (minutes-long triggers at cluster scale, where
-    * runtime re-optimization pays for its driver jobs — e.g. AQE skew
-    * splitting inside a fat trigger) keep AQE by setting
-    * `spark.graft.streamGate.aqe=true` on the parent session; the clone
-    * inherits it like every other graft knob.
+    * (spec-pinned in DocStreamSpec).
     */
   private def tuneTriggerSession(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.conf.get("spark.graft.streamGate.aqe", "false").toBoolean)
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
 
   /** `docs` is a STREAMING DataFrame with `tsCol` event time and `textCol`;
     * `corpus` is a static DataFrame of already-ingested documents. Emits

@@ -775,13 +775,10 @@ class DedupSpec extends SparkSpec {
       (100L, "the quick brown fox jumps over the lazy dog near the river bank extra"),
       (101L, "genuinely novel content speaking about entirely unrelated astronomy topics"))
       .toDF("doc_id", "text")
-    // same corpus banded twice: 16 buckets (≥ the point-read floor) and
-    // 8 (below it, stays on the join shapes) — bucket count does not
-    // change band-row CONTENT, so the two tables' candidates must agree
+    // 16 buckets: at the point-read floor, so all three candidate
+    // functions can run against the SAME table
     Dedup.writeBandTable(corpus, "doc_id", "text", "pr_bands",
       buckets = 16, bands = 16, rowsPerBand = 2)
-    Dedup.writeBandTable(corpus, "doc_id", "text", "prj_bands",
-      buckets = 8, bands = 16, rowsPerBand = 2)
     try {
       val bandRows = Dedup.bandedBatchKeys(batch, "doc_id", "text", 16, 2, 3)
       val pr = Dedup.pointReadBandCandidates(bandRows, "pr_bands",
@@ -793,45 +790,39 @@ class DedupSpec extends SparkSpec {
       assert(!prPlan.contains("pr_bands") && !prPlan.contains("Join"), prPlan)
       val prSet = pr.get.select("doc_a", "doc_b")
         .as[(Long, Long)].collect().toSet
-      val joinSet = Dedup.bandTableCandidates(bandRows, "prj_bands",
+      val joinSet = Dedup.joinBandCandidates(bandRows, "pr_bands",
           "doc_id", None)
         .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
       assert(prSet == joinSet && prSet.nonEmpty,
         s"point read diverges from join shape: $prSet vs $joinSet")
       // bandTableCandidates auto-picks the point read on the 16-bucket
       // table — same set again
-      val autoSet = Dedup.bandTableCandidates(bandRows, "pr_bands",
+      val auto = Dedup.bandTableCandidates(bandRows, "pr_bands",
           "doc_id", None)
-        .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-      assert(autoSet == joinSet)
+      assert(!auto.queryExecution.executedPlan.toString.contains("Join"))
+      assert(auto.select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
+        == joinSet)
       // exclusion parity: excluding a corpus doc removes exactly its pairs
       // on both paths
       val ex = Some(Seq(1L).toDF("doc_id"))
       val prEx = Dedup.pointReadBandCandidates(bandRows, "pr_bands",
           "doc_id", ex).get
         .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-      val joinEx = Dedup.bandTableCandidates(bandRows, "prj_bands",
+      val joinEx = Dedup.joinBandCandidates(bandRows, "pr_bands",
           "doc_id", ex)
         .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
       assert(prEx == joinEx && prEx == joinSet.filterNot(_._2 == 1L))
       // column-ORDER contract: the exclusion anti-join must not leak the
       // USING-column-first schema (doc_b, doc_a) to positional consumers
-      assert(Dedup.bandTableCandidates(bandRows, "prj_bands", "doc_id", ex)
+      assert(Dedup.joinBandCandidates(bandRows, "pr_bands", "doc_id", ex)
         .columns.toSeq == Seq("doc_a", "doc_b"))
       // the BYTE gate (the measured crossover): with the cap at 0 the
-      // auto pick must decline and fall back to the join shapes; force
-      // overrides it
-      spark.conf.set("spark.graft.bandPointRead.maxStateBytes", "0")
-      try {
-        assert(Dedup.pointReadBandCandidates(bandRows, "pr_bands",
-          "doc_id", None).isEmpty, "byte gate must decline")
-        spark.conf.set("spark.graft.bandPointRead.force", "true")
-        assert(Dedup.pointReadBandCandidates(bandRows, "pr_bands",
-          "doc_id", None).isDefined, "force must bypass the byte gate")
-      } finally {
-        spark.conf.unset("spark.graft.bandPointRead.maxStateBytes")
-        spark.conf.unset("spark.graft.bandPointRead.force")
-      }
+      // point read must decline; an unbounded cap accepts
+      assert(Dedup.pointReadBandCandidates(bandRows, "pr_bands",
+        "doc_id", None, maxStateBytes = 0L).isEmpty, "byte gate must decline")
+      assert(Dedup.pointReadBandCandidates(bandRows, "pr_bands",
+        "doc_id", None, maxStateBytes = Long.MaxValue).isDefined,
+        "an unbounded cap must accept")
       // end-to-end: the full probe through the point-read table equals
       // live banding
       val viaTable = Dedup.nearDupesAgainstTable(batch, corpus, "pr_bands",
@@ -843,7 +834,6 @@ class DedupSpec extends SparkSpec {
       assert(viaTable == live, s"probe diverged: $viaTable vs $live")
     } finally {
       spark.sql("DROP TABLE IF EXISTS pr_bands")
-      spark.sql("DROP TABLE IF EXISTS prj_bands")
     }
   }
 

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.SparkSpec
+import graft.operators.{Encode, Impute, StratifiedFolds}
 import org.apache.spark.sql.functions._
 
 class ExperimentSpec extends SparkSpec {
@@ -26,6 +27,22 @@ class ExperimentSpec extends SparkSpec {
         when(col("label") === 1, lit(0.8) + col("t") * 0.01)
           .otherwise(lit(0.2) - col("t") * 0.01))
       .select("slide_name", "score1")
+
+  /** The unfused reference: mean fill, per-column mode fills, scale01,
+    * bucketize, then folds and sets, each by its own operator.
+    */
+  private def sequential(meta: org.apache.spark.sql.DataFrame,
+                         cfg: Experiment.Config) = {
+    val a = cfg.ageCol
+    val imputed = Impute.modeImpute(Impute.meanImpute(meta, Seq(a)), cfg.catCols)
+    val encoded = Encode.bucketize(Encode.scale01(imputed, a, s"${a}_scaled"),
+      a, Seq(30.0, 60.0), s"${a}_class")
+    StratifiedFolds.assignSets(StratifiedFolds.assignRoundRobin(encoded,
+        Seq(col(cfg.labelCol), col("lab")), cfg.nFolds, col(cfg.slideCol)),
+        cfg.nVal, cfg.nTest)
+      .select((meta.columns ++ Seq("fold", "set", s"${a}_scaled",
+        s"${a}_class")).map(col): _*)
+  }
 
   test("ingest unions cohorts with lab tags (A2/G1)") {
     val m = Experiment.ingest(Seq(cohort(10, 0), cohort(8, 100)))
@@ -83,12 +100,21 @@ class ExperimentSpec extends SparkSpec {
     ).toDF("slide_name", "label", "age", "g", "h")
     assert(Experiment.prepare(Experiment.ingest(Seq(allNull)),
       Experiment.Config(catCols = Seq("g", "h"), nFolds = 2, nVal = 1, nTest = 0)).count() == 0)
-    // degenerate config (repeated catCol) takes the sequential fallback
-    // and must produce exactly the fused single-column result
-    val dupCfg = Experiment.Config(catCols = Seq("g", "g"), nFolds = 2, nVal = 1, nTest = 0)
-    val a = Experiment.prepare(Experiment.ingest(Seq(tie)), tieCfg).orderBy("slide_name").collect().toSeq
-    val b = Experiment.prepare(Experiment.ingest(Seq(tie)), dupCfg).orderBy("slide_name").collect().toSeq
-    assert(a == b, "sequential fallback and fused path must agree")
+    // the fused fill must equal the sequential impute→encode→folds
+    // composition, including the degenerate configs: a repeated catCol,
+    // and a catCol equal to the age column (with and without an all-null
+    // age, which empties the frame on both paths)
+    val noAge = tie.withColumn("age", lit(null).cast("double"))
+    val inputs = Seq(meta -> Seq("g", "h"), tie -> Seq("g"),
+      tie -> Seq("g", "g"), meta -> Seq("g", "age", "h"), noAge -> Seq("g", "age"))
+    inputs.foreach { case (df, cats) =>
+      val c = Experiment.Config(catCols = cats, nFolds = 2, nVal = 1, nTest = 0)
+      val m = Experiment.ingest(Seq(df))
+      val fused = Experiment.prepare(m, c).orderBy("slide_name").collect().toSeq
+      val seq = sequential(m, c).orderBy("slide_name").collect().toSeq
+      assert(fused == seq, s"catCols=$cats: fused $fused vs sequential $seq")
+      assert(fused.isEmpty == (df eq noAge), s"catCols=$cats")
+    }
   }
 
   test("evaluate: separable injected scores give BA and AUROC ~ 1 per (fold,set)") {

@@ -2,8 +2,14 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
 import graft.operators.Dedup
+import org.apache.spark.graft.ListenerBusAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.sql.execution.SparkPlanInfo
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -50,6 +56,66 @@ class DocStreamSpec extends SparkSpec {
     assert(cloneSees == "false", "the clone must see its own conf change")
     assert(spark.conf.get("spark.sql.adaptive.enabled") == before,
       "a trigger-session conf change leaked to the parent session")
+  }
+
+  test("self-maintaining near-dup gate: triggers run with AQE off, parent session keeps AQE") {
+    // the tuning above, checked through a real gate: the trigger's batch
+    // plans must be planned without AQE while the parent session, which
+    // has AQE on, is left as it was
+    implicit val sqlCtx = spark.sqlContext
+    val corpus = Seq(
+      (10L, "the quick brown fox jumps over the lazy dog near the river bank today"))
+      .toDF("doc_id", "text")
+    spark.sql("DROP TABLE IF EXISTS aqe_gate_bands")
+    Dedup.writeBandTable(corpus, "doc_id", "text", "aqe_gate_bands",
+      buckets = 4, bands = 16, rowsPerBand = 2)
+    val work = java.nio.file.Files.createTempDirectory("graft-aqe-gate").toString
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlanInfo]()
+    val adaptiveUpdates = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case st: SparkListenerSQLExecutionStart => plans.add(st.sparkPlanInfo)
+        case _: SparkListenerSQLAdaptiveExecutionUpdate =>
+          adaptiveUpdates.incrementAndGet(); ()
+        case _ =>
+      }
+    }
+    val before = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    val in = MemoryStream[(Long, String)]
+    var parentAfter: String = null
+    try {
+      val q = DocStream.selfMaintainingNearDedupedIngest(
+        in.toDF().toDF("doc_id", "text"), corpus, "aqe_gate_bands",
+        "doc_id", "text", s"$work/out", s"$work/ckpt",
+        threshold = 0.5, bands = 16, rowsPerBand = 2)
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        in.addData(
+          (100L, "the quick brown fox jumps over the lazy dog near the river bank today extra"),
+          (200L, "a planted novel document describing underwater cave systems"))
+        q.processAllAvailable()
+        parentAfter = spark.conf.get("spark.sql.adaptive.enabled")
+      } finally {
+        q.stop()
+        ListenerBusAccess.drain(spark.sparkContext)
+        spark.sparkContext.removeSparkListener(listener)
+      }
+      val kept = spark.read.parquet(s"$work/out").select("doc_id")
+        .as[Long].collect().toSeq
+      assert(kept == Seq(200L), s"gate output: $kept")
+    } finally {
+      spark.conf.set("spark.sql.adaptive.enabled", before)
+      spark.sql("DROP TABLE IF EXISTS aqe_gate_bands")
+    }
+    def nodes(p: SparkPlanInfo): Seq[String] =
+      p.nodeName +: p.children.flatMap(nodes)
+    val names = plans.asScala.toSeq.flatMap(nodes)
+    // the trigger did shuffle, so AQE would have wrapped its plans
+    assert(names.exists(_.contains("Exchange")), names.distinct.mkString(", "))
+    assert(!names.contains("AdaptiveSparkPlan") && adaptiveUpdates.get == 0,
+      s"a trigger ran with AQE: ${names.distinct.mkString(", ")}")
+    assert(parentAfter == "true", "the gate changed the parent session's AQE")
   }
 
   test("streaming ingest gate: corpus dups and stream re-sends drop, fresh docs pass") {
