@@ -813,9 +813,10 @@ object Dedup {
       def planSmall(df: DataFrame): Boolean = scala.util.Try(
         df.queryExecution.optimizedPlan.stats.sizeInBytes <=
           PointReadMaxPlanBytes).getOrElse(false)
-      val exOk = excludeCorpusDocs.forall(ex =>
-        ex.schema(id).dataType == LongType && planSmall(ex))
-      if (layoutOk && buckets >= PointReadMinBuckets && exOk &&
+      // the catalog tests first: each plan-size test is an optimizer pass
+      if (layoutOk && buckets >= PointReadMinBuckets &&
+          excludeCorpusDocs.forall(ex =>
+            ex.schema(id).dataType == LongType && planSmall(ex)) &&
           planSmall(batchBands))
         Some((cat, buckets))
       else None

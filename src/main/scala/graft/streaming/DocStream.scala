@@ -5,6 +5,7 @@ import graft.operators.Dedup
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 /** Streaming document ingest — the streaming face of the batch ingest gate
   * (`Dedup.dropDupesAgainst`): documents arrive continuously, exact
@@ -141,9 +142,15 @@ object DocStream {
     *      CURRENT micro-batch — a batch compares against strictly PRIOR
     *      state, which also makes crash-replay exact: a replayed batch
     *      whose bands were already appended would otherwise match itself.
-    *   3. survivors overwrite their own `batch=<id>` partition (idempotent
-    *      sink) and append their band rows ([[graft.operators.Dedup.appendBandTable]]
-    *      is doc-level idempotent, so a replayed append is a no-op).
+    *   3. the probe runs once per batch, collected to the driver as its
+    *      distinct non-null dupe ids — at most one per micro-batch row.
+    *      Survivors (the batch anti-joined with those ids) overwrite their
+    *      own `batch=<id>` partition (idempotent sink) and, concurrently,
+    *      append their band rows ([[graft.operators.Dedup.appendBandTable]]
+    *      is doc-level idempotent, so a replayed append is a no-op). No
+    *      frame is persisted: a cached survivors relation would make the
+    *      append wait on its builder's monitor while the sink write fills
+    *      it, so the two writes would not overlap.
     *
     * Within-batch near-dups still pass (same contract as the static gate);
     * split batches at the granularity you want deduped. NOTE: the band
@@ -193,64 +200,67 @@ object DocStream {
         // catalog geometry read and no sink parquet round-trip per trigger
         val bBands = Dedup.bandedBatchKeys(b, id, textCol,
           bands, rowsPerBand, shingleN)
-        val dupes = Dedup.probeBandTable(bBands, b, corpusNow, bandTable,
+        val gateSchema = b.select(col(id), col(textCol)).schema
+        // the probe runs ONCE, as a collect of its distinct non-null dupe
+        // ids: at most one id per micro-batch row, so the driver holds a
+        // batch-bounded set, never corpus- or pair-sized
+        val dupeRows = Dedup.probeBandTable(bBands, b, corpusNow, bandTable,
             id, textCol, threshold, shingleN,
             // strictly-prior comparison: candidate pairs whose corpus-side
             // doc is in THIS batch never reach the verify kernel (see
             // scaladoc point 2)
             excludeCorpusDocs = Some(b.select(col(id))))
-          // no distinct: the anti-join below ignores duplicate matches, so
-          // deduping the dupe-id list would be a pure extra exchange
-          .select(col("doc_a").as(id))
-        // persist so the sink write and the band append share ONE probe
-        // execution (unpersisted before the trigger returns; the frame
-        // never outlives its micro-batch)
-        val surv = b.join(dupes, Seq(id), "left_anti")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          // sink write ∥ band append as CONCURRENT driver actions (guide
-          // §2.6, r19): given `surv`, the two are independent, and their
-          // ORDER is not load-bearing for crash replay — the strictly-
-          // prior exclusion (scaladoc point 2) makes a replayed batch
-          // exact whichever side committed first (its own already-
-          // appended bands are excluded before the verify stage, and the
-          // sink partition overwrite is idempotent). Running them
-          // serially left one action's stages idle during the other's
-          // tail every trigger. Both consume the persisted `surv`, so
-          // the probe still executes once (the block manager serializes
-          // first materialization per partition). The spawned thread
-          // inherits this trigger's job group/pool (Spark local
-          // properties are InheritableThreadLocal).
-          @volatile var sinkErr: Throwable = null
-          val sinkT = new Thread(() => {
-            try surv.write.mode("overwrite").parquet(s"$sinkPath/batch=$batchId")
-            catch { case e: Throwable => sinkErr = e }
-          }, s"graft-selfm-sink-b$batchId")
-          sinkT.start()
-          try Dedup.appendBandRows(
-            bBands.join(surv.select(col(id).as("doc")), Seq("doc"), "left_semi"),
-            bandTable)
-          finally sinkT.join()
-          if (sinkErr != null) throw sinkErr
-        } finally { surv.unpersist(); () }
+          .select(col("doc_a").as(id)).where(col(id).isNotNull)
+          .distinct().collect()
+        val dupeIds = broadcast(spark.createDataFrame(
+          java.util.Arrays.asList(dupeRows: _*),
+          StructType(Seq(gateSchema.head.copy(nullable = false)))))
+        // sink write ∥ band append as CONCURRENT driver actions (guide
+        // §2.6, r19): given `dupeIds`, the two are independent, and their
+        // ORDER is not load-bearing for crash replay — the strictly-prior
+        // exclusion (scaladoc point 2) makes a replayed batch exact
+        // whichever side committed first (its own already-appended bands
+        // are excluded before the verify stage, and the sink partition
+        // overwrite is idempotent). Neither reads a persisted frame: a
+        // cached survivors relation would serialize them, since the
+        // append's optimizer asks it for stats under the cache builder's
+        // monitor, which the sink action holds while it runs the probe.
+        // The anti-joins keep a null-id row as a survivor; its band rows
+        // are filtered out (no probe can ever match a null doc). The
+        // spawned thread inherits this trigger's job group/pool (Spark
+        // local properties are InheritableThreadLocal).
+        @volatile var sinkErr: Throwable = null
+        val sinkT = new Thread(() => {
+          try b.join(dupeIds, Seq(id), "left_anti")
+            .write.mode("overwrite").parquet(s"$sinkPath/batch=$batchId")
+          catch { case e: Throwable => sinkErr = e }
+        }, s"graft-selfm-sink-b$batchId")
+        sinkT.start()
+        try Dedup.appendBandRows(
+          bBands.where(col("doc").isNotNull)
+            .join(dupeIds.select(col(id).as("doc")), Seq("doc"), "left_anti"),
+          bandTable)
+        finally sinkT.join()
+        if (sinkErr != null) throw sinkErr
         // carry forward THIS batch's survivors as the one new partition
-        // just written — a lazy single-directory read, evaluated (if at
-        // all) by the next trigger's verify stage. Two growth/robustness
-        // guards (ADVICE r8): a zero-survivor batch may emit NO
-        // schema-bearing parquet file (overwrite of an all-empty frame),
-        // so a failed read falls back to the previous prior — exactly
-        // correct, since a read with nothing to read means nothing
-        // survived; and every PriorRelistEvery triggers the accumulated
-        // per-partition union collapses into ONE whole-sink scan, so the
-        // analysis plan stays O(K) scans instead of O(N-batches) (the
-        // sink re-list cost is paid once per K triggers, not per trigger).
+        // just written — a lazy single-directory read with the gate's
+        // known (id, text) schema, so no schema-inference job runs per
+        // trigger; evaluated (if at all) by the next trigger's verify
+        // stage. Two growth/robustness guards (ADVICE r8): a zero-survivor
+        // batch may emit NO parquet file (overwrite of an all-empty
+        // frame), which reads empty, and a missing directory fails the
+        // read and falls back to the previous prior — both exactly
+        // correct, since nothing survived; and every PriorRelistEvery
+        // triggers the accumulated per-partition union collapses into ONE
+        // whole-sink scan, so the analysis plan stays O(K) scans instead
+        // of O(N-batches) (the sink re-list cost is paid once per K
+        // triggers, not per trigger).
         priorCache = Some(
           if ((batchId + 1) % PriorRelistEvery == 0)
             spark.read.parquet(sinkPath).select(col(id), col(textCol))
           else
             try prior.unionByName(
-              spark.read.parquet(s"$sinkPath/batch=$batchId")
-                .select(col(id), col(textCol)))
+              spark.read.schema(gateSchema).parquet(s"$sinkPath/batch=$batchId"))
             catch { case _: Exception => prior })
         ()
       }

@@ -61,7 +61,10 @@ class DocStreamSpec extends SparkSpec {
   test("self-maintaining near-dup gate: triggers run with AQE off, parent session keeps AQE") {
     // the tuning above, checked through a real gate: the trigger's batch
     // plans must be planned without AQE while the parent session, which
-    // has AQE on, is left as it was
+    // has AQE on, is left as it was. The same trigger also pins the
+    // gate's shape: the probe's verify runs in exactly one execution, no
+    // execution reads a cached relation, and a null-id row survives to
+    // the sink without appending band rows.
     implicit val sqlCtx = spark.sqlContext
     val corpus = Seq(
       (10L, "the quick brown fox jumps over the lazy dog near the river bank today"))
@@ -82,7 +85,7 @@ class DocStreamSpec extends SparkSpec {
     }
     val before = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
-    val in = MemoryStream[(Long, String)]
+    val in = MemoryStream[(Option[Long], String)]
     var parentAfter: String = null
     try {
       val q = DocStream.selfMaintainingNearDedupedIngest(
@@ -92,8 +95,9 @@ class DocStreamSpec extends SparkSpec {
       spark.sparkContext.addSparkListener(listener)
       try {
         in.addData(
-          (100L, "the quick brown fox jumps over the lazy dog near the river bank today extra"),
-          (200L, "a planted novel document describing underwater cave systems"))
+          (Some(100L), "the quick brown fox jumps over the lazy dog near the river bank today extra"),
+          (Some(200L), "a planted novel document describing underwater cave systems"),
+          (None, "an id-less document about alpine glaciers and their retreat"))
         q.processAllAvailable()
         parentAfter = spark.conf.get("spark.sql.adaptive.enabled")
       } finally {
@@ -102,20 +106,31 @@ class DocStreamSpec extends SparkSpec {
         spark.sparkContext.removeSparkListener(listener)
       }
       val kept = spark.read.parquet(s"$work/out").select("doc_id")
-        .as[Long].collect().toSeq
-      assert(kept == Seq(200L), s"gate output: $kept")
+        .as[Option[Long]].collect().toSet
+      assert(kept == Set(Some(200L), None), s"gate output: $kept")
+      // the corpus doc plus the one non-null survivor; the null-id
+      // survivor appends nothing, the near-dup 100 is not appended
+      val banded = spark.table("aqe_gate_bands").select("doc")
+        .as[Option[Long]].collect().toSet
+      assert(banded == Set(Some(10L), Some(200L)), s"band table docs: $banded")
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", before)
       spark.sql("DROP TABLE IF EXISTS aqe_gate_bands")
     }
-    def nodes(p: SparkPlanInfo): Seq[String] =
-      p.nodeName +: p.children.flatMap(nodes)
-    val names = plans.asScala.toSeq.flatMap(nodes)
+    def nodes(p: SparkPlanInfo): Seq[SparkPlanInfo] = p +: p.children.flatMap(nodes)
+    val perExec = plans.asScala.toSeq.map(nodes)
+    val names = perExec.flatten.map(_.nodeName)
     // the trigger did shuffle, so AQE would have wrapped its plans
     assert(names.exists(_.contains("Exchange")), names.distinct.mkString(", "))
     assert(!names.contains("AdaptiveSparkPlan") && adaptiveUpdates.get == 0,
       s"a trigger ran with AQE: ${names.distinct.mkString(", ")}")
     assert(parentAfter == "true", "the gate changed the parent session's AQE")
+    // one probe per trigger: a persisted survivors frame would put an
+    // InMemoryTableScan (and the verify below it) into both writes
+    assert(!names.contains("InMemoryTableScan"),
+      "a trigger execution reads a cached relation")
+    val verifying = perExec.count(_.exists(_.simpleString.contains("shinglejaccard")))
+    assert(verifying == 1, s"$verifying executions evaluate the jaccard verify")
   }
 
   test("streaming ingest gate: corpus dups and stream re-sends drop, fresh docs pass") {
