@@ -5,7 +5,6 @@ import graft.operators.Dedup
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.StructType
 
 /** Streaming document ingest — the streaming face of the batch ingest gate
   * (`Dedup.dropDupesAgainst`): documents arrive continuously, exact
@@ -27,6 +26,17 @@ object DocStream {
     * whole-sink scan, bounding plan growth on long streams.
     */
   private val PriorRelistEvery = 16
+
+  /** `df` computed once, its rows held on the driver as a local relation:
+    * later plans reuse the rows instead of recomputing them, and the
+    * planner sizes them exactly (a foreachBatch micro-batch otherwise
+    * plans at `spark.sql.defaultSizeInBytes`). For batch-bounded frames
+    * only.
+    */
+  private def localized(df: DataFrame): DataFrame = {
+    val rows = df.collect()
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
+  }
 
   /** Per-stream trigger tuning for the foreachBatch gates (r19): a gate
     * trigger's plan is BATCH-BOUNDED — the corpus side is a bucket-local
@@ -142,10 +152,13 @@ object DocStream {
     *      CURRENT micro-batch — a batch compares against strictly PRIOR
     *      state, which also makes crash-replay exact: a replayed batch
     *      whose bands were already appended would otherwise match itself.
-    *   3. the probe runs once per batch, collected to the driver as its
-    *      distinct non-null dupe ids — at most one per micro-batch row.
-    *      Survivors (the batch anti-joined with those ids) overwrite their
-    *      own `batch=<id>` partition (idempotent sink) and, concurrently,
+    *   3. the batch's band rows are computed once and the probe runs
+    *      once, each collected to the driver: `bands` rows per
+    *      micro-batch row, and the distinct non-null dupe ids, at most
+    *      one per row — batch-bounded, never corpus- or pair-sized (size
+    *      micro-batches with the source's per-trigger limit). Survivors
+    *      (the batch anti-joined with those ids) overwrite their own
+    *      `batch=<id>` partition (idempotent sink) and, concurrently,
     *      append their band rows ([[graft.operators.Dedup.appendBandTable]]
     *      is doc-level idempotent, so a replayed append is a no-op). No
     *      frame is persisted: a cached survivors relation would make the
@@ -196,25 +209,22 @@ object DocStream {
             corpus.select(col(id), col(textCol)).limit(0) }
         }
         val corpusNow = corpus.select(col(id), col(textCol)).unionByName(prior)
-        // one band-key frame serves both the probe and the append — no
-        // catalog geometry read and no sink parquet round-trip per trigger
-        val bBands = Dedup.bandedBatchKeys(b, id, textCol,
-          bands, rowsPerBand, shingleN)
-        val gateSchema = b.select(col(id), col(textCol)).schema
-        // the probe runs ONCE, as a collect of its distinct non-null dupe
-        // ids: at most one id per micro-batch row, so the driver holds a
-        // batch-bounded set, never corpus- or pair-sized
-        val dupeRows = Dedup.probeBandTable(bBands, b, corpusNow, bandTable,
-            id, textCol, threshold, shingleN,
+        // the batch's band rows, computed once for both the probe and
+        // the append and held as a local relation: sized exactly, the
+        // probe takes its micro-batch branch (broadcast these bands,
+        // stream the state table) and the strictly-prior exclusion
+        // broadcasts too; the bands carry every batch id (`bands` rows
+        // each, nulls included), so their docs ARE the batch's ids
+        val bBands = localized(Dedup.bandedBatchKeys(b, id, textCol,
+          bands, rowsPerBand, shingleN))
+        // the probe runs ONCE: its distinct non-null dupe ids, collected
+        val dupeIds = localized(Dedup.probeBandTable(bBands, b, corpusNow,
+            bandTable, id, textCol, threshold, shingleN,
             // strictly-prior comparison: candidate pairs whose corpus-side
             // doc is in THIS batch never reach the verify kernel (see
             // scaladoc point 2)
-            excludeCorpusDocs = Some(b.select(col(id))))
-          .select(col("doc_a").as(id)).where(col(id).isNotNull)
-          .distinct().collect()
-        val dupeIds = broadcast(spark.createDataFrame(
-          java.util.Arrays.asList(dupeRows: _*),
-          StructType(Seq(gateSchema.head.copy(nullable = false)))))
+            excludeCorpusDocs = Some(bBands.select(col("doc").as(id))))
+          .select(col("doc_a").as(id)).where(col(id).isNotNull).distinct())
         // sink write ∥ band append as CONCURRENT driver actions (guide
         // §2.6, r19): given `dupeIds`, the two are independent, and their
         // ORDER is not load-bearing for crash replay — the strictly-prior
@@ -236,8 +246,11 @@ object DocStream {
           catch { case e: Throwable => sinkErr = e }
         }, s"graft-selfm-sink-b$batchId")
         sinkT.start()
+        // one write task, so each trigger adds one file per bucket (not
+        // tasks × buckets) to the state that every later probe and
+        // idempotency anti-join lists and opens
         try Dedup.appendBandRows(
-          bBands.where(col("doc").isNotNull)
+          bBands.coalesce(1).where(col("doc").isNotNull)
             .join(dupeIds.select(col(id).as("doc")), Seq("doc"), "left_anti"),
           bandTable)
         finally sinkT.join()
@@ -260,7 +273,8 @@ object DocStream {
             spark.read.parquet(sinkPath).select(col(id), col(textCol))
           else
             try prior.unionByName(
-              spark.read.schema(gateSchema).parquet(s"$sinkPath/batch=$batchId"))
+              spark.read.schema(b.select(col(id), col(textCol)).schema)
+                .parquet(s"$sinkPath/batch=$batchId"))
             catch { case _: Exception => prior })
         ()
       }

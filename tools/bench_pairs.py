@@ -15,14 +15,16 @@ side's median and quartiles and the pairs the change won (ties count for
 neither side), then a verdict:
 
 * the claimed metric (``--claim``) is a gain when the change wins at least
-  nine tenths of the pairs and the medians differ, in the better
-  direction, by more than the parent's interquartile range;
+  nine tenths of the pairs run (a pair with a failed run counts as not
+  won) and the medians differ, in the better direction, by more than the
+  parent's interquartile range;
 * every other metric is ``ok`` when the change's median is worse than the
   parent's by no more than the metric's bound, ``REGRESSED`` when it is
   worse by more, and ``unresolved`` when either side's IQR, relative to
   its median, exceeds the bound (unless every change run beats every
   parent run);
-* the failed/attempted share of the change must not exceed the parent's.
+* the change's failed/attempted op share must not exceed the parent's;
+  failed runs are reported on their own.
 
 With ``--trace 1`` it prints each side's per-layer medians instead (no
 verdict: the trace numbers explain a saving, they do not claim one).
@@ -65,8 +67,9 @@ def better(metric, a, b):
     return 1 if (a < b) == lower else -1
 
 
-def verdict(metric, parent, change, claimed):
-    """Status of one end-to-end metric from its per-pair values."""
+def verdict(metric, parent, change, claimed, attempted):
+    """Status of one end-to-end metric from the values of its complete
+    pairs; ``attempted`` counts every pair run, complete or not."""
     pairs = list(zip(parent, change))
     pq1, pmed, pq3 = quartiles(parent)
     cq1, cmed, cq3 = quartiles(change)
@@ -74,7 +77,7 @@ def verdict(metric, parent, change, claimed):
     lost = sum(1 for p, c in pairs if better(metric, c, p) < 0)
     gain = better(metric, cmed, pmed) > 0 and abs(cmed - pmed) > pq3 - pq1
     if claimed:
-        ok = won >= 0.9 * len(pairs) and gain
+        ok = won >= 0.9 * attempted and gain
         return won, lost, "GAIN" if ok else "claim not met"
     bound = metric["bound"]
     worse = -better(metric, cmed, pmed) * abs(cmed - pmed) / abs(pmed) if pmed else 0.0
@@ -137,7 +140,7 @@ def main():
             rs = [r["result"] for r in runs[w][side] if r["result"] is not None]
             att = sum(r["attempted"] for r in rs)
             bad = sum(r["failed"] for r in rs)
-            share[side] = (args.pairs - len(rs), bad / att if att else 0.0)
+            share[side] = bad / att if att else 0.0
             print(f"   {side}: {bad} failed of {att} attempted ops, "
                   f"{args.pairs - len(rs)} failed runs")
         if share["change"] > share["parent"]:
@@ -153,7 +156,7 @@ def main():
             line = f"   {name:32s} {fmt(quartiles(parent)):>28s} {fmt(quartiles(change)):>28s}"
             if not args.trace:
                 won, lost, status = verdict(by_name[name], parent, change,
-                                            (w, name) in claims)
+                                            (w, name) in claims, args.pairs)
                 line += f"  {won:>3d}/{lost:<3d}  {status}"
             print(line)
 
