@@ -732,8 +732,11 @@ object Dedup {
       batch, corpus, id, text, shingleN, threshold)
 
   /** Trickle-batch crossover knobs for [[pointReadBandCandidates]] —
-    * set from MEASUREMENT (Scale10x gate_pointread_* A/B rows), and the
-    * measurement refutes the obvious intuition, so it is recorded here:
+    * set from MEASUREMENT: a forced point read vs the streaming candidate
+    * stage on the same 50-doc batch, at the 1× and 1000× gate fixtures.
+    * This scaladoc is that A/B's only record (BENCH_1000x.json keeps the
+    * gate's probe, append and compaction rows at 1000×, not this A/B),
+    * and it refutes the obvious intuition, so it is recorded here:
     *
     * Saturation math (PERF.md gate_probe contract): a batch carrying K
     * uniformly-hashed band keys touches an expected B·(1−(1−1/B)^K) of a

@@ -47,10 +47,7 @@ object LmQueries {
   private val BoAp = graft.expressions.BackoffLmScore.alphaPowers(BoAlpha, 3)
     .map(java.lang.Double.toString)
 
-  /** The q5k oracle as a function of the documents table/view name — shared
-    * with the Scale10x `lm_score` twin so the probe and the correctness
-    * oracle can never drift apart.
-    */
+  /** The q5k oracle as a function of the documents table/view name. */
   def lmScoreOracleSql(table: String): String =
     lmScoreOracleSqlOn(table, table)
 
@@ -222,63 +219,6 @@ object LmQueries {
       path
     }
 
-  /** The q5k Spark side against any documents frame (Scale10x reuses it). */
-  def lmScore(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    NgramLm.selfScore(docs, col("doc_id"), col("text"), UniCap, BiCap)
-
-  /** The q5s trigram FIT as a Scale10x probe body: run the single-scan
-    * multi-order fit at the q5s caps, return the materialized model row
-    * count (fit is eager, so the timing covers the whole fit job). Shares
-    * [[TriCtxCap]]/[[TriGramCap]] with the q5s oracle, so the probe and
-    * the correctness fit can never drift.
-    */
-  def trigramFit(docs: org.apache.spark.sql.DataFrame): Long = {
-    val m = NgramLm.fitOrder(docs, col("text"), order = 3,
-        ctxCap = TriCtxCap, gramCap = TriGramCap)
-      .asInstanceOf[NgramLm.BigramLm]
-    m.uniArr.length.toLong + m.biArr.length.toLong
-  }
-
-  /** The trigram fit's DuckDB twin: both capped tables materialized and
-    * counted — the same two aggregations + deterministic top-V the Spark
-    * fit runs, at the same caps.
-    */
-  def trigramFitTwinSql(table: String): String =
-    s"""WITH t AS (SELECT string_split(text, ' ') AS t FROM $table),
-       |fb AS (SELECT unnest([t[i+1] || ' ' || t[i+2]
-       |                      for i in range(len(t) - 1)]) AS g FROM t),
-       |ctx AS (SELECT g, count(*) AS c FROM fb GROUP BY g
-       |        ORDER BY c DESC, g LIMIT $TriCtxCap),
-       |ft AS (SELECT unnest([t[i+1] || ' ' || t[i+2] || ' ' || t[i+3]
-       |                      for i in range(len(t) - 2)]) AS g FROM t),
-       |tg AS (SELECT g, count(*) AS c FROM ft GROUP BY g
-       |       ORDER BY c DESC, g LIMIT $TriGramCap)
-       |SELECT count(*) AS n
-       |FROM (SELECT g FROM ctx UNION ALL SELECT g FROM tg)""".stripMargin
-
-  /** The q5v Spark side against any documents frame (Scale10x twin):
-    * self-fit at the q5k caps, scored with the KN smoother.
-    */
-  def knScore(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    NgramLm.scoreDocsKn(docs, col("doc_id"), col("text"),
-      NgramLm.KnLm(NgramLm.fit(docs, col("text"), UniCap, BiCap)
-        .asInstanceOf[NgramLm.BigramLm], KnD))
-
-  /** The q5w Spark side against any documents frame (Scale10x twin):
-    * one multi-order backoff fit at the q5t caps, scored with the order-3
-    * interpolated-KN recursion.
-    */
-  def kn3Score(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    NgramLm.scoreDocsKn3(docs, col("doc_id"), col("text"),
-      NgramLm.Kn3Lm(NgramLm.fitBackoff(docs, col("text"), order = 3,
-        caps = Seq(BoUniCap, BoBiCap, BoTriCap), alpha = BoAlpha), KnD))
-
-  /** The q5t Spark side against any documents frame (Scale10x twin). */
-  def backoffScore(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    NgramLm.scoreDocsBackoff(docs, col("doc_id"), col("text"),
-      NgramLm.fitBackoff(docs, col("text"), order = 3,
-        caps = Seq(BoUniCap, BoBiCap, BoTriCap), alpha = BoAlpha))
-
   /** The corpus self-fit at the fixture caps, memoized per sf dir —
     * q5k/q5o/q5q all fit the IDENTICAL model (same corpus, same caps,
     * deterministic truncation), so within a session one fit job serves
@@ -336,9 +276,8 @@ object LmQueries {
     ensureBpeModel(s, d).merges
 
   /** The q5z BPE-segmentation replay as ONE SQL text parameterized on the
-    * learned merges and the documents table — shared with the Scale10x
-    * `bpe_tokens` twin so the probe and the correctness oracle can never
-    * drift. See the q5z comment for the bracketed-replace equivalence.
+    * learned merges and the documents table. See the q5z comment for the
+    * bracketed-replace equivalence.
     */
   def bpeOracleSql(merges: Seq[(String, String)], table: String): String = {
     val base = """regexp_replace(word, '(.)', '[\1]', 'g')"""
@@ -356,22 +295,14 @@ object LmQueries {
        |FROM cnt GROUP BY doc_id ORDER BY doc_id""".stripMargin
   }
 
-  /** The q5z Spark side against any documents frame with a prefit merge
-    * list (Scale10x twin).
-    */
-  def bpeTokens(docs: org.apache.spark.sql.DataFrame,
-                merges: Seq[(String, String)]): org.apache.spark.sql.DataFrame =
-    graft.ml.BpeTokenizer.tokenStats(docs, col("doc_id"), col("text"), merges)
-
-  /** The q6e BPE-ids + sequence-packing replay as ONE SQL text
-    * parameterized on the fitted model and table — shared with the
-    * Scale10x `bpe_pack` twin. Extends the q5z bracketed-replace
+  /** The q6e BPE-ids + sequence-packing replay as ONE SQL text parameterized
+    * on the fitted model and table. Extends the q5z bracketed-replace
     * segmentation replay three steps: (1) split each word's replayed
-    * bracketed form back into symbols, (2) map each symbol to its token
-    * id through the model's BOUNDED vocab embedded as a literal VALUES
-    * table (alphabet then merge products — BpeModel.vocabIds verbatim;
-    * unseen symbols → −1), (3) re-run the q4q pack replay over the
-    * resulting per-doc id sequences. Exact integers end to end.
+    * bracketed form back into symbols, (2) map each symbol to its token id
+    * through the model's BOUNDED vocab embedded as a literal VALUES table
+    * (alphabet then merge products — BpeModel.vocabIds verbatim; unseen
+    * symbols → −1), (3) re-run the q4q pack replay over the resulting per-doc
+    * id sequences. Exact integers end to end.
     */
   def bpePackOracleSql(model: graft.ml.BpeTokenizer.BpeModel,
                        table: String, budget: Long): String = {
@@ -407,23 +338,6 @@ object LmQueries {
        |  count(*) AS n_docs, CAST(sum(n) AS BIGINT) AS n_tokens,
        |  string_agg(ids_text, '<|eos|>' ORDER BY doc_id) AS text
        |FROM c GROUP BY 1 ORDER BY pack_id""".stripMargin
-  }
-
-  /** The q6e Spark side against any documents frame with a prefit model
-    * (Scale10x twin): segment to token ids, pack on the REAL subword
-    * token counts, materialize the id-sequence packs.
-    */
-  def bpePack(docs: org.apache.spark.sql.DataFrame,
-              model: graft.ml.BpeTokenizer.BpeModel,
-              budget: Long): org.apache.spark.sql.DataFrame = {
-    val seg = graft.ml.BpeTokenizer
-      .segmentIds(docs, col("doc_id"), col("text"), model)
-      .select(col("doc_id"),
-        size(col("token_ids")).cast("long").as("n_tokens"),
-        concat_ws(" ", col("token_ids").cast("array<string>")).as("ids_text"))
-    graft.operators.Curate.materializePacks(seg, "n_tokens", "doc_id",
-        "ids_text", budget)
-      .select(col("pack_id"), col("n_docs"), col("n_tokens"), col("text"))
   }
 
   /** One session-scoped tmp root per Spark application, deleted
@@ -640,10 +554,7 @@ object LmQueries {
        |tri AS (${boFitTriSql(table)}),
        |${kn3ScoreBodySql("uni", "bi", "tri", table)}""".stripMargin
 
-  /** The q5t oracle as a function of the documents table name — shared
-    * with the Scale10x `lm_backoff` twin so the probe and the correctness
-    * oracle can never drift apart.
-    */
+  /** The q5t oracle as a function of the documents table name. */
   def backoffOracleSql(table: String): String =
     s"""WITH uni AS (${boFitUniSql(table)}),
        |bi AS (${boFitBiSql(table)}),
@@ -946,8 +857,15 @@ object LmQueries {
     QueryDef.dynamicSql("q6e_bpe_pack") { (s, d) =>
       bpePackOracleSql(ensureBpeModel(s, d), "documents", BpePackBudget)
     } { (s, d) =>
-      bpePack(Tables.documents(s, d).select(col("doc_id"), col("text")),
-          ensureBpeModel(s, d), BpePackBudget)
+      val seg = graft.ml.BpeTokenizer.segmentIds(
+          Tables.documents(s, d).select(col("doc_id"), col("text")),
+          col("doc_id"), col("text"), ensureBpeModel(s, d))
+        .select(col("doc_id"),
+          size(col("token_ids")).cast("long").as("n_tokens"),
+          concat_ws(" ", col("token_ids").cast("array<string>")).as("ids_text"))
+      graft.operators.Curate.materializePacks(seg, "n_tokens", "doc_id",
+          "ids_text", BpePackBudget)
+        .select(col("pack_id"), col("n_docs"), col("n_tokens"), col("text"))
         .orderBy(col("pack_id"))
     },
 

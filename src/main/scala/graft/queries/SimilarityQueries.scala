@@ -34,6 +34,10 @@ object SimilarityQueries {
     },
 
     // ---- brute-force near-dup pairs on a deterministic sample --------------
+    // Ranked on the cosine rounded to 6 places, then ids: pairs of
+    // identical vectors (every copy pair of an N× scaled dir) all score
+    // 1.0 up to a few ulps, and ulps depend on each engine's summation
+    // order, so only the rounded score makes the id tie-break decide.
     QueryDef.sql("q49_embedding_pairs",
       """WITH e AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 5 = 0),
         |p AS (
@@ -44,7 +48,7 @@ object SimilarityQueries {
         |  WHERE a.vec_id < b.vec_id)
         |SELECT id_a, id_b, round(c, 4) AS cos
         |FROM p
-        |ORDER BY c DESC, id_a, id_b
+        |ORDER BY round(c, 6) DESC, id_a, id_b
         |LIMIT 20""".stripMargin) { (s, d) =>
       // Norms computed once per vector pre-join; per-pair work is one
       // codegen'd VecDot.
@@ -57,7 +61,7 @@ object SimilarityQueries {
         .withColumn("cos_raw",
           Similarity.dot(col("ea"), col("eb")) / (col("na") * col("nb")))
         .select(col("id_a"), col("id_b"), col("cos_raw"))
-        .orderBy(col("cos_raw").desc, col("id_a"), col("id_b"))
+        .orderBy(round(col("cos_raw"), 6).desc, col("id_a"), col("id_b"))
         .limit(20)
         .select(col("id_a"), col("id_b"), round(col("cos_raw"), 4).as("cos"))
     },
@@ -830,8 +834,7 @@ object SimilarityQueries {
 
   /** The PQ/ADC replay as ONE SQL text parameterized on the fitted
     * codebooks and the corpus/query FROM clauses (table + predicate) —
-    * shared by the q5y oracle and the Scale10x ann_pq twin so the probe
-    * and the correctness oracle can never drift. Every per-dimension term
+    * the q5y oracle. Every per-dimension term
     * replays the kernel's exact chain (cast-to-double, subtract, square,
     * ×1e9, half-up round to BIGINT); code argmin ties break on cid, ADC
     * totals are integer sums, top-k ties on vec_id.
@@ -890,18 +893,17 @@ object SimilarityQueries {
     c.map(x => s"CAST(${java.lang.Double.toString(x)} AS DOUBLE)")
       .mkString("[", ", ", "]")
 
-  /** The IVF-PQ/ADC replay as ONE SQL text parameterized on the fitted
-    * coarse cells + residual codebooks and the corpus/query FROM clauses —
-    * shared by the q6h oracle and the Scale10x ann_ivfpq twin. Replays
-    * the kernel's exact chains on the nano-unit grid: coarse cell =
-    * full-dim fixed-point argmin (ties to the low cell), residual code =
-    * per-subspace argmin of ((e − cc) − c)² terms (ties to the low cid),
-    * probe set = each query's nProbe lowest coarse distances (ties to
-    * the low cell), ADC = integer residual sums, top-k ties on vec_id.
+  /** The IVF-PQ/ADC replay as ONE SQL text parameterized on the fitted coarse
+    * cells + residual codebooks and the corpus/query FROM clauses — the
+    * oracle of q6h, q6n, q6q, q6y and q77, and the q6u recall replay. Replays
+    * the kernel's exact chains on the nano-unit grid: coarse cell = full-dim
+    * fixed-point argmin (ties to the low cell), residual code = per-subspace
+    * argmin of ((e − cc) − c)² terms (ties to the low cid), probe set = each
+    * query's nProbe lowest coarse distances (ties to the low cell), ADC =
+    * integer residual sums, top-k ties on vec_id.
     */
   /** The ((e − cc) − c)² fixed-point term over subspace `sub` of vector
-    * column `v` — the kernel's residSubDist chain, verbatim. Shared by
-    * the full replay and the serving-tail twin so they cannot drift.
+    * column `v` — the kernel's residSubDist chain, verbatim.
     */
   private def residTermSql(v: String, ds: Int): String =
     s"""CAST(list_sum(
@@ -970,60 +972,6 @@ object SimilarityQueries {
        |    FROM qp0) WHERE rn <= $nProbe),
        |adc0 AS (
        |  SELECT qp.query_id, enc.vec_id, ${residTerm("q.qe")} AS d
-       |  FROM qp JOIN q USING (query_id)
-       |  JOIN enc ON enc.cell = qp.cell
-       |  JOIN cc ON cc.cell = qp.cell
-       |  JOIN cb ON cb.sub = enc.sub AND cb.cid = enc.cid),
-       |adc AS (SELECT query_id, vec_id, CAST(sum(d) AS BIGINT) AS dist
-       |        FROM adc0 GROUP BY query_id, vec_id),
-       |r AS (SELECT query_id, vec_id, dist,
-       |        row_number() OVER (PARTITION BY query_id
-       |                           ORDER BY dist, vec_id) AS rn
-       |      FROM adc)
-       |SELECT query_id, vec_id, dist FROM r WHERE rn <= $k
-       |ORDER BY query_id, vec_id""".stripMargin
-  }
-
-  /** The ann_ivfpq_idx twin: the index SERVING tail only — probe ranking +
-    * ADC + top-k over a PRE-MATERIALIZED encoded relation `encFrom` with
-    * columns (vec_id, codes, cell), i.e. the persisted index's `encoded/`
-    * parquet read back. Unlike [[ivfPqReplaySql]] it never re-derives cell
-    * assignment or residual codes, so the Scale10x index probe compares
-    * index serving against index serving (the r12 ADVICE asymmetry: the
-    * full-replay twin compared a prebuilt-index search to a from-scratch
-    * rebuild). Distances are the identical shared fixed-point terms.
-    */
-  def ivfPqIdxReplaySql(coarse: Seq[Seq[Double]], cbs: Seq[Seq[Seq[Double]]],
-                        encFrom: String, queryFrom: String,
-                        k: Int, nProbe: Int): String = {
-    val dim = coarse.head.size
-    val ds = cbs.head.head.size
-    val ccValues = coarse.zipWithIndex
-      .map { case (c, i) => s"  ($i, ${doubleListLit(c)})" }
-      .mkString(",\n")
-    val cbValues = cbs.zipWithIndex.flatMap { case (cb, j) =>
-      cb.zipWithIndex.map { case (c, i) => s"  ($j, $i, ${doubleListLit(c)})" }
-    }.mkString(",\n")
-    s"""WITH cc(cell, c) AS (VALUES
-       |$ccValues),
-       |cb(sub, cid, c) AS (VALUES
-       |$cbValues),
-       |q AS (SELECT vec_id AS query_id, embedding AS qe FROM $queryFrom),
-       |enc AS (
-       |  SELECT vec_id, CAST(cell AS INTEGER) AS cell,
-       |    unnest(range(len(codes))) AS sub, unnest(codes) AS cid
-       |  FROM $encFrom),
-       |qp0 AS (
-       |  SELECT q.query_id, cc.cell, ${coarseTermSql("q.qe", dim)} AS d
-       |  FROM q CROSS JOIN cc),
-       |qp AS (
-       |  SELECT query_id, cell FROM (
-       |    SELECT query_id, cell,
-       |      row_number() OVER (PARTITION BY query_id
-       |                         ORDER BY d, cell) AS rn
-       |    FROM qp0) WHERE rn <= $nProbe),
-       |adc0 AS (
-       |  SELECT qp.query_id, enc.vec_id, ${residTermSql("q.qe", ds)} AS d
        |  FROM qp JOIN q USING (query_id)
        |  JOIN enc ON enc.cell = qp.cell
        |  JOIN cc ON cc.cell = qp.cell
@@ -1108,18 +1056,17 @@ object SimilarityQueries {
   }
 
   /** The SemDeDup replay as ONE SQL text parameterized on the fitted
-    * centroids and the corpus FROM clause — shared by the q6i oracle and
-    * the Scale10x semdedup twin. Cell assignment replays the kernel's
-    * exact fixed-point argmin (the q5y enc CTE with one full-vector
-    * subspace, ties to the low cell); the pair test is the q4l cosine
-    * chain rounded to 6 before the threshold compare; kept = no
-    * qualifying lower-id cluster mate. `threshold` is passed as SQL text
-    * so both engines parse the identical literal. Both sides of the pair
-    * CTE carry a positive-norm guard mirroring the Spark side's `__n > 0`
-    * filter: DuckDB's list_cosine_similarity on a zero vector yields NaN,
-    * and NaN >= threshold is TRUE under its total order — without the
-    * guard a zero-norm row would drop (and block cell-mates) in the
-    * oracle only. Zero-norm rows stay in the final left-join output.
+    * centroids and the corpus FROM clause — the q6i oracle. Cell assignment
+    * replays the kernel's exact fixed-point argmin (the q5y enc CTE with one
+    * full-vector subspace, ties to the low cell); the pair test is the q4l
+    * cosine chain rounded to 6 before the threshold compare; kept = no
+    * qualifying lower-id cluster mate. `threshold` is passed as SQL text so
+    * both engines parse the identical literal. Both sides of the pair CTE
+    * carry a positive-norm guard mirroring the Spark side's `__n > 0` filter:
+    * DuckDB's list_cosine_similarity on a zero vector yields NaN, and NaN >=
+    * threshold is TRUE under its total order — without the guard a zero-norm
+    * row would drop (and block cell-mates) in the oracle only. Zero-norm rows
+    * stay in the final left-join output.
     */
   def semDedupReplaySql(centroids: Seq[Seq[Double]], corpusFrom: String,
                         threshold: String): String = {
@@ -1231,7 +1178,7 @@ object SimilarityQueries {
     * assignment, round-6 cosine, and the positive-norm guards are the
     * identical [[semDedupGateReplaySql]] machinery; only a gate whose
     * state GREW by round 0's survivors drops a batch-1 twin of a batch-0
-    * survivor. Shared by the q6p oracle and the Scale10x semgate_sm twin.
+    * survivor. The q6p oracle.
     */
   def semSelfMaintainReplaySql(centroids: Seq[Seq[Double]],
                                corpusFrom: String, batchSql: String,

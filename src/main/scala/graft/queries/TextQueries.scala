@@ -70,14 +70,13 @@ object TextQueries {
     }
 
   /** The classifier margin chain as a WITH prefix ending in CTE
-    * `m(doc_id, margin)`, parameterized on the exported model and the
-    * doc source — shared by the q57/q70 scoring replays, the q74 gate
-    * replay, the q75 drift replay, and the Scale10x quality twin, so no
-    * two replays can drift. f_j MUST be DOUBLE: DuckDB parses the
-    * coefficient literals as DECIMAL, and DECIMAL * BIGINT stays in
-    * decimal arithmetic — only a DOUBLE operand promotes the whole chain
-    * to IEEE doubles and makes it bit-identical to the Spark side
-    * (measured: 1-ulp margin drift with BIGINT features).
+    * `m(doc_id, margin)`, parameterized on the exported model and the doc
+    * source — shared by the q57/q70 scoring replays, the q74 gate replay
+    * and the q75 drift replay, so no two replays can drift. f_j MUST be
+    * DOUBLE: DuckDB parses the coefficient literals as DECIMAL, and
+    * DECIMAL * BIGINT stays in decimal arithmetic — only a DOUBLE operand
+    * promotes the whole chain to IEEE doubles and makes it bit-identical to
+    * the Spark side (measured: 1-ulp margin drift with BIGINT features).
     */
   private def qualityMarginCtes(m: graft.ml.TextClassifier.LinearTextModel,
                                 docsFrom: String): String = {
@@ -163,8 +162,7 @@ object TextQueries {
   /** The q7c replay at k=256: the k smallest distinct md5-60-bit token
     * hashes by a global DISTINCT + ORDER BY (exactly the vocabulary-
     * sized work the Spark sketch's bounded aggregate removes) and the
-    * HUGEINT floor-division estimate — shared with the Scale10x
-    * vocab_sketch twin, so probe and oracle can never drift.
+    * HUGEINT floor-division estimate. The q7c oracle.
     */
   def vocabSketchReplaySql(docsFrom: String): String =
     s"""WITH tk AS (SELECT string_split(text, ' ') AS t FROM $docsFrom),
@@ -680,8 +678,11 @@ object TextQueries {
     // recursive-CTE transitive closure: the oracle derives the keeper set
     // (min-id member per component + unpaired docs) with no hashing, so the
     // gate pins blocking, verification, AND the propagation loop end-to-end.
+    // `pairs` is MATERIALIZED and the recursion nests over it: under a flat
+    // WITH RECURSIVE, DuckDB re-plans the all-pairs shingle join inside the
+    // recursive step, which on a 10x copy of sf0.1 spilled past 19 GB.
     QueryDef.sql("q4f_drop_neardupes",
-      """WITH RECURSIVE
+      """WITH
         |corpus AS (
         |  SELECT doc_id, text FROM documents
         |  UNION ALL
@@ -699,18 +700,19 @@ object TextQueries {
         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
         |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
         |  GROUP BY a.doc_id, b.doc_id),
-        |pairs AS (
+        |pairs AS MATERIALIZED (
         |  SELECT doc_a, doc_b FROM inter
         |  JOIN sizes na ON na.doc_id = doc_a
         |  JOIN sizes nb ON nb.doc_id = doc_b
         |  WHERE i / (na.n + nb.n - i) >= 0.5),
-        |edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-        |          UNION SELECT doc_b, doc_a FROM pairs),
-        |reach AS (
-        |  SELECT src, dst FROM edges
-        |  UNION
-        |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
         |dropped AS (
+        |  WITH RECURSIVE
+        |  edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
+        |            UNION SELECT doc_b, doc_a FROM pairs),
+        |  reach AS (
+        |    SELECT src, dst FROM edges
+        |    UNION
+        |    SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src)
         |  SELECT src AS doc FROM reach GROUP BY src HAVING min(dst) < src)
         |SELECT doc_id FROM corpus
         |WHERE doc_id NOT IN (SELECT doc FROM dropped)
@@ -1153,7 +1155,10 @@ object TextQueries {
     //      spread below — a real distribution at every SF -----------------
     QueryDef.sql("q5r_contamination_report",
       contaminationOracleSql("documents")) { (s, d) =>
-      contaminationReport(Tables.documents(s, d)).orderBy(col("doc_id"))
+      val docs = Tables.documents(s, d)
+      Dedup.contaminationReport(docs, "doc_id", "text",
+        docs.where(col("doc_id") % 31 === 0).select(col("text")), "text", n = 8)
+        .orderBy(col("doc_id"))
     },
 
     // ---- JSONL interchange round-trip (contract oracle, q39-style): the
@@ -1380,8 +1385,7 @@ object TextQueries {
     // q4t/q5i's live-gate replay over the full corpus: a compaction that
     // loses, duplicates-into-divergence, or mis-buckets a fingerprint
     // breaks the hash. Closes the last unboundedly-growing state store
-    // (DedupSpec pins multiset preservation + crash windows; the gate
-    // probe cost pre/post compaction is probed in Scale10x).
+    // (DedupSpec pins multiset preservation + crash windows).
     QueryDef.sql("q6w_fptable_compacted", exactGateOracleSql) { (s, d) =>
       Dedup.dropDupesAgainstTable(
           Tables.documents(s, d).where(col("doc_id") % 3 === 0),
@@ -1520,7 +1524,8 @@ object TextQueries {
     // SQL literals 2.25/1.25/0.25/0.75 are the same values the operator
     // computes.
     QueryDef.sql("q5x_bm25_topk", bm25OracleSql("documents")) { (s, d) =>
-      bm25(Tables.documents(s, d))
+      graft.operators.Retrieval.bm25TopK(Tables.documents(s, d),
+        col("doc_id"), col("text"), Bm25Terms, k = 20)
     },
 
     // ---- BM25 served from the PERSISTED stats table (q71): the
@@ -1897,8 +1902,8 @@ object TextQueries {
 
   /** The DSIR scoring CTE chain (delta list literal → feature unnest →
     * md5-60-bit bucket → integer logw sum, ending in a CTE named `s`) —
-    * shared by the q6j rank-cut oracle, the q6k threshold-gate oracle,
-    * and the Scale10x dsir twin, so no two replays can drift.
+    * shared by the q6j/q79 rank-cut, q6r Gumbel, q6k threshold-gate and
+    * q72 drift replays, so no two replays can drift.
     */
   private def dsirScoreCte(m: graft.ml.Dsir.DsirModel,
                            corpusFrom: String): String =
@@ -1931,7 +1936,7 @@ object TextQueries {
       side(buildFrom) + "\nORDER BY src"
   }
 
-  /** q6j / dsir-twin replay: top-k selection with the id tie-break. */
+  /** q6j/q79 replay: top-k selection with the id tie-break. */
   def dsirReplaySql(m: graft.ml.Dsir.DsirModel, corpusFrom: String,
                     k: Int): String =
     dsirScoreCte(m, corpusFrom) + ",\n" +
@@ -2055,8 +2060,7 @@ object TextQueries {
   /** Shared windows→islands CTE chain for the ExactSubstr oracles (k=8,
     * minDocs=2): per-doc 0-based window positions by zipped unnest, hot
     * grams by distinct-doc count, islands by the identical partitioned
-    * lag/running-sum the Spark side uses. Shared with the Scale10x
-    * `exact_substr` twin so probe and oracle can never drift.
+    * lag/running-sum the Spark side uses.
     */
   /** The 8-token window expansion over a split-token column `t` (short
     * docs collapse to one whole-doc window — the WordShingles rule),
@@ -2112,8 +2116,7 @@ object TextQueries {
   /** The q6l/q6m windows→islands chain: hot = grams occurring ANYWHERE in
     * the eval set ([[graft.operators.Dedup.contaminatedSpans]]'s
     * membership rule — fp equality == gram equality, so the oracle
-    * replays by gram text). Shared by both contamination-span oracles
-    * and the Scale10x substr_decontam twin.
+    * replays by gram text). Shared by both contamination-span oracles.
     */
   private def contamSpanIslandsCte(corpusFrom: String,
                                    evalFrom: String): String =
@@ -2177,9 +2180,8 @@ object TextQueries {
   def contamRemoveOracleSql(corpusFrom: String, evalFrom: String): String =
     contamSpanIslandsCte(corpusFrom, evalFrom) + ",\n" + substrRemoveTail
 
-  /** The q5r oracle as a function of the documents table/view name — shared
-    * with the Scale10x `contam_report` twin so the probe and the
-    * correctness oracle can never drift apart (eval set = every 31st doc).
+  /** The q5r oracle as a function of the documents table/view name (eval
+    * set = every 31st doc).
     */
   def contaminationOracleSql(table: String): String =
     s"""WITH sp AS (SELECT doc_id, string_split(text, ' ') AS t FROM $table),
@@ -2199,16 +2201,10 @@ object TextQueries {
        |  CAST(n_hit * 1000000 // n_grams AS BIGINT) AS overlap_ppm
        |FROM h ORDER BY doc_id""".stripMargin
 
-  /** The q5r Spark side against any documents frame (Scale10x reuses it). */
-  def contaminationReport(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    graft.operators.Dedup.contaminationReport(docs, "doc_id", "text",
-      docs.where(org.apache.spark.sql.functions.col("doc_id") % 31 === 0)
-        .select(org.apache.spark.sql.functions.col("text")), "text", n = 8)
-
   /** The q5x query terms — present with high tf variance at every SF.
     * (def, not val: `defs` above initializes first and would read null.)
     */
-  private[graft] def Bm25Terms = Seq("merge", "query", "spark", "stream", "window")
+  private def Bm25Terms = Seq("merge", "query", "spark", "stream", "window")
 
   /** The q71 persisted BM25 stats table: whole-vocabulary df + (N, Σdl)
     * properties, written once per sf dir per session (the ensureFpTable
@@ -2250,9 +2246,8 @@ object TextQueries {
     table
   }
 
-  /** The q5x oracle as a function of the documents table name — shared
-    * with the Scale10x `bm25_topk` twin so the probe and the correctness
-    * oracle can never drift. See the Retrieval scaladoc for the exact
+  /** The q5x/q71/q76 oracle as a function of the documents table name.
+    * See the Retrieval scaladoc for the exact
     * double-chain contract (integer micro-unit contributions, exact-binary
     * k1=1.25 / b=0.75 literals).
     */
@@ -2285,19 +2280,4 @@ object TextQueries {
        |SELECT doc_id, matched, score FROM s
        |ORDER BY score DESC, doc_id LIMIT 20""".stripMargin
   }
-
-  /** The q5x Spark side against any documents frame (Scale10x twin). */
-  def bm25(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    graft.operators.Retrieval.bm25TopK(docs,
-      org.apache.spark.sql.functions.col("doc_id"),
-      org.apache.spark.sql.functions.col("text"), Bm25Terms, k = 20)
-
-  /** The q71 Spark side: the same query served from a persisted stats
-    * table (Scale10x twin — one corpus pass instead of fit + score).
-    */
-  def bm25Served(docs: org.apache.spark.sql.DataFrame,
-                 statsTable: String): org.apache.spark.sql.DataFrame =
-    graft.operators.Retrieval.bm25TopKFromStats(docs,
-      org.apache.spark.sql.functions.col("doc_id"),
-      org.apache.spark.sql.functions.col("text"), statsTable, Bm25Terms, k = 20)
 }

@@ -8,6 +8,7 @@
 # ones) to ${OUT%.json}_detail.json.
 #
 # Usage: tools/bench_quiet.sh [max_attempts] [out_json]
+# Bench runs on every core of the host (nproc).
 set -u
 MAX=${1:-8}
 OUT=${2:-/tmp/BENCH_QUIET.json}
@@ -41,7 +42,7 @@ for i in $(seq 1 "$MAX"); do
   # pre-r18 artifact always carried "queries" and consumers read it
   # (r18 review finding); fall back to any metric line if the full one
   # is missing so the gate fields below still evaluate
-  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
+  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=$(nproc) \
     sbt -batch 'runMain graft.Bench' 2>&1 \
     | grep -o '{"metric".*' > /tmp/bench_quiet_lines.txt
   grep '"queries"' /tmp/bench_quiet_lines.txt | tail -1 > /tmp/bench_quiet_line.json

@@ -7,6 +7,11 @@ same testdata tables and compare (row count, column names sorted, values).
 
 Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir>
 (run `sbt "runMain graft.Verify <sfDir> <outDir>"` first)
+
+Every oracle key with no output dir is a FAIL: Verify writes oracles only
+for the queries it attempted, so a missing dir means the query threw.
+<sfDir> may hold `<table>.parquet` files (testdata) or directories of part
+files (`graft.ScaleData`).
 """
 import sys, os, json, glob
 import duckdb
@@ -18,7 +23,8 @@ sfdir, outdir = sys.argv[1], sys.argv[2]
 con = duckdb.connect()
 for p in glob.glob(f"{sfdir}/*.parquet"):
     name = os.path.basename(p).replace(".parquet", "")
-    con.sql(f"CREATE VIEW {name} AS FROM '{p}'")
+    src = f"{p}/*.parquet" if os.path.isdir(p) else p
+    con.sql(f"CREATE VIEW {name} AS FROM '{src}'")
 
 with open(f"{outdir}/oracle_sql.json") as f:
     oracles = json.load(f)
@@ -30,6 +36,8 @@ def canon(df):
     return df
 
 fails, passes, skips = [], [], []
+for name in sorted(set(oracles) - set(os.listdir(outdir))):
+    fails.append((name, "no output (the query threw in Verify)"))
 for name in sorted(os.listdir(outdir)):
     path = os.path.join(outdir, name)
     if not os.path.isdir(path):

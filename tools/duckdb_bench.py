@@ -76,8 +76,9 @@ def main() -> None:
     con = duckdb.connect()
     for p in glob.glob(os.path.join(sf_dir, "*.parquet")):
         name = os.path.splitext(os.path.basename(p))[0]
+        src = os.path.join(p, "*.parquet") if os.path.isdir(p) else p
         con.execute(
-            f"CREATE OR REPLACE VIEW {name} AS SELECT * FROM read_parquet('{p}')"
+            f"CREATE OR REPLACE VIEW {name} AS SELECT * FROM read_parquet('{src}')"
         )
 
     # session fixtures: materialize once, untimed for the per-query numbers
