@@ -26,21 +26,26 @@ object Dedup {
   /** Rows of `df` minus exact duplicates (keeps the min-id row per text).
     *
     * Contract: emits EXACTLY ONE row per distinct text — the row whose
-    * `id` is minimal within its fingerprint group. Deterministic when ids
-    * are unique per row (the normal case); with duplicate ids inside one
+    * `id` is minimal within its fingerprint group, a null id ranking after
+    * every non-null one: a null-id row is kept when no non-null-id row
+    * shares its text. Deterministic when ids are unique per row (the
+    * normal case); with duplicate ids (or several null ids) inside one
     * text group, `min_by` keeps an arbitrary row among the id-ties. (The
     * pre-r8 keeper-id semi-join formulation instead kept EVERY row sharing
     * the keeper id — one-row-per-fingerprint is the intended dedup
     * semantics and is what the q44/q5i oracles pin.) Requires distinct
     * column names (the row is rebuilt via struct field access by name).
     *
-    * One-pass shape: `min_by(struct(row), id)` per text fingerprint — a
-    * single scan and a single shuffle, with map-side partial min_by
-    * reducing each partition to at most one candidate row per distinct
-    * text before the exchange. The earlier keeper-id formulation
-    * (fingerprint agg + semi-join back on id) scanned the input twice and
-    * paid a second full-row shuffle for the id join; measured at the 100×
-    * probe this halves the operator (2.52 → ~1.3 s).
+    * One-pass shape: `min_by(struct(row), struct(id IS NULL, id))` per
+    * text fingerprint — a single scan and a single shuffle, with map-side
+    * partial min_by reducing each partition to at most one candidate row
+    * per distinct text before the exchange. The ordering is a struct
+    * because `min_by` skips null orderings: ordered by the bare id, a
+    * group whose rows all have null ids yields a null row. The earlier
+    * keeper-id formulation (fingerprint agg + semi-join back on id)
+    * scanned the input twice and paid a second full-row shuffle for the
+    * id join; measured at the 100× probe this halves the operator
+    * (2.52 → ~1.3 s).
     */
   def dropExactDupes(df: DataFrame, id: String, text: String): DataFrame = {
     val cols = df.columns
@@ -54,7 +59,8 @@ object Dedup {
     val fp = fresh("__fp")
     val r = fresh("__r")
     df.groupBy(TextFunctions.fingerprint64(col(text)).as(fp))
-      .agg(min_by(struct(cols.map(col): _*), col(id)).as(r))
+      .agg(min_by(struct(cols.map(col): _*),
+        struct(col(id).isNull, col(id))).as(r))
       .select(cols.map(c => col(r).getField(c).as(c)): _*)
   }
 
@@ -477,13 +483,18 @@ object Dedup {
     * honors the table's bucket spec.
     */
   def appendFingerprintTable(batch: DataFrame, text: String,
-                             table: String): Unit = {
-    val spark = batch.sparkSession
+                             table: String): Unit =
+    newFingerprints(batch, text, table).write.mode("append").insertInto(table)
+
+  /** The rows [[appendFingerprintTable]] writes: the batch's distinct
+    * fingerprints that the table does not hold yet. The streaming exact
+    * gate writes them with one task, one file per bucket per trigger.
+    */
+  private[graft] def newFingerprints(batch: DataFrame, text: String,
+                                     table: String): DataFrame =
     batch.select(TextFunctions.fingerprint64(col(text)).as("__fp"))
       .distinct()
-      .join(spark.table(table), Seq("__fp"), "left_anti")
-      .write.mode("append").insertInto(table)
-  }
+      .join(batch.sparkSession.table(table), Seq("__fp"), "left_anti")
 
   /** [[dropDupesAgainst]] probing a PERSISTED fingerprint table instead of
     * re-fingerprinting the corpus: drop batch rows whose text fingerprint

@@ -1,8 +1,14 @@
 package graft.streaming
 
+import java.util.concurrent.{ExecutionException, ForkJoinPool}
+
+import scala.util.Try
+
 import graft.functions.TextFunctions
-import graft.operators.Dedup
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import graft.operators.{Dedup, Similarity}
+import org.apache.spark.sql.{classic, Column, DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -51,7 +57,7 @@ object DocStream {
     * cannot race concurrent batch queries on the parent session
     * (spec-pinned in DocStreamSpec).
     */
-  private def tuneTriggerSession(spark: org.apache.spark.sql.SparkSession): Unit =
+  private def tuneTriggerSession(spark: SparkSession): Unit =
     spark.conf.set("spark.sql.adaptive.enabled", "false")
 
   /** `docs` is a STREAMING DataFrame with `tsCol` event time and `textCol`;
@@ -139,46 +145,137 @@ object DocStream {
       .start()
   }
 
+  /** One trigger of a self-maintaining gate: the two halves a gate
+    * supplies to [[selfMaintaining]].
+    */
+  private trait GateTrigger {
+    /** The micro-batch's survivors against strictly-prior state: lazy,
+      * batch-bounded and row-exact (null-id rows included). Evaluated at
+      * most once per trigger.
+      */
+    def survivors: DataFrame
+
+    /** Add a survivor set to the gate's state. Idempotent: a replayed
+      * trigger redoes it from the committed sink partition.
+      */
+    def append(survivors: DataFrame): Unit
+  }
+
+  /** The trigger skeleton of the three self-maintaining gates
+    * ([[selfMaintainingNearDedupedIngest]], [[selfMaintainingDedupedIngest]],
+    * [[selfMaintainingSemGatedIngest]]). Per micro-batch:
+    *
+    *   1. tune the trigger session ([[tuneTriggerSession]]);
+    *   2. if the sink partition `batch=<id>` already committed (its
+    *      `_SUCCESS` exists), this is a replay after a crash that followed
+    *      the sink commit: the committed survivors, read with the batch's
+    *      schema, are the answer (they were computed against strictly-prior
+    *      state), and only the idempotent state append is redone;
+    *   3. otherwise run the gate's probe ONCE and hold its survivors on the
+    *      driver as a local relation ([[localized]]) that both writes read.
+    *      Nothing is persisted: a cached relation would make one write wait
+    *      on its builder's lock while the other fills it;
+    *   4. overwrite `batch=<id>` with the survivors (idempotent sink) and
+    *      append them to the gate's state.
+    *
+    * The ordering rule of step 4. A crash can commit the state append and
+    * not the sink; the replay then probes state that already holds the
+    * batch's own survivors. A gate whose probe excludes its own batch's
+    * state (`ownStateExcluded`: the near gate's doc ids, the semantic
+    * gate's `seg=b<id>`) replays exactly either way, so its two writes run
+    * concurrently. A gate whose state carries no provenance (the exact
+    * gate's fingerprints) would match itself and drop every survivor, so
+    * it writes the sink first: by the time its append can have committed,
+    * the sink has, and step 2 takes the replay.
+    */
+  private def selfMaintaining(docs: DataFrame, sinkPath: String,
+                              checkpointDir: String, ownStateExcluded: Boolean)(
+      trigger: (DataFrame, Long) => GateTrigger): StreamingQuery =
+    docs.writeStream
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        val spark = batch.sparkSession
+        tuneTriggerSession(spark)
+        val b = batch.toDF()
+        val gate = trigger(b, batchId)
+        val part = s"$sinkPath/batch=$batchId"
+        val ok = new org.apache.hadoop.fs.Path(part, "_SUCCESS")
+        if (ok.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(ok))
+          gate.append(spark.read.schema(b.schema).parquet(part))
+        else {
+          val surv = localized(gate.survivors)
+          // one file per partition: the near gate's probe reads every
+          // earlier partition again, and a local relation would write one
+          // file per core
+          def sink(): Unit = surv.coalesce(1).write.mode("overwrite").parquet(part)
+          if (ownStateExcluded) concurrently(spark)(sink(), gate.append(surv))
+          else { sink(); gate.append(surv) }
+        }
+        ()
+      }
+      .option("checkpointLocation", checkpointDir)
+      .start()
+
+  /** Runs `a` on this thread and `b` on a pooled one that carries this
+    * thread's active session and Spark local properties (job group,
+    * scheduler pool, SQL execution id), as a thread started here would
+    * inherit them. Returns when both have finished; rethrows the first
+    * failure.
+    */
+  private def concurrently(spark: SparkSession)(a: => Unit, b: => Unit): Unit = {
+    val other = SQLExecution.withThreadLocalCaptured(
+      spark.asInstanceOf[classic.SparkSession], ForkJoinPool.commonPool())(b)
+    val mine = Try(a)
+    val theirs = Try(other.get())
+    mine.get
+    theirs.failed.foreach {
+      case e: ExecutionException => throw e.getCause
+      case e => throw e
+    }
+  }
+
   /** SELF-MAINTAINING variant of [[nearDedupedIngest]]: each micro-batch
     * gates against the historical corpus PLUS every earlier stream batch's
     * survivors, then appends its own survivors' band rows to the table —
     * the steady-state production loop where the stream IS the corpus's
-    * growth. Mechanics per batch:
+    * growth. One [[selfMaintaining]] trigger per batch:
     *
     *   1. verify-text side = `corpus` ∪ the sink's previously written
     *      survivor partitions (the sink doubles as the appended corpus);
     *      the band table already carries their band rows from step 3.
-    *   2. the LSH probe excludes pairs whose corpus-side doc is in the
-    *      CURRENT micro-batch — a batch compares against strictly PRIOR
+    *   2. probe: the LSH probe excludes pairs whose corpus-side doc is in
+    *      the CURRENT micro-batch — a batch compares against strictly PRIOR
     *      state, which also makes crash-replay exact: a replayed batch
     *      whose bands were already appended would otherwise match itself.
-    *   3. the batch's band rows are computed once and the probe runs
-    *      once, each collected to the driver: `bands` rows per
-    *      micro-batch row, and the distinct non-null dupe ids, at most
-    *      one per row — batch-bounded, never corpus- or pair-sized (size
-    *      micro-batches with the source's per-trigger limit). Survivors
-    *      (the batch anti-joined with those ids) overwrite their own
-    *      `batch=<id>` partition (idempotent sink) and, concurrently,
-    *      append their band rows ([[graft.operators.Dedup.appendBandTable]]
-    *      is doc-level idempotent, so a replayed append is a no-op). No
-    *      frame is persisted: a cached survivors relation would make the
-    *      append wait on its builder's monitor while the sink write fills
-    *      it, so the two writes would not overlap.
+    *      This exclusion is why the sink write and the band append run
+    *      concurrently. The batch's band rows are computed once, held as a
+    *      local relation (`bands` rows per micro-batch row: size
+    *      micro-batches with the source's per-trigger limit), and feed
+    *      both the probe and the append.
+    *   3. append: the band rows of the survivors with non-null ids
+    *      ([[graft.operators.Dedup.appendBandRows]] is doc-level
+    *      idempotent, so a replayed append is a no-op), written by one
+    *      task: one file per bucket per trigger, not tasks × buckets, in
+    *      the state that every later probe lists and opens.
     *
-    * Within-batch near-dups still pass (same contract as the static gate);
-    * split batches at the granularity you want deduped. NOTE: the band
-    * table grows with the stream — unlike [[nearDedupedIngest]] it is
-    * state, but storage-resident and bucket-local, never state-store state.
+    * A null-id row always survives (no probe pair can name it) and appends
+    * no band rows. Within-batch near-dups still pass (same contract as the
+    * static gate); split batches at the granularity you want deduped.
+    * NOTE: the band table grows with the stream — unlike
+    * [[nearDedupedIngest]] it is state, but storage-resident and
+    * bucket-local, never state-store state.
     *
     * Long-stream scale note: within a run, prior survivors are carried as
     * a lazy union of single-partition sink reads (one new directory per
-    * trigger — no O(N-batches) re-listing); the FULL sink read happens only
-    * on crash restart. The union plan still grows by one scan per batch,
-    * so at production stream lengths periodically compact the sink
-    * (rewrite the accumulated partitions into one corpus increment and
-    * swap it into `corpus`) — the gate's correctness only needs
-    * "corpus ∪ prior survivors", not the partitioned layout. The
-    * band-table side has no such growth cost (appends are bucket-local
+    * trigger — no O(N-batches) re-listing), read with the gate's known
+    * (id, text) schema so no schema-inference job runs per trigger; every
+    * [[PriorRelistEvery]] triggers, and after a restart, ONE whole-sink
+    * scan replaces the union, so the plan stays O(K) scans. A zero-survivor
+    * batch's partition holds no parquet file and reads empty — exactly
+    * correct, since nothing survived. At production stream lengths compact
+    * the sink periodically (rewrite the accumulated partitions into one
+    * corpus increment and swap it into `corpus`) — the gate's correctness
+    * only needs "corpus ∪ prior survivors", not the partitioned layout.
+    * The band-table side has no such growth cost (appends are bucket-local
     * files behind one catalog table).
     */
   def selfMaintainingNearDedupedIngest(docs: DataFrame, corpus: DataFrame,
@@ -190,196 +287,98 @@ object DocStream {
                                        shingleN: Int = 3): StreamingQuery = {
     Dedup.checkBandGeometry(docs.sparkSession, bandTable,
       bands, rowsPerBand, shingleN)
-    // prior survivors, carried across triggers as a lazy union of
-    // single-partition sink reads instead of re-listing and re-reading the
-    // sink's O(N-batches) partitions every trigger. Lineage is parquet
-    // scans only (never a previous micro-batch's source plan, which would
-    // not be legal to hold across triggers), and after a crash the cache
-    // is empty and the full sink read rebuilds it — exactly the recovery
-    // contract.
-    var priorCache: Option[DataFrame] = None
-    docs.writeStream
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        tuneTriggerSession(spark)
-        val b = batch.toDF()
-        val prior = priorCache.getOrElse {
-          try spark.read.parquet(sinkPath).select(col(id), col(textCol))
+    // (survivors of every batch before n, n), carried across triggers.
+    // Lineage is parquet scans only (never a previous micro-batch's source
+    // plan, which would not be legal to hold across triggers).
+    var carried: Option[(DataFrame, Long)] = None
+    def prior(b: DataFrame, batchId: Long): DataFrame = {
+      val spark = b.sparkSession
+      val p = carried match {
+        case Some((df, n)) if n == batchId - 1 && batchId % PriorRelistEvery != 0 =>
+          try df.unionByName(spark.read.schema(b.select(col(id), col(textCol)).schema)
+            .parquet(s"$sinkPath/batch=$n"))
+          catch { case _: Exception => df } // no partition: nothing survived
+        case _ =>
+          // strictly prior partitions: a replayed batch can find its own
+          // partition's files without `_SUCCESS`, which its sink overwrite
+          // then deletes from under this listing
+          try spark.read.parquet(sinkPath).where(col("batch") < batchId)
+            .select(col(id), col(textCol))
           catch { case _: Exception => // first batch: no sink yet
             corpus.select(col(id), col(textCol)).limit(0) }
-        }
-        val corpusNow = corpus.select(col(id), col(textCol)).unionByName(prior)
-        // the batch's band rows, computed once for both the probe and
-        // the append and held as a local relation: sized exactly, the
-        // probe takes its micro-batch branch (broadcast these bands,
-        // stream the state table) and the strictly-prior exclusion
-        // broadcasts too; the bands carry every batch id (`bands` rows
-        // each, nulls included), so their docs ARE the batch's ids
-        val bBands = localized(Dedup.bandedBatchKeys(b, id, textCol,
-          bands, rowsPerBand, shingleN))
-        // the probe runs ONCE: its distinct non-null dupe ids, collected
-        val dupeIds = localized(Dedup.probeBandTable(bBands, b, corpusNow,
-            bandTable, id, textCol, threshold, shingleN,
-            // strictly-prior comparison: candidate pairs whose corpus-side
-            // doc is in THIS batch never reach the verify kernel (see
-            // scaladoc point 2)
-            excludeCorpusDocs = Some(bBands.select(col("doc").as(id))))
-          .select(col("doc_a").as(id)).where(col(id).isNotNull).distinct())
-        // sink write ∥ band append as CONCURRENT driver actions (guide
-        // §2.6, r19): given `dupeIds`, the two are independent, and their
-        // ORDER is not load-bearing for crash replay — the strictly-prior
-        // exclusion (scaladoc point 2) makes a replayed batch exact
-        // whichever side committed first (its own already-appended bands
-        // are excluded before the verify stage, and the sink partition
-        // overwrite is idempotent). Neither reads a persisted frame: a
-        // cached survivors relation would serialize them, since the
-        // append's optimizer asks it for stats under the cache builder's
-        // monitor, which the sink action holds while it runs the probe.
-        // The anti-joins keep a null-id row as a survivor; its band rows
-        // are filtered out (no probe can ever match a null doc). The
-        // spawned thread inherits this trigger's job group/pool (Spark
-        // local properties are InheritableThreadLocal).
-        @volatile var sinkErr: Throwable = null
-        val sinkT = new Thread(() => {
-          try b.join(dupeIds, Seq(id), "left_anti")
-            .write.mode("overwrite").parquet(s"$sinkPath/batch=$batchId")
-          catch { case e: Throwable => sinkErr = e }
-        }, s"graft-selfm-sink-b$batchId")
-        sinkT.start()
-        // one write task, so each trigger adds one file per bucket (not
-        // tasks × buckets) to the state that every later probe and
-        // idempotency anti-join lists and opens
-        try Dedup.appendBandRows(
-          bBands.coalesce(1).where(col("doc").isNotNull)
-            .join(dupeIds.select(col(id).as("doc")), Seq("doc"), "left_anti"),
-          bandTable)
-        finally sinkT.join()
-        if (sinkErr != null) throw sinkErr
-        // carry forward THIS batch's survivors as the one new partition
-        // just written — a lazy single-directory read with the gate's
-        // known (id, text) schema, so no schema-inference job runs per
-        // trigger; evaluated (if at all) by the next trigger's verify
-        // stage. Two growth/robustness guards (ADVICE r8): a zero-survivor
-        // batch may emit NO parquet file (overwrite of an all-empty
-        // frame), which reads empty, and a missing directory fails the
-        // read and falls back to the previous prior — both exactly
-        // correct, since nothing survived; and every PriorRelistEvery
-        // triggers the accumulated per-partition union collapses into ONE
-        // whole-sink scan, so the analysis plan stays O(K) scans instead
-        // of O(N-batches) (the sink re-list cost is paid once per K
-        // triggers, not per trigger).
-        priorCache = Some(
-          if ((batchId + 1) % PriorRelistEvery == 0)
-            spark.read.parquet(sinkPath).select(col(id), col(textCol))
-          else
-            try prior.unionByName(
-              spark.read.schema(b.select(col(id), col(textCol)).schema)
-                .parquet(s"$sinkPath/batch=$batchId"))
-            catch { case _: Exception => prior })
-        ()
       }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+      carried = Some((p, batchId))
+      p
+    }
+    selfMaintaining(docs, sinkPath, checkpointDir, ownStateExcluded = true) {
+      (b, batchId) =>
+        // sized exactly, the probe takes its micro-batch branch (broadcast
+        // these bands, stream the state table) and the strictly-prior
+        // exclusion broadcasts too; the bands carry every batch id
+        // (`bands` rows each, nulls included), so their docs ARE the
+        // batch's ids
+        lazy val bBands = localized(Dedup.bandedBatchKeys(b, id, textCol,
+          bands, rowsPerBand, shingleN))
+        new GateTrigger {
+          def survivors: DataFrame = {
+            // no distinct: the anti-join ignores duplicate and null matches
+            val dupes = Dedup.probeBandTable(bBands, b,
+                corpus.select(col(id), col(textCol)).unionByName(prior(b, batchId)),
+                bandTable, id, textCol, threshold, shingleN,
+                excludeCorpusDocs = Some(bBands.select(col("doc").as(id))))
+              .select(col("doc_a").as(id))
+            b.join(dupes, Seq(id), "left_anti")
+          }
+          def append(surv: DataFrame): Unit = Dedup.appendBandRows(
+            bBands.coalesce(1).where(col("doc").isNotNull)
+              .join(surv.select(col(id).as("doc")), Seq("doc"), "left_semi"),
+            bandTable)
+        }
+    }
   }
 
   /** SELF-MAINTAINING streaming EXACT-dup gate — the growing-state
     * discipline (q6c near-dup, q6p semantic) on the exact axis, with
     * UNBOUNDED horizon and ZERO state-store state: [[dedupedIngest]]'s
     * within-stream dedup is bounded by its watermark horizon, while this
-    * gate's state is the persisted bucketed fingerprint table — a batch
-    * drops exact dupes of the corpus AND of every earlier batch's
-    * survivors (plus within-batch re-sends, keep-lowest-id — the
-    * [[graft.operators.Dedup.dropDupesAgainstTable]] contract), then
-    * appends its survivors' fingerprints
-    * ([[graft.operators.Dedup.appendFingerprintTable]] — doc-level
-    * idempotent). Steady-state per-batch cost: one bucket-local fp-table
-    * probe + O(new fps) append, independent of corpus and stream length.
+    * gate's state is the persisted bucketed fingerprint table. One
+    * [[selfMaintaining]] trigger per batch:
     *
-    * Crash-replay exactness WITHOUT provenance: unlike band rows (doc
-    * ids, q6c's strictly-prior exclusion) and cell segments (seg names,
-    * q6p's own-segment exclusion), fingerprints carry nothing to exclude
-    * by — a replayed batch re-probing after its own append would match
-    * ITSELF and drop every survivor. The sink partition is therefore the
-    * exactly-once anchor: survivors commit to `batch=<id>` (with
-    * _SUCCESS) strictly BEFORE the fp append, and a batch whose sink
-    * partition already committed skips the probe, trusts the sink (it
-    * was computed against strictly-prior state), and redoes only the
-    * idempotent append. Every crash window replays exactly: before the
-    * sink commit → clean re-probe (no fps appended yet); after it → the
-    * committed survivors are re-appended as a no-op.
+    *   - probe: drop exact dupes of the corpus AND of every earlier
+    *     batch's survivors, plus within-batch re-sends, keep-lowest-id
+    *     (the [[graft.operators.Dedup.dropDupesAgainstTable]] contract: a
+    *     null-id row is kept when no non-null-id row shares its text);
+    *   - append: the survivors' new fingerprints
+    *     ([[graft.operators.Dedup.newFingerprints]] — doc-level
+    *     idempotent), written by one task: one file per bucket per
+    *     trigger.
+    *
+    * Steady-state per-batch cost: one bucket-local fp-table probe + O(new
+    * fps) append, independent of corpus and stream length.
+    *
+    * SINK FIRST. Fingerprints carry no provenance to exclude by (unlike
+    * band rows' doc ids or cell segments' names): a batch re-probing after
+    * its own append committed would match ITSELF and drop every survivor.
+    * So the survivors commit to `batch=<id>` strictly BEFORE the append,
+    * and a replay whose sink partition committed redoes only the append.
+    * Every crash window replays exactly: before the sink commit → clean
+    * re-probe (no fps appended yet); after it → the committed survivors
+    * are re-appended as a no-op where they already were.
     */
   def selfMaintainingDedupedIngest(docs: DataFrame, fpTable: String,
                                    id: String, textCol: String,
                                    sinkPath: String,
                                    checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        tuneTriggerSession(spark)
-        val part = s"$sinkPath/batch=$batchId"
-        val ok = new org.apache.hadoop.fs.Path(part, "_SUCCESS")
-        val fs = ok.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(ok)) {
-          Dedup.appendFingerprintTable(
-            spark.read.parquet(part).select(col(textCol)), textCol, fpTable)
-        } else {
-          // persist: the sink write and the fp append share ONE probe
-          val surv = Dedup.dropDupesAgainstTable(batch.toDF(), fpTable,
-              id, textCol)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            surv.write.mode("overwrite").parquet(part)
-            Dedup.appendFingerprintTable(surv, textCol, fpTable)
-          } finally { surv.unpersist(); () }
+    selfMaintaining(docs, sinkPath, checkpointDir, ownStateExcluded = false) {
+      (b, _) =>
+        new GateTrigger {
+          def survivors: DataFrame =
+            Dedup.dropDupesAgainstTable(b, fpTable, id, textCol)
+          def append(surv: DataFrame): Unit =
+            Dedup.newFingerprints(surv, textCol, fpTable)
+              .coalesce(1).write.mode("append").insertInto(fpTable)
         }
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
-
-  /** Bounded replay of [[selfMaintainingDedupedIngest]] — the
-    * [[replayGate]] harness shape, EXCEPT the sink is NOT cleared
-    * between replays: committed `batch=<id>` partitions are the gate's
-    * exactly-once anchors (see the gate's scaladoc), so a re-replay over
-    * the grown fp table reads them back instead of re-probing (which
-    * would self-match) — the result is bit-stable across repeat replays
-    * in a session (spec-pinned). Only the checkpoint is cleared (a new
-    * MemoryStream cannot resume a stale one's offsets).
-    */
-  def replaySelfMaintainingExactIngest(docs: DataFrame, fpTable: String,
-                                       id: String, textCol: String,
-                                       workDir: String,
-                                       nBatches: Int = 2): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    require(nBatches >= 1, s"need at least one batch, got $nBatches")
-    val rows = docs
-      .select(col(id).cast("long").as("gate_doc_id"),
-        col(textCol).as("gate_text"))
-      .as[GateDoc].collect() // bounded input only, by construction
-    def clear(p: java.nio.file.Path): Unit =
-      if (java.nio.file.Files.exists(p))
-        java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-          .forEach(f => { java.nio.file.Files.delete(f); () })
-    clear(java.nio.file.Paths.get(s"$workDir/ckpt"))
-    if (rows.isEmpty)
-      return spark.emptyDataset[GateDoc].toDF()
-        .select(col("gate_doc_id").as(id), col("gate_text").as(textCol))
-    val in = MemoryStream[GateDoc]
-    val q = selfMaintainingDedupedIngest(in.toDF(), fpTable,
-      "gate_doc_id", "gate_text", s"$workDir/out", s"$workDir/ckpt")
-    try {
-      (0 until nBatches).foreach { b =>
-        val batch = rows.filter(r =>
-          math.floorMod(r.gate_doc_id, nBatches.toLong) == b.toLong)
-        if (batch.nonEmpty) { in.addData(batch.toSeq: _*); q.processAllAvailable() }
-      }
-    } finally q.stop()
-    spark.read.parquet(s"$workDir/out")
-      .select(col("gate_doc_id").as(id), col("gate_text").as(textCol))
-  }
+    }
 
   /** SELF-MAINTAINING streaming SemDeDup gate — the q6c growing-state
     * discipline on the SEMANTIC axis: each micro-batch drops documents
@@ -388,21 +387,25 @@ object DocStream {
     * survivors to the state. State is the persisted CELL-PARTITIONED
     * table rooted at `cellRoot` ([[graft.operators.Similarity
     * .writeSemCellSegment]] — write the base corpus as `seg=corpus`
-    * before starting the stream); each batch:
+    * before starting the stream). One [[selfMaintaining]] trigger per
+    * batch:
     *
-    *   1. collects its DISTINCT cells (a bounded driver read — at most
-    *      nClusters values by construction) and reads the state pruned to
-    *      those cell directories, EXCLUDING its own `seg=b<batchId>`
-    *      segment — a batch compares against strictly prior state, which
-    *      makes crash replay exact (a replayed batch whose survivors were
-    *      already appended would otherwise match itself);
-    *   2. drops batch docs with any state row in their cell at
+    *   1. probe: collect the batch's DISTINCT cells (a bounded driver read
+    *      — at most nClusters values by construction) and read the state
+    *      pruned to those cell directories, EXCLUDING the batch's own
+    *      `seg=b<batchId>` segment — a batch compares against strictly
+    *      prior state, which makes crash replay exact (a replayed batch
+    *      whose survivors were already appended would otherwise match
+    *      itself). This exclusion is why the sink write and the segment
+    *      write run concurrently;
+    *   2. drop batch docs with any state row in their cell at
     *      round(cos, 6) >= threshold ([[graft.operators.Similarity
     *      .semDupIdsAgainstCells]]); zero-norm docs pass and never block;
     *      wrong-geometry embeddings (null cell) are dropped — they cannot
-    *      be gated or blocked;
-    *   3. survivors overwrite their own sink `batch=<id>` partition and
-    *      their own state segment `seg=b<id>` (both idempotent on replay).
+    *      be gated or blocked; a null-id doc passes (dupes are reported by
+    *      id, and a null id matches none);
+    *   3. append: the survivors overwrite their own state segment
+    *      `seg=b<id>` (idempotent on replay).
     *
     * Within-batch semantic dups still pass (same contract as the q6c
     * gate); split batches at the granularity you want deduped. At scale
@@ -418,122 +421,69 @@ object DocStream {
                                     centroids: Seq[Seq[Double]],
                                     threshold: Double, sinkPath: String,
                                     checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        tuneTriggerSession(spark)
-        import graft.operators.Similarity
-        val b = batch.toDF()
-          .filter(graft.expressions.PqEncode(col("embedding"),
-            Seq(centroids)).getItem(0).isNotNull)
-        // bounded driver read: <= nClusters distinct cells — becomes the
-        // state read's partition-pruning filter
-        val cells = b.select(graft.expressions.PqEncode(col("embedding"),
-              Seq(centroids)).getItem(0).as("__cell"))
-          .distinct().collect().map(_.getInt(0)).toSeq
-        val state = spark.read.parquet(cellRoot)
-          .filter(col("seg") =!= s"b$batchId")
-          .filter(col("cell").isin(cells: _*))
-        val dups = Similarity.semDupIdsAgainstCells(
-          b, id, state, threshold, centroids)
-        // persist so the sink write and the state append share ONE gate
-        // execution (released before the trigger returns)
-        val surv = b.join(dups, Seq(id), "left_anti")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          // sink write ∥ segment write as CONCURRENT driver actions
-          // (guide §2.6, r19) — same argument as the near-dup gate: the
-          // own-segment exclusion (step 1 reads state with
-          // seg =!= b<batchId>) makes replay exact whichever side
-          // committed first, and both sides are idempotent overwrites of
-          // their own directory, so the serial barrier between them was
-          // pure latency.
-          @volatile var sinkErr: Throwable = null
-          val sinkT = new Thread(() => {
-            try surv.write.mode("overwrite").parquet(s"$sinkPath/batch=$batchId")
-            catch { case e: Throwable => sinkErr = e }
-          }, s"graft-semgate-sink-b$batchId")
-          sinkT.start()
-          try Similarity.writeSemCellSegment(surv, id, centroids, cellRoot,
-            s"b$batchId")
-          finally sinkT.join()
-          if (sinkErr != null) throw sinkErr
-        } finally { surv.unpersist(); () }
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    selfMaintaining(docs, sinkPath, checkpointDir, ownStateExcluded = true) {
+      (batch, batchId) =>
+        new GateTrigger {
+          def survivors: DataFrame = {
+            val cell = graft.expressions.PqEncode(col("embedding"),
+              Seq(centroids)).getItem(0)
+            val b = batch.filter(cell.isNotNull)
+            // bounded driver read: <= nClusters distinct cells — becomes
+            // the state read's partition-pruning filter
+            val cells = b.select(cell.as("__cell")).distinct()
+              .collect().map(_.getInt(0)).toSeq
+            val state = b.sparkSession.read.parquet(cellRoot)
+              .filter(col("seg") =!= s"b$batchId")
+              .filter(col("cell").isin(cells: _*))
+            b.join(Similarity.semDupIdsAgainstCells(
+              b, id, state, threshold, centroids), Seq(id), "left_anti")
+          }
+          def append(surv: DataFrame): Unit =
+            Similarity.writeSemCellSegment(surv, id, centroids, cellRoot,
+              s"b$batchId")
+        }
+    }
 
-  // NOT private: a private case class makes the generated encoder
-  // projection fail Janino compilation ("Private member cannot be
-  // accessed") and silently fall back to interpreted mode on every replay
-  case class GateDoc(gate_doc_id: Long, gate_text: String)
+  /** Bounded replay of [[selfMaintainingDedupedIngest]]. The sink is NOT
+    * cleared between replays: committed `batch=<id>` partitions are the
+    * gate's exactly-once anchors (see the gate's scaladoc), so a re-replay
+    * over the grown fp table reads them back instead of re-probing (which
+    * would self-match) — the result is bit-stable across repeat replays
+    * in a session (spec-pinned). Only the checkpoint is cleared.
+    */
+  def replaySelfMaintainingExactIngest(docs: DataFrame, fpTable: String,
+                                       id: String, textCol: String,
+                                       workDir: String,
+                                       nBatches: Int = 2): DataFrame =
+    replay(docs, id, Seq(col(textCol)), workDir, nBatches,
+        reset = Seq(s"$workDir/ckpt")) { (in, sink, ckpt) =>
+      selfMaintainingDedupedIngest(in, fpTable, id, textCol, sink, ckpt)
+    }
 
-  // see GateDoc's visibility note
-  case class GateVec(gate_doc_id: Long, gate_emb: Array[Float])
-
-  /** Bounded replay of [[selfMaintainingSemGatedIngest]] for verification
-    * (the [[replayGate]] harness shape with an embedding payload): splits
-    * `docs` into `nBatches` micro-batches by id hash, clears the sink /
-    * checkpoint AND any prior replay's survivor segments under `cellRoot`
-    * (`seg=b*` — the base `seg=corpus` segment stays, built once), streams
-    * the batches through the gate, and returns the surviving (id,
-    * embedding) rows read back from the sink. Because each batch gates
+  /** Bounded replay of [[selfMaintainingSemGatedIngest]] for verification,
+    * with an (id, embedding) payload. Clears the work dir AND any prior
+    * replay's survivor segments under `cellRoot` (`seg=b*` — the base
+    * `seg=corpus` segment stays, built once). Because each batch gates
     * against corpus ∪ earlier batches' survivors, the result equals two
     * chained batch gate rounds — exactly what the q6p oracle replays.
     */
   def replaySemGatedIngest(docs: DataFrame, cellRoot: String, id: String,
                            centroids: Seq[Seq[Double]], threshold: Double,
                            workDir: String, nBatches: Int = 2): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    require(nBatches >= 1, s"need at least one batch, got $nBatches")
-    val rows = docs
-      .select(col(id).cast("long").as("gate_doc_id"),
-        col("embedding").cast("array<float>").as("gate_emb"))
-      .as[GateVec].collect() // bounded input only, by construction
-    def clear(p: java.nio.file.Path): Unit =
-      if (java.nio.file.Files.exists(p))
-        java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-          .forEach(f => { java.nio.file.Files.delete(f); () })
-    clear(java.nio.file.Paths.get(workDir))
-    val rootF = new java.io.File(cellRoot)
-    val segs = rootF.listFiles()
-    if (segs != null) segs.filter(_.getName.startsWith("seg=b"))
-      .foreach(f => clear(f.toPath))
-    if (rows.isEmpty)
-      return spark.emptyDataset[GateVec].toDF()
-        .select(col("gate_doc_id").as(id), col("gate_emb").as("embedding"))
-    val in = MemoryStream[GateVec]
-    val q = selfMaintainingSemGatedIngest(
-      in.toDF().select(col("gate_doc_id"), col("gate_emb").as("embedding")),
-      cellRoot, "gate_doc_id", centroids, threshold,
-      s"$workDir/out", s"$workDir/ckpt")
-    try {
-      (0 until nBatches).foreach { b =>
-        val batch = rows.filter(r =>
-          math.floorMod(r.gate_doc_id, nBatches.toLong) == b.toLong)
-        if (batch.nonEmpty) { in.addData(batch.toSeq: _*); q.processAllAvailable() }
-      }
-    } finally q.stop()
-    spark.read.parquet(s"$workDir/out")
-      .select(col("gate_doc_id").as(id), col("embedding"))
+    val segs = Option(new java.io.File(cellRoot).listFiles()).toSeq.flatten
+      .filter(_.getName.startsWith("seg=b")).map(_.getPath)
+    replay(docs, id, Seq(col("embedding").cast("array<float>").as("embedding")),
+        workDir, nBatches, reset = workDir +: segs) { (in, sink, ckpt) =>
+      selfMaintainingSemGatedIngest(in, cellRoot, id, centroids, threshold,
+        sink, ckpt)
+    }
   }
 
-  /** Bounded replay of [[nearDedupedIngest]] for verification: collects
-    * `docs` (BOUNDED input only by construction — MemoryStream takes local
-    * data; the production path is the same transform over `readStream`
-    * with no collect), splits it into `nBatches` micro-batches by id hash,
-    * streams them through the gate, and returns the surviving rows read
-    * back from the sink. Each micro-batch is independently probed against
-    * the static band table (the gate holds no cross-batch state), so the
-    * result equals the batch gate over all rows regardless of batching —
-    * which is exactly the property an oracle can pin.
-    *
-    * `workDir` is reused deterministically (sink + checkpoint overwritten
-    * per replay, never accumulated).
+  /** Bounded replay of [[nearDedupedIngest]] for verification. Each
+    * micro-batch is independently probed against the static band table
+    * (the gate holds no cross-batch state), so the result equals the batch
+    * gate over all rows regardless of batching — which is exactly the
+    * property an oracle can pin.
     */
   def replayNearDedupedIngest(docs: DataFrame, corpus: DataFrame,
                               bandTable: String, id: String, textCol: String,
@@ -541,17 +491,14 @@ object DocStream {
                               threshold: Double = 0.8, bands: Int = 8,
                               rowsPerBand: Int = 4,
                               shingleN: Int = 3): DataFrame =
-    replayGate(docs, corpus, id, textCol, workDir, nBatches) {
-      (in, gateCorpus, sink, ckpt) =>
-        nearDedupedIngest(in, gateCorpus, bandTable,
-          "gate_doc_id", "gate_text", sink, ckpt,
-          threshold, bands, rowsPerBand, shingleN)
+    replay(docs, id, Seq(col(textCol)), workDir, nBatches,
+        reset = Seq(workDir)) { (in, sink, ckpt) =>
+      nearDedupedIngest(in, corpus.select(col(id), col(textCol)), bandTable,
+        id, textCol, sink, ckpt, threshold, bands, rowsPerBand, shingleN)
     }
 
-  /** Bounded replay of [[selfMaintainingNearDedupedIngest]] — same harness
-    * as [[replayNearDedupedIngest]]; the caller provides a band table that
-    * this replay will APPEND survivor bands to (pass a per-replay rebuilt
-    * table, not a shared fixture).
+  /** Bounded replay of [[selfMaintainingNearDedupedIngest]]; the caller
+    * provides a band table that this replay will APPEND survivor bands to.
     */
   def replaySelfMaintainingIngest(docs: DataFrame, corpus: DataFrame,
                                   bandTable: String, id: String,
@@ -559,11 +506,11 @@ object DocStream {
                                   nBatches: Int = 2, threshold: Double = 0.8,
                                   bands: Int = 8, rowsPerBand: Int = 4,
                                   shingleN: Int = 3): DataFrame =
-    replayGate(docs, corpus, id, textCol, workDir, nBatches) {
-      (in, gateCorpus, sink, ckpt) =>
-        selfMaintainingNearDedupedIngest(in, gateCorpus, bandTable,
-          "gate_doc_id", "gate_text", sink, ckpt,
-          threshold, bands, rowsPerBand, shingleN)
+    replay(docs, id, Seq(col(textCol)), workDir, nBatches,
+        reset = Seq(workDir)) { (in, sink, ckpt) =>
+      selfMaintainingNearDedupedIngest(in, corpus.select(col(id), col(textCol)),
+        bandTable, id, textCol, sink, ckpt,
+        threshold, bands, rowsPerBand, shingleN)
     }
 
   /** Streaming perplexity gate — the CCNet quality filter
@@ -585,17 +532,14 @@ object DocStream {
       .option("path", sinkPath).option("checkpointLocation", ckptPath)
       .outputMode("append").start()
 
-  /** Bounded replay of [[pplGatedIngest]] — the [[replayGate]] harness
-    * with the model gate (the corpus side is unused: the gate is
-    * stateless by construction).
-    */
+  /** Bounded replay of [[pplGatedIngest]]. */
   def replayPplGatedIngest(docs: DataFrame, model: graft.ml.NgramLm.BigramLm,
                            id: String, textCol: String, workDir: String,
                            nBatches: Int = 2,
                            maxPpl: Double = 40.0): DataFrame =
-    replayGate(docs, docs.limit(0), id, textCol, workDir, nBatches) {
-      (in, _, sink, ckpt) =>
-        pplGatedIngest(in, model, "gate_text", maxPpl, sink, ckpt)
+    replay(docs, id, Seq(col(textCol)), workDir, nBatches,
+        reset = Seq(workDir)) { (in, sink, ckpt) =>
+      pplGatedIngest(in, model, textCol, maxPpl, sink, ckpt)
     }
 
   /** Streaming DSIR selection gate ([[graft.ml.Dsir]]): keep a stream
@@ -639,70 +583,60 @@ object DocStream {
       .option("path", sinkPath).option("checkpointLocation", ckptPath)
       .outputMode("append").start()
 
-  /** Bounded replay of [[qualityGatedIngest]] — the [[replayGate]]
-    * harness with the margin gate (corpus side unused: stateless).
-    */
+  /** Bounded replay of [[qualityGatedIngest]]. */
   def replayQualityGatedIngest(docs: DataFrame,
                                model: graft.ml.TextClassifier.LinearTextModel,
                                id: String, textCol: String, workDir: String,
                                nBatches: Int = 2,
                                minMargin: Double = 0.0): DataFrame =
-    replayGate(docs, docs.limit(0), id, textCol, workDir, nBatches) {
-      (in, _, sink, ckpt) =>
-        qualityGatedIngest(in, model, "gate_text", minMargin, sink, ckpt)
+    replay(docs, id, Seq(col(textCol)), workDir, nBatches,
+        reset = Seq(workDir)) { (in, sink, ckpt) =>
+      qualityGatedIngest(in, model, textCol, minMargin, sink, ckpt)
     }
 
-  /** Bounded replay of [[dsirGatedIngest]] — the [[replayGate]] harness
-    * with the importance gate (corpus side unused: stateless).
-    */
+  /** Bounded replay of [[dsirGatedIngest]]. */
   def replayDsirGatedIngest(docs: DataFrame,
                             model: graft.ml.Dsir.DsirModel,
                             id: String, textCol: String, workDir: String,
                             nBatches: Int = 2,
                             minLogwMicro: Long = 0L): DataFrame =
-    replayGate(docs, docs.limit(0), id, textCol, workDir, nBatches) {
-      (in, _, sink, ckpt) =>
-        dsirGatedIngest(in, model, "gate_text", minLogwMicro, sink, ckpt)
+    replay(docs, id, Seq(col(textCol)), workDir, nBatches,
+        reset = Seq(workDir)) { (in, sink, ckpt) =>
+      dsirGatedIngest(in, model, textCol, minLogwMicro, sink, ckpt)
     }
 
-  /** The shared bounded-replay harness behind the two gate replays. */
-  private def replayGate(docs: DataFrame, corpus: DataFrame, id: String,
-                         textCol: String, workDir: String, nBatches: Int)(
-      start: (DataFrame, DataFrame, String, String) => StreamingQuery): DataFrame = {
+  /** The one bounded-replay harness behind every gate replay: collects
+    * `docs` as (id cast to bigint, `payload`) rows (BOUNDED input only by
+    * construction — MemoryStream takes local data; the production path is
+    * the same gate over `readStream` with no collect), deletes the `reset`
+    * directories, splits the rows into `nBatches` micro-batches by id
+    * modulo (null ids in the first), streams them through the gate that
+    * `start(stream, sinkPath, checkpointDir)` starts, and returns the
+    * surviving rows read back from `workDir/out`. A replay that does not
+    * reset the checkpoint must: a new MemoryStream cannot resume a stale
+    * one's offsets.
+    */
+  private def replay(docs: DataFrame, id: String, payload: Seq[Column],
+                     workDir: String, nBatches: Int, reset: Seq[String])(
+      start: (DataFrame, String, String) => StreamingQuery): DataFrame = {
     val spark = docs.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     require(nBatches >= 1, s"need at least one batch, got $nBatches")
-    val rows = docs
-      .select(col(id).cast("long").as("gate_doc_id"),
-        col(textCol).as("gate_text"))
-      .as[GateDoc].collect()
+    val input = docs.select(col(id).cast("long").as(id) +: payload: _*)
+    val rows = input.collect()
+    reset.map(java.nio.file.Paths.get(_)).filter(java.nio.file.Files.exists(_))
+      .foreach(java.nio.file.Files.walk(_).sorted(java.util.Comparator.reverseOrder())
+        .forEach(f => { java.nio.file.Files.delete(f); () }))
     if (rows.isEmpty) // no batch ever writes the sink — don't read a void path
-      return spark.emptyDataset[GateDoc].toDF()
-        .select(col("gate_doc_id").as(id), col("gate_text").as(textCol))
-    val root = java.nio.file.Paths.get(workDir)
-    // fresh sink + checkpoint per replay: a stale checkpoint would try to
-    // resume offsets that this new MemoryStream never had
-    def clear(p: java.nio.file.Path): Unit =
-      if (java.nio.file.Files.exists(p))
-        java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-          .forEach(f => { java.nio.file.Files.delete(f); () })
-    clear(root)
-    val in = MemoryStream[GateDoc]
-    // the probe's verify stage reads batch and corpus by the SAME column
-    // names (as [[nearDedupedIngest]] requires of its caller)
-    val gateCorpus = corpus.select(col(id).as("gate_doc_id"),
-      col(textCol).as("gate_text"))
-    val q = start(in.toDF(), gateCorpus, s"$workDir/out", s"$workDir/ckpt")
-    try {
-      (0 until nBatches).foreach { b =>
-        val batch = rows.filter(r =>
-          math.floorMod(r.gate_doc_id, nBatches.toLong) == b.toLong)
-        if (batch.nonEmpty) { in.addData(batch.toSeq: _*); q.processAllAvailable() }
-      }
+      return spark.createDataFrame(java.util.Collections.emptyList[Row](),
+        input.schema)
+    val in = MemoryStream[Row](Encoders.row(input.schema), spark.sqlContext)
+    val q = start(in.toDF(), s"$workDir/out", s"$workDir/ckpt")
+    val byBatch = rows.groupBy(r =>
+      if (r.isNullAt(0)) 0L else math.floorMod(r.getLong(0), nBatches.toLong))
+    try (0L until nBatches.toLong).flatMap(byBatch.get).foreach { batch =>
+      in.addData(batch.toSeq: _*)
+      q.processAllAvailable()
     } finally q.stop()
-    spark.read.parquet(s"$workDir/out")
-      .select(col("gate_doc_id").as(id), col("gate_text").as(textCol))
+    spark.read.parquet(s"$workDir/out").select(input.columns.map(col).toSeq: _*)
   }
 }

@@ -27,6 +27,17 @@ class DedupSpec extends SparkSpec {
     assert(kept.toSeq == Seq(1L, 3L, 4L, 5L))
   }
 
+  test("dropExactDupes keeps a null-id row whose text no non-null id shares") {
+    // min_by skips null orderings: ordered by the bare id, the all-null-id
+    // group of 'lonely text' came back as a row of nulls
+    val df = Seq((None, "lonely text"), (Some(5L), "dup text"), (None, "dup text"))
+      .toDF("doc_id", "text")
+    val kept = Dedup.dropExactDupes(df, "doc_id", "text")
+      .as[(Option[Long], Option[String])].collect().toSeq.sortBy(_.toString)
+    assert(kept == Seq((None, Some("lonely text")), (Some(5L), Some("dup text"))),
+      s"got $kept")
+  }
+
   test("minhash near-dupes finds the near pair, not unrelated docs") {
     val pairs = Dedup.minhashNearDupes(docs, "doc_id", "text",
         threshold = 0.5, bands = 16, rowsPerBand = 2)

@@ -12,6 +12,7 @@ import org.apache.spark.sql.execution.SparkPlanInfo
 import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
 case class Doc(doc_id: Long, ts: Timestamp, text: String)
 
@@ -58,21 +59,15 @@ class DocStreamSpec extends SparkSpec {
       "a trigger-session conf change leaked to the parent session")
   }
 
-  test("self-maintaining near-dup gate: triggers run with AQE off, parent session keeps AQE") {
-    // the tuning above, checked through a real gate: the trigger's batch
-    // plans must be planned without AQE while the parent session, which
-    // has AQE on, is left as it was. The same trigger also pins the
-    // gate's shape: the probe's verify runs in exactly one execution, no
-    // execution reads a cached relation, and a null-id row survives to
-    // the sink without appending band rows.
-    implicit val sqlCtx = spark.sqlContext
-    val corpus = Seq(
-      (10L, "the quick brown fox jumps over the lazy dog near the river bank today"))
-      .toDF("doc_id", "text")
-    spark.sql("DROP TABLE IF EXISTS aqe_gate_bands")
-    Dedup.writeBandTable(corpus, "doc_id", "text", "aqe_gate_bands",
-      buckets = 4, bands = 16, rowsPerBand = 2)
-    val work = java.nio.file.Files.createTempDirectory("graft-aqe-gate").toString
+  /** Starts a gate with AQE on in the parent session, feeds it, and
+    * returns every SQL execution's plan nodes after pinning the shape all
+    * three self-maintaining gates share: the trigger shuffled, yet no plan
+    * ran with AQE; the parent session kept AQE on; and no execution reads
+    * a cached relation (a persisted survivors frame would put an
+    * InMemoryTableScan, and the probe below it, into both writes).
+    */
+  private def triggerExecutions(start: => StreamingQuery)(
+      feed: => Unit): Seq[Seq[SparkPlanInfo]] = {
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlanInfo]()
     val adaptiveUpdates = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new SparkListener {
@@ -85,19 +80,12 @@ class DocStreamSpec extends SparkSpec {
     }
     val before = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
-    val in = MemoryStream[(Option[Long], String)]
     var parentAfter: String = null
     try {
-      val q = DocStream.selfMaintainingNearDedupedIngest(
-        in.toDF().toDF("doc_id", "text"), corpus, "aqe_gate_bands",
-        "doc_id", "text", s"$work/out", s"$work/ckpt",
-        threshold = 0.5, bands = 16, rowsPerBand = 2)
+      val q = start
       spark.sparkContext.addSparkListener(listener)
       try {
-        in.addData(
-          (Some(100L), "the quick brown fox jumps over the lazy dog near the river bank today extra"),
-          (Some(200L), "a planted novel document describing underwater cave systems"),
-          (None, "an id-less document about alpine glaciers and their retreat"))
+        feed
         q.processAllAvailable()
         parentAfter = spark.conf.get("spark.sql.adaptive.enabled")
       } finally {
@@ -105,6 +93,50 @@ class DocStreamSpec extends SparkSpec {
         ListenerBusAccess.drain(spark.sparkContext)
         spark.sparkContext.removeSparkListener(listener)
       }
+    } finally spark.conf.set("spark.sql.adaptive.enabled", before)
+    def nodes(p: SparkPlanInfo): Seq[SparkPlanInfo] = p +: p.children.flatMap(nodes)
+    val perExec = plans.asScala.toSeq.map(nodes)
+    val names = perExec.flatten.map(_.nodeName)
+    assert(names.exists(_.contains("Exchange")), names.distinct.mkString(", "))
+    assert(!names.contains("AdaptiveSparkPlan") && adaptiveUpdates.get == 0,
+      s"a trigger ran with AQE: ${names.distinct.mkString(", ")}")
+    assert(parentAfter == "true", "the gate changed the parent session's AQE")
+    assert(!names.contains("InMemoryTableScan"),
+      "a trigger execution reads a cached relation")
+    perExec
+  }
+
+  /** How many executions evaluate a node whose description contains `probe`. */
+  private def probing(perExec: Seq[Seq[SparkPlanInfo]], probe: String): Int =
+    perExec.count(_.exists(_.simpleString.contains(probe)))
+
+  test("self-maintaining near-dup gate: triggers run with AQE off, parent session keeps AQE") {
+    // the tuning above, checked through a real gate: the trigger's batch
+    // plans are planned without AQE while the parent session, which has
+    // AQE on, is left as it was. The probe's verify runs in exactly one
+    // execution, and a null-id row survives to the sink without appending
+    // band rows.
+    implicit val sqlCtx = spark.sqlContext
+    val corpus = Seq(
+      (10L, "the quick brown fox jumps over the lazy dog near the river bank today"))
+      .toDF("doc_id", "text")
+    spark.sql("DROP TABLE IF EXISTS aqe_gate_bands")
+    Dedup.writeBandTable(corpus, "doc_id", "text", "aqe_gate_bands",
+      buckets = 4, bands = 16, rowsPerBand = 2)
+    val work = java.nio.file.Files.createTempDirectory("graft-aqe-gate").toString
+    val in = MemoryStream[(Option[Long], String)]
+    try {
+      val perExec = triggerExecutions(DocStream.selfMaintainingNearDedupedIngest(
+          in.toDF().toDF("doc_id", "text"), corpus, "aqe_gate_bands",
+          "doc_id", "text", s"$work/out", s"$work/ckpt",
+          threshold = 0.5, bands = 16, rowsPerBand = 2)) {
+        in.addData(
+          (Some(100L), "the quick brown fox jumps over the lazy dog near the river bank today extra"),
+          (Some(200L), "a planted novel document describing underwater cave systems"),
+          (None, "an id-less document about alpine glaciers and their retreat"))
+      }
+      val verifying = probing(perExec, "shinglejaccard")
+      assert(verifying == 1, s"$verifying executions evaluate the jaccard verify")
       val kept = spark.read.parquet(s"$work/out").select("doc_id")
         .as[Option[Long]].collect().toSeq.sorted
       assert(kept == Seq(None, Some(200L)), s"gate output: $kept")
@@ -115,24 +147,67 @@ class DocStreamSpec extends SparkSpec {
         .as[Option[Long]].collect().toSeq.sorted
       assert(banded == Seq.fill(16)(Some(10L)) ++ Seq.fill(16)(Some(200L)),
         s"band table docs: $banded")
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", before)
-      spark.sql("DROP TABLE IF EXISTS aqe_gate_bands")
+    } finally spark.sql("DROP TABLE IF EXISTS aqe_gate_bands")
+  }
+
+  test("self-maintaining EXACT gate: one probe per trigger, AQE off, no cache; null ids keep by text") {
+    implicit val sqlCtx = spark.sqlContext
+    spark.sql("DROP TABLE IF EXISTS aqe_gate_fps")
+    Dedup.writeFingerprintTable(Seq((10L, "historical text alpha")).toDF("doc_id", "text"),
+      "text", "aqe_gate_fps", buckets = 4)
+    val work = java.nio.file.Files.createTempDirectory("graft-aqe-exact").toString
+    val in = MemoryStream[(Option[Long], String)]
+    try {
+      val perExec = triggerExecutions(DocStream.selfMaintainingDedupedIngest(
+          in.toDF().toDF("doc_id", "text"), "aqe_gate_fps", "doc_id", "text",
+          s"$work/out", s"$work/ckpt")) {
+        in.addData(
+          (Some(100L), "historical text alpha"), // corpus copy -> drops
+          (None, "historical text alpha"),       // corpus copy, null id -> drops
+          (None, "lonely id-less text"),         // null id, unique text -> kept
+          (Some(200L), "novel text beta"),       // kept over its null-id copy
+          (None, "novel text beta"))
+      }
+      // keep-lowest-id is the probe's min_by; the append has none
+      val probes = probing(perExec, "min_by")
+      assert(probes == 1, s"$probes executions run the exact probe")
+      val kept = spark.read.parquet(s"$work/out").select("doc_id", "text")
+        .as[(Option[Long], String)].collect().toSeq.sortBy(_.toString)
+      assert(kept == Seq((None, "lonely id-less text"), (Some(200L), "novel text beta")),
+        s"gate output: $kept")
+      val fps = spark.table("aqe_gate_fps").select("__fp").as[Long].collect().toSeq.sorted
+      val expected = Seq("historical text alpha", "lonely id-less text", "novel text beta")
+        .toDF("text").select(graft.functions.TextFunctions.fingerprint64(col("text")))
+        .as[Long].collect().toSeq.sorted
+      assert(fps == expected, s"fingerprint table: $fps")
+    } finally spark.sql("DROP TABLE IF EXISTS aqe_gate_fps")
+  }
+
+  test("self-maintaining SEMANTIC gate: one probe per trigger, AQE off, no cache; null ids pass") {
+    implicit val sqlCtx = spark.sqlContext
+    import graft.operators.Similarity
+    val cents = Seq(Seq(1.0, 0.0), Seq(0.0, 1.0))
+    val work = java.nio.file.Files.createTempDirectory("graft-aqe-sem").toString
+    Similarity.writeSemCellSegment(Seq((10L, Seq(1.0f, 0.0f))).toDF("vec_id", "embedding"),
+      "vec_id", cents, s"$work/cells", "corpus")
+    val in = MemoryStream[(Option[Long], Seq[Float])]
+    val perExec = triggerExecutions(DocStream.selfMaintainingSemGatedIngest(
+        in.toDF().toDF("vec_id", "embedding"), s"$work/cells", "vec_id", cents,
+        threshold = 0.7, s"$work/out", s"$work/ckpt")) {
+      in.addData(
+        (Some(100L), Seq(0.8f, 0.6f)), // cos 0.8 vs the corpus -> drops
+        (Some(200L), Seq(0.0f, 1.0f)), // novel -> kept
+        (None, Seq(1.0f, 0.0f)))       // the corpus vector, null id -> passes
     }
-    def nodes(p: SparkPlanInfo): Seq[SparkPlanInfo] = p +: p.children.flatMap(nodes)
-    val perExec = plans.asScala.toSeq.map(nodes)
-    val names = perExec.flatten.map(_.nodeName)
-    // the trigger did shuffle, so AQE would have wrapped its plans
-    assert(names.exists(_.contains("Exchange")), names.distinct.mkString(", "))
-    assert(!names.contains("AdaptiveSparkPlan") && adaptiveUpdates.get == 0,
-      s"a trigger ran with AQE: ${names.distinct.mkString(", ")}")
-    assert(parentAfter == "true", "the gate changed the parent session's AQE")
-    // one probe per trigger: a persisted survivors frame would put an
-    // InMemoryTableScan (and the verify below it) into both writes
-    assert(!names.contains("InMemoryTableScan"),
-      "a trigger execution reads a cached relation")
-    val verifying = perExec.count(_.exists(_.simpleString.contains("shinglejaccard")))
-    assert(verifying == 1, s"$verifying executions evaluate the jaccard verify")
+    // the probe alone reads the state's embeddings (as __ec)
+    val probes = probing(perExec, "__ec")
+    assert(probes == 1, s"$probes executions run the semantic probe")
+    val kept = spark.read.parquet(s"$work/out").select("vec_id")
+      .as[Option[Long]].collect().toSeq.sorted
+    assert(kept == Seq(None, Some(200L)), s"gate output: $kept")
+    val seg = spark.read.parquet(s"$work/cells").where(col("seg") === "b0")
+      .select("vec_id").as[Option[Long]].collect().toSeq.sorted
+    assert(seg == Seq(None, Some(200L)), s"appended segment: $seg")
   }
 
   test("streaming ingest gate: corpus dups and stream re-sends drop, fresh docs pass") {
