@@ -1,5 +1,7 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Benchmark main: measures every SparkEntry query at the given scale factor,
   * then the same oracle SQL in DuckDB (via tools/duckdb_bench.py), with the
@@ -50,7 +52,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "2").toInt.max(1)
     // stream-count knee moves with suite size and tail shape: 12 beat 8/16
     // at 94 queries (r6), 16 beat 12/20 at 101 (r7), 20 beat 16/24 at 103
@@ -160,13 +163,24 @@ object Bench {
     val selected = SparkEntry.queries.filter { case (n, _) =>
       only.forall(_.exists(n.startsWith))
     }
+    // codegen compiles and compile seconds of each sequential run, in run
+    // order across attempts: a query whose later runs still compile is not
+    // reusing its generated classes
+    val codegen = scala.collection.mutable.Map.empty[String, Vector[(Long, Double)]]
+    def compiled(): (Long, Long) =
+      (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
     // pass 1: sequential per-query latency, best of `runs`
     def seqOnce(tag: String): Map[String, Double] = phase(s"seq$tag") {
       selected.map { case (name, fn) =>
         val times = (1 to runs).map { _ =>
+          val (n0, ns0) = compiled()
           val t0 = System.nanoTime()
           try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-          (System.nanoTime() - t0) / 1e9
+          val t = (System.nanoTime() - t0) / 1e9
+          val (n1, ns1) = compiled()
+          codegen(name) = codegen.getOrElse(name, Vector.empty) :+
+            (n1 - n0, (ns1 - ns0) / 1e9)
+          t
         }
         name -> times.min
       }.toMap
@@ -266,8 +280,6 @@ object Bench {
       // convention, which BenchSpec pins
       def dispersion: Double =
         if (walls.size < 2 || walls.min <= 0) -1.0 else walls.max / walls.min
-      def worstCanary: Double =
-        math.max(cPreSeq, math.max(cPreWall, cPostWall))
       def clean: Boolean = Seq(cPreSeq, cPreWall, cPostWall)
         .forall(c => c >= 0 && c <= canaryBar)
       // unknown dispersion cannot trigger a retry (there is nothing to
@@ -358,7 +370,7 @@ object Bench {
     // experiments must not clobber the committed full-suite artifact
     if (only.isEmpty)
       writeDetail(results, sparkWall, duckdb, streams, sfDir, phases.toMap,
-        wallRuns)
+        wallRuns, codegen.toMap)
     // THREE printed lines, compact-full-compact: the driver records only
     // the last ~2000 chars of the run's output and json.loads the lines it
     // finds there. At 159 queries the full line alone is ~2.1 KB, so its
@@ -513,7 +525,8 @@ object Bench {
                           duckdb: Map[String, Double], streams: Int,
                           sfDir: String,
                           phases: Map[String, Double] = Map.empty,
-                          wallRuns: Int = 1): Unit =
+                          wallRuns: Int = 1,
+                          codegen: Map[String, Seq[(Long, Double)]] = Map.empty): Unit =
     try {
       def obj(m: Map[String, Double]): String = m.toSeq.sortBy(_._1)
         .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
@@ -529,8 +542,18 @@ object Bench {
           s""""fixture_setup":${duckdb.getOrElse("_fixture_setup", -1.0)},""" +
           s""""override_mismatch":${duckdb.getOrElse("_override_mismatch", -1.0)},""" +
           s""""phases":${obj(phases)},""" +
+          s""""codegen":${codegenJson(codegen)},""" +
           s""""sf":"$sfDir"}""" + "\n")
     } catch { case _: Throwable => } // detail is best-effort; the line is the contract
+
+  /** `{"<query>":{"compiles":[n,...],"compile_s":[s,...]},...}`: each
+    * sequential run's codegen compile count and compile seconds, in order.
+    */
+  private[graft] def codegenJson(codegen: Map[String, Seq[(Long, Double)]]): String =
+    codegen.toSeq.sortBy(_._1).map { case (q, runs) =>
+      "\"" + q + "\":{\"compiles\":" + runs.map(_._1).mkString("[", ",", "]") +
+        ",\"compile_s\":" + runs.map(_._2).mkString("[", ",", "]") + "}"
+    }.mkString("{", ",", "}")
 
   /** Per-query DuckDB seconds (+ reserved throughput keys) for every
     * oracle-backed query, or empty when python3/duckdb is unavailable (the

@@ -27,7 +27,8 @@ object Plans {
     val only: Option[Set[String]] =
       if (args.length >= 3) Some(args(2).split(',').toSet) else None
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val shufParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "2")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

@@ -36,9 +36,6 @@ object TextFunctions {
   def typeTokenRatio(text: Column): Column =
     distinctTokenCount(text).cast("double") / tokenCount(text)
 
-  def meanTokenLength(text: Column): Column =
-    length(regexp_replace(trim(text), "\\s+", "")).cast("double") / tokenCount(text)
-
   /** Fraction of tokens that are in `markers` (e.g. stopwords). */
   def markerRatio(text: Column, markers: Seq[String]): Column = {
     val m = array(markers.map(lit): _*)

@@ -485,11 +485,6 @@ object NgramLm {
       round(exp(-col("lm_score").cast("double") /
         (lit(1e6) * col("n_bigrams").cast("double"))), 6))
 
-  /** fit + score in one call (self-scoring a corpus, the common audit). */
-  def selfScore(corpus: DataFrame, id: Column, text: Column,
-                uniCap: Int = 65536, biCap: Int = 1 << 20): DataFrame =
-    scoreDocs(corpus, id, text, fit(corpus, text, uniCap, biCap))
-
   /** Perplexity gate — the CCNet filter itself: keep documents whose
     * perplexity against `model` (typically fitted on a clean reference
     * corpus) is at most `maxPpl`. Documents with fewer than two tokens

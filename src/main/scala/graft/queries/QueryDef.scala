@@ -27,6 +27,4 @@ object QueryDef {
   def dynamicSql(name: String)(oracle: (SparkSession, String) => String)(
       fn: (SparkSession, String) => DataFrame): QueryDef =
     QueryDef(name, fn, None, Some(oracle))
-  def rowsOnly(name: String)(fn: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, fn, None)
 }

@@ -163,6 +163,13 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.parseRecordSpark("""{"duckdb":{"q01_x":0.9}}""").isEmpty)
   }
 
+  test("codegenJson lists each sequential run's compiles in order") {
+    val js = Bench.codegenJson(Map("q02_y" -> Seq((0L, 0.0)),
+      "q01_x" -> Seq((12L, 0.25), (0L, 0.0))))
+    assert(js == """{"q01_x":{"compiles":[12,0],"compile_s":[0.25,0.0]},""" +
+      """"q02_y":{"compiles":[0],"compile_s":[0.0]}}""")
+  }
+
   test("JsonDump.q escapes quotes, backslashes, and ALL control chars") {
     assert(JsonDump.q("""a"b\c""") == "\"a\\\"b\\\\c\"")
     assert(JsonDump.q("l1\nl2\tt\rr") == "\"l1\\nl2\\tt\\rr\"")
