@@ -77,7 +77,7 @@ object Bench {
     // scale partitions are sized by data; this is the same sizing
     // discipline applied to a small input.
     val shufParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "2")
-    val builder = SparkSession.builder()
+    val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", shufParts)
       .config("spark.sql.extensions", "graft.GraftExtensions")
@@ -89,12 +89,7 @@ object Bench {
       // wall variance run-to-run); FAIR round-robins tasks across the
       // concurrent jobs so streams actually overlap
       .config("spark.scheduler.mode", "FAIR")
-    // extra session conf via SPARK_GRAFT_CONF="k=v;k=v" (experiments)
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').filter(_.contains("="))
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2); builder.config(k, v)
-      })
-    val spark = builder.getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // phase walls (warmup/seq/each wall pass) + host canaries AROUND the
     // Spark passes: the DuckDB-side canary certifies only DuckDB's window,

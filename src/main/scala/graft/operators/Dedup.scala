@@ -253,24 +253,13 @@ object Dedup {
         graft.expressions.HashSketchExpressions.minhashSig(
           TextFunctions.shingles(col("__t"), shingleN), numHashes).as("sig"))
 
-  /** MinHash-LSH candidate pairs: band the signature (`bands` × `rowsPerBand`
-    * = numHashes), bucket-join on (band index, band hash), emit distinct
-    * (id_a < id_b) pairs. Probability a pair with Jaccard j collides:
-    * 1-(1-j^r)^b — tune r,b for the target threshold (~(1/b)^(1/r)).
+  /** (doc, band, band-hash) keys — the LSH bucket table for one corpus.
+    * The streaming gate derives a micro-batch's band rows here once and
+    * feeds the same frame to [[probeBandTable]] and [[appendBandRows]].
     */
-  /** [[bandedKeys]] for the streaming gate, which derives a micro-batch's
-    * band rows once and feeds the same frame to [[probeBandTable]] and
-    * [[appendBandRows]].
-    */
-  private[graft] def bandedBatchKeys(df: DataFrame, id: String, text: String,
-                                     bands: Int, rowsPerBand: Int,
-                                     shingleN: Int): DataFrame =
-    bandedKeys(df, id, text, bands, rowsPerBand, shingleN)
-
-  /** (doc, band, band-hash) keys — the LSH bucket table for one corpus. */
-  private def bandedKeys(df: DataFrame, id: String, text: String,
-                         bands: Int, rowsPerBand: Int,
-                         shingleN: Int): DataFrame = {
+  private[graft] def bandedKeys(df: DataFrame, id: String, text: String,
+                                bands: Int, rowsPerBand: Int,
+                                shingleN: Int): DataFrame = {
     val sig = minhashSignatures(df, id, text, bands * rowsPerBand, shingleN)
     sig.select(col("doc"),
         explode(array((0 until bands).map { b =>
@@ -281,6 +270,11 @@ object Dedup {
       .select(col("doc"), col("bk.band"), col("bk.bh"))
   }
 
+  /** MinHash-LSH candidate pairs: band the signature (`bands` × `rowsPerBand`
+    * = numHashes), bucket-join on (band index, band hash), emit distinct
+    * (id_a < id_b) pairs. Probability a pair with Jaccard j collides:
+    * 1-(1-j^r)^b — tune r,b for the target threshold (~(1/b)^(1/r)).
+    */
   def minhashCandidates(df: DataFrame, id: String, text: String,
                         bands: Int = 8, rowsPerBand: Int = 4,
                         shingleN: Int = 3): DataFrame =
@@ -658,12 +652,6 @@ object Dedup {
     spark.catalog.refreshTable(table)
   }
 
-  /** [[nearDupesAgainst]] probing a PERSISTED band table (from
-    * [[writeBandTable]]) instead of re-banding the corpus: only the batch
-    * is scanned and banded per ingest; the corpus side is a bucketed read
-    * with no shuffle. `corpus` supplies doc text for the verify stage
-    * only (joined by candidate id — prune it to (id, text)).
-    */
   /** Refuse to probe `bandTable` with a different LSH geometry than it was
     * written with (recorded by [[writeBandTable]] as table properties):
     * mismatched keys silently miss near-dups, they don't error. Called once
@@ -700,6 +688,12 @@ object Dedup {
     requireMatch("shingleN", shingleN)
   }
 
+  /** [[nearDupesAgainst]] probing a PERSISTED band table (from
+    * [[writeBandTable]]) instead of re-banding the corpus: only the batch
+    * is scanned and banded per ingest; the corpus side is a bucketed read
+    * with no shuffle. `corpus` supplies doc text for the verify stage
+    * only (joined by candidate id — prune it to (id, text)).
+    */
   def nearDupesAgainstTable(batch: DataFrame, corpus: DataFrame,
                             bandTable: String, id: String, text: String,
                             threshold: Double = 0.8, bands: Int = 8,
@@ -739,224 +733,13 @@ object Dedup {
       threshold: Double, shingleN: Int,
       excludeCorpusDocs: Option[DataFrame] = None): DataFrame =
     verifyJaccardKept(
-      bandTableCandidates(batchBands, bandTable, id, excludeCorpusDocs),
+      joinBandCandidates(batchBands, bandTable, id, excludeCorpusDocs),
       batch, corpus, id, text, shingleN, threshold)
 
-  /** Trickle-batch crossover knobs for [[pointReadBandCandidates]] —
-    * set from MEASUREMENT: a forced point read vs the streaming candidate
-    * stage on the same 50-doc batch, at the 1× and 1000× gate fixtures.
-    * This scaladoc is that A/B's only record (BENCH_1000x.json keeps the
-    * gate's probe, append and compaction rows at 1000×, not this A/B),
-    * and it refutes the obvious intuition, so it is recorded here:
-    *
-    * Saturation math (PERF.md gate_probe contract): a batch carrying K
-    * uniformly-hashed band keys touches an expected B·(1−(1−1/B)^K) of a
-    * B-bucket state table, so FILE pruning only bites when K ≪ B. But
-    * file pruning is not the binding constraint — PAGE pruning is, and
-    * it never engages: bucket assignment is murmur3(bh) mod B (not a
-    * range split), so every bucket file's sorted bh column still spans
-    * the full 64-bit space and every page's [min,max] intersects any
-    * multi-key probe set. The driver therefore decodes every pruned
-    * byte, single-machine, against an executor-parallel vectorized scan
-    * on the other path: at the 1000× gate fixture (40M state rows,
-    * ~800 MB) the forced point read cost 11.3 s vs 2.4 s for the
-    * streaming candidate stage on the SAME 50-doc batch (a full state
-    * scan alone is 0.59 s on 32 cores); even at the 1× fixture (~1 MB
-    * state) the point read read 0.97 s vs 0.64 s — its per-file opens
-    * and the exclusion-collect job outweigh the decode saving at
-    * MB-scale too. The point read's genuine regime is KB-scale or
-    * freshly-compacted state, where it answers in one driver read with
-    * ZERO Spark jobs against the state (the readStatsDfMap latency
-    * property) — hence the BYTE gate below (default 256 KB, both
-    * crossover points measured above it; a per-call cap, see
-    * [[pointReadBandCandidates]]), not a row/bucket heuristic.
-    * The bucket floor keeps fixture-sized tables (tests and sf oracles
-    * use 4–8 buckets with batches of hundreds of docs) on the join
-    * paths their plan pins certify.
-    */
-  private[graft] val PointReadKeysPerBucket = 16
-  private[graft] val PointReadMinBuckets = 16
-  private[graft] val PointReadMaxPlanBytes = 1L << 20
-  private[graft] val PointReadMaxStateBytes = 1L << 18
-
-  /** The candidate stage served by a DRIVER-DIRECT point read of the band
-    * table's parquet files (the [[Retrieval.readStatsDfMap]] pattern):
-    * zero Spark jobs against the state table — bucket files pruned to
-    * the batch keys' buckets, a bh record filter inside each file
-    * letting row-group stats/column-index pages skip the rest (files are
-    * written `sortBy("bh")`), and the (band, bh) match + exclusion +
-    * pair dedup done on the ≤output-sized driver rows. Returns None
-    * (fall back to the join shapes) unless the batch is a genuine
-    * trickle: bigint doc ids, a bucketed table with ≥
-    * [[PointReadMinBuckets]] buckets, batch band rows under
-    * [[PointReadMaxPlanBytes]] by plan stats, distinct bh count ≤
-    * [[PointReadKeysPerBucket]]·buckets, any exclusion frame itself
-    * collectable, and — the measured crossover, see the knob scaladoc —
-    * bucket-pruned file bytes ≤ `maxStateBytes` (default
-    * [[PointReadMaxStateBytes]]; the scale harness passes `Long.MaxValue`
-    * to time the point read's raw cost). Candidate sets are identical
-    * to the join shapes by construction (exact (band, bh)
-    * equality, same exclusion, same pair dedup) — spec-pinned in
-    * DedupSpec.
-    */
-  private[graft] def pointReadBandCandidates(
-      batchBands: DataFrame, bandTable: String, id: String,
-      excludeCorpusDocs: Option[DataFrame],
-      maxStateBytes: Long = PointReadMaxStateBytes): Option[DataFrame] = {
-    val spark = batchBands.sparkSession
-    import org.apache.spark.sql.types.{IntegerType, LongType}
-    val shapeOk =
-      batchBands.schema.fieldNames.toSeq == Seq("doc", "band", "bh") &&
-        batchBands.schema("doc").dataType == LongType &&
-        batchBands.schema("band").dataType == IntegerType &&
-        batchBands.schema("bh").dataType == LongType
-    val catOpt =
-      if (!shapeOk) None
-      else scala.util.Try(spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(bandTable))).toOption
-    val eligible = catOpt.flatMap { cat =>
-      val buckets = cat.bucketSpec.map(_.numBuckets).getOrElse(0)
-      // the prune below assigns files by murmur3(bh) mod buckets, so it is
-      // only sound when the writer bucketed BY bh — a table bucketed by
-      // any other column with enough buckets would silently DROP matching
-      // files (missed near-dups); and the driver reader speaks parquet
-      // only (r18 review finding)
-      val layoutOk =
-        cat.bucketSpec.exists(_.bucketColumnNames == Seq("bh")) &&
-          cat.provider.exists(_.equalsIgnoreCase("parquet"))
-      def planSmall(df: DataFrame): Boolean = scala.util.Try(
-        df.queryExecution.optimizedPlan.stats.sizeInBytes <=
-          PointReadMaxPlanBytes).getOrElse(false)
-      // the catalog tests first: each plan-size test is an optimizer pass
-      if (layoutOk && buckets >= PointReadMinBuckets &&
-          excludeCorpusDocs.forall(ex =>
-            ex.schema(id).dataType == LongType && planSmall(ex)) &&
-          planSmall(batchBands))
-        Some((cat, buckets))
-      else None
-    }
-    eligible.flatMap { case (cat, buckets) =>
-      // one tiny collect of the batch's own band rows (size-gated above);
-      // the state table costs NO job at all
-      val rows = batchBands.collect().filter(r =>
-        !r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2))
-      val byBh = rows.groupBy(_.getLong(2))
-      val conf = spark.sparkContext.hadoopConfiguration
-      val loc = new org.apache.hadoop.fs.Path(cat.location)
-      val fs = loc.getFileSystem(conf)
-      // bucket id via the writer's own partitionIdExpression
-      // (Murmur3 seed 42, pmod) — mirror of Retrieval.sparkBucketId
-      // for the bigint key
-      def bucketId(bh: Long): Int = {
-        val h = org.apache.spark.sql.catalyst.expressions.Murmur3Hash(
-          Seq(org.apache.spark.sql.catalyst.expressions.Literal(
-            bh, LongType)), 42).eval(null).asInstanceOf[Int]
-        java.lang.Math.floorMod(h, buckets)
-      }
-      val wanted = byBh.keySet.map(bucketId)
-      val bucketRe = """.*_(\d+)(?:\..*)?$""".r
-      // an unparseable file name stays in the read set — the prune is
-      // an optimization, never a correctness gate (readStatsDfMap's
-      // discipline)
-      val fileStatuses = fs.listStatus(loc)
-        .filter(f => f.isFile && { val nm = f.getPath.getName
-          !nm.startsWith("_") && !nm.startsWith(".") })
-        .filter(_.getPath.getName match {
-          case bucketRe(b) => wanted.contains(b.toInt)
-          case _ => true
-        })
-      // the BYTE gate is the real crossover, measured not guessed
-      // ([[PointReadMaxStateBytes]] scaladoc): hash-bucketed band files
-      // each span the full 64-bit bh range (bucket = murmur3(bh) mod B,
-      // not a range), so parquet page/row-group pruning cannot skip
-      // anything for a multi-key probe and the driver decodes every
-      // pruned byte — fine while that is a few MB, hopeless against the
-      // executor-parallel scan once it is hundreds (1000× gate fixture:
-      // 11.3 s driver vs 2.4 s streaming for the SAME 50-doc batch).
-      val bytesOk = fileStatuses.iterator.map(_.getLen).sum <= maxStateBytes
-      if (byBh.size > PointReadKeysPerBucket.toLong * buckets || !bytesOk) None
-      else {
-        val excluded: Set[Long] = excludeCorpusDocs.fold(Set.empty[Long])(
-          _.select(col(id)).collect().iterator
-            .filterNot(_.isNullAt(0)).map(_.getLong(0)).toSet)
-        val pairs = scala.collection.mutable.LinkedHashSet.empty[(Long, Long)]
-        if (byBh.nonEmpty) {
-          val files = fileStatuses.map(_.getPath)
-          import org.apache.parquet.filter2.predicate.FilterApi
-          // native set-membership predicate, NOT an OR tree of eq leaves:
-          // `in` evaluates one hash-set probe per record and prunes
-          // row-groups/pages from their [min,max] stats in one pass,
-          // where a several-hundred-leaf OR tree re-walks every leaf per
-          // record AND per pruning decision (measured 8 s vs sub-second
-          // on the 10x gate fixture for ~400 keys)
-          val keySet = new java.util.HashSet[java.lang.Long]()
-          byBh.keysIterator.foreach(k => keySet.add(java.lang.Long.valueOf(k)))
-          val pred = FilterApi.in(FilterApi.longColumn("bh"), keySet)
-          // files read in PARALLEL on the driver: an uncompacted bucketed
-          // table holds one file per (write task × bucket) — 1024 at the
-          // 32×32 scale shape — and the ~8 ms footer/schema open cost per
-          // file, serial, was the entire 9 s read (measured 10×); the work
-          // is I/O-bound and embarrassingly file-parallel
-          def readFile(p: org.apache.hadoop.fs.Path): Seq[(Long, Long)] = {
-            val local = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-            val rd = org.apache.parquet.hadoop.ParquetReader
-              .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(), p)
-              .withConf(conf)
-              .withFilter(org.apache.parquet.filter2.compat.FilterCompat.get(pred))
-              .build()
-            try {
-              var g = rd.read()
-              while (g != null) {
-                val stateDoc = g.getLong("doc", 0)
-                val stateBand = g.getInteger("band", 0)
-                val stateBh = g.getLong("bh", 0)
-                if (!excluded.contains(stateDoc))
-                  byBh.getOrElse(stateBh, Array.empty[org.apache.spark.sql.Row])
-                    .foreach { br =>
-                      if (br.getInt(1) == stateBand)
-                        local += ((br.getLong(0), stateDoc))
-                    }
-                g = rd.read()
-              }
-            } finally rd.close()
-            local.toSeq
-          }
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(
-            math.min(16, math.max(1, files.length)))
-          try {
-            import scala.jdk.CollectionConverters._
-            val tasks = files.map { p =>
-              (() => readFile(p)): java.util.concurrent.Callable[Seq[(Long, Long)]]
-            }
-            pool.invokeAll(tasks.toSeq.asJava).asScala
-              .foreach(f => pairs ++= f.get())
-          } finally pool.shutdown()
-        }
-        // sorted for a deterministic LocalRelation row order regardless of
-        // file read interleaving (the join shapes' outputs are unordered
-        // too, but determinism is the house bit-stability discipline)
-        Some(spark.createDataFrame(pairs.toSeq.sorted).toDF("doc_a", "doc_b"))
-      }
-    }
-  }
-
   /** The candidate stage of [[probeBandTable]] — everything except the
-    * jaccard verify — factored out so the scale harness's decomposition
-    * row times EXACTLY the probe's own candidate plan (no drift). THREE
-    * shapes: a trickle batch (keys ≪ buckets·cap — see the saturation
-    * scaladoc at [[PointReadKeysPerBucket]]) short-circuits to the
-    * driver-direct [[pointReadBandCandidates]]; otherwise the two
-    * [[joinBandCandidates]] shapes.
-    */
-  private[graft] def bandTableCandidates(
-      batchBands: DataFrame, bandTable: String, id: String,
-      excludeCorpusDocs: Option[DataFrame]): DataFrame =
-    pointReadBandCandidates(batchBands, bandTable, id, excludeCorpusDocs)
-      .getOrElse(joinBandCandidates(batchBands, bandTable, id,
-        excludeCorpusDocs))
-
-  /** The two JOIN shapes of [[bandTableCandidates]], picked by the
-    * planner's own broadcast test; same candidate set as the point read.
+    * jaccard verify — in two JOIN shapes, picked by the planner's own
+    * broadcast test; both emit the same candidate set (spec-pinned in
+    * DedupSpec).
     */
   private[graft] def joinBandCandidates(
       batchBands: DataFrame, bandTable: String, id: String,
@@ -965,7 +748,7 @@ object Dedup {
     // (1) MICRO-BATCH (band rows under the broadcast threshold — the
     // steady-state ingest/gate case): the batch's bands broadcast and
     // the state table STREAMS through the probe side (bucketed read, no
-    // exchange, no sort — plan-pinned by the scale harness), so the
+    // exchange, no sort — plan-pinned by DedupSpec), so the
     // per-batch cost is one hash probe per state row. Probe on ONE
     // fused BIGINT key instead of the composite (band, bh): a
     // single-long join key builds a LongHashedRelation where the
@@ -1040,8 +823,8 @@ object Dedup {
       // stable (doc_a, doc_b) column ORDER: the USING-column anti-join
       // above moves doc_b to the front of the schema, so without this
       // projection the output order depends on whether an exclusion
-      // frame was passed (and differs from the point-read shape) —
-      // positional consumers would silently read swapped pairs
+      // frame was passed — positional consumers would silently read
+      // swapped pairs
       .select(col("doc_a"), col("doc_b"))
   }
 

@@ -490,12 +490,6 @@ object Retrieval {
     * UTF-8 bytes, seed 42, then pmod), evaluated through the very
     * expression the writer uses so the two can never drift. Lets a
     * serve-time lookup prune to the key's bucket files without a job.
-    *
-    * KEEP IN SYNC: [[graft.operators.Dedup.pointReadBandCandidates]]
-    * carries this pattern's long-key twin (bucketId) plus the same
-    * bucket-file prune + driver parquet reader loop — a change to the
-    * file-name scheme, the unparseable-name-stays-in rule, or the hash
-    * recipe must land in both.
     */
   private[graft] def sparkBucketId(term: String, numBuckets: Int): Int = {
     val h = org.apache.spark.sql.catalyst.expressions.Murmur3Hash(

@@ -27,12 +27,6 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object DocStream {
 
-  /** Every this-many triggers, [[selfMaintainingNearDedupedIngest]]'s
-    * prior-survivor cache collapses its lazy per-partition union into one
-    * whole-sink scan, bounding plan growth on long streams.
-    */
-  private val PriorRelistEvery = 16
-
   /** `df` computed once, its rows held on the driver as a local relation:
     * later plans reuse the rows instead of recomputing them, and the
     * planner sizes them exactly (a foreachBatch micro-batch otherwise
@@ -264,19 +258,17 @@ object DocStream {
     * [[nearDedupedIngest]] it is state, but storage-resident and
     * bucket-local, never state-store state.
     *
-    * Long-stream scale note: within a run, prior survivors are carried as
-    * a lazy union of single-partition sink reads (one new directory per
-    * trigger — no O(N-batches) re-listing), read with the gate's known
-    * (id, text) schema so no schema-inference job runs per trigger; every
-    * [[PriorRelistEvery]] triggers, and after a restart, ONE whole-sink
-    * scan replaces the union, so the plan stays O(K) scans. A zero-survivor
-    * batch's partition holds no parquet file and reads empty — exactly
-    * correct, since nothing survived. At production stream lengths compact
-    * the sink periodically (rewrite the accumulated partitions into one
-    * corpus increment and swap it into `corpus`) — the gate's correctness
-    * only needs "corpus ∪ prior survivors", not the partitioned layout.
-    * The band-table side has no such growth cost (appends are bucket-local
-    * files behind one catalog table).
+    * Verify side: each trigger reads `corpus` ∪ ONE scan of the sink
+    * filtered to `batch < id`, with the gate's known (id, text, batch)
+    * schema, so no schema-inference job runs and the plan does not grow
+    * with the stream. The gate creates the sink directory at stream
+    * start, so the first trigger's scan reads it empty, as it does a
+    * zero-survivor batch's partition. The scan lists every sink partition
+    * per trigger: on long streams compact the sink periodically (rewrite
+    * the partitions into one corpus increment and swap it into `corpus`)
+    * — correctness only needs "corpus ∪ strictly-prior survivors", not
+    * the partitioned layout. The band table compacts in place with
+    * [[graft.operators.Dedup.compactBucketedTable]].
     */
   def selfMaintainingNearDedupedIngest(docs: DataFrame, corpus: DataFrame,
                                        bandTable: String, id: String,
@@ -285,31 +277,10 @@ object DocStream {
                                        threshold: Double = 0.8, bands: Int = 8,
                                        rowsPerBand: Int = 4,
                                        shingleN: Int = 3): StreamingQuery = {
-    Dedup.checkBandGeometry(docs.sparkSession, bandTable,
-      bands, rowsPerBand, shingleN)
-    // (survivors of every batch before n, n), carried across triggers.
-    // Lineage is parquet scans only (never a previous micro-batch's source
-    // plan, which would not be legal to hold across triggers).
-    var carried: Option[(DataFrame, Long)] = None
-    def prior(b: DataFrame, batchId: Long): DataFrame = {
-      val spark = b.sparkSession
-      val p = carried match {
-        case Some((df, n)) if n == batchId - 1 && batchId % PriorRelistEvery != 0 =>
-          try df.unionByName(spark.read.schema(b.select(col(id), col(textCol)).schema)
-            .parquet(s"$sinkPath/batch=$n"))
-          catch { case _: Exception => df } // no partition: nothing survived
-        case _ =>
-          // strictly prior partitions: a replayed batch can find its own
-          // partition's files without `_SUCCESS`, which its sink overwrite
-          // then deletes from under this listing
-          try spark.read.parquet(sinkPath).where(col("batch") < batchId)
-            .select(col(id), col(textCol))
-          catch { case _: Exception => // first batch: no sink yet
-            corpus.select(col(id), col(textCol)).limit(0) }
-      }
-      carried = Some((p, batchId))
-      p
-    }
+    val spark = docs.sparkSession
+    Dedup.checkBandGeometry(spark, bandTable, bands, rowsPerBand, shingleN)
+    val sink = new org.apache.hadoop.fs.Path(sinkPath)
+    sink.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(sink)
     selfMaintaining(docs, sinkPath, checkpointDir, ownStateExcluded = true) {
       (b, batchId) =>
         // sized exactly, the probe takes its micro-batch branch (broadcast
@@ -317,13 +288,20 @@ object DocStream {
         // exclusion broadcasts too; the bands carry every batch id
         // (`bands` rows each, nulls included), so their docs ARE the
         // batch's ids
-        lazy val bBands = localized(Dedup.bandedBatchKeys(b, id, textCol,
+        lazy val bBands = localized(Dedup.bandedKeys(b, id, textCol,
           bands, rowsPerBand, shingleN))
         new GateTrigger {
           def survivors: DataFrame = {
+            val idText = b.select(col(id), col(textCol)).schema
+            // strictly prior partitions: a replayed batch can find its own
+            // partition's files without `_SUCCESS`, which its sink overwrite
+            // then deletes
+            val prior = b.sparkSession.read.schema(idText.add("batch", "bigint"))
+              .parquet(sinkPath).where(col("batch") < batchId)
+              .select(col(id), col(textCol))
             // no distinct: the anti-join ignores duplicate and null matches
             val dupes = Dedup.probeBandTable(bBands, b,
-                corpus.select(col(id), col(textCol)).unionByName(prior(b, batchId)),
+                corpus.select(col(id), col(textCol)).unionByName(prior),
                 bandTable, id, textCol, threshold, shingleN,
                 excludeCorpusDocs = Some(bBands.select(col("doc").as(id))))
               .select(col("doc_a").as(id))

@@ -7,13 +7,14 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Keeps hidden switches out of the engine: every decision has one code
-  * path, so no main source may name a `spark.graft.*` session conf key or
-  * a `SPARK_GRAFT_PROBE_*` environment toggle (not even in a comment, where
+  * path, so no main source may name a `spark.graft.*` session conf key, a
+  * `SPARK_GRAFT_PROBE_*` environment toggle or the free-form
+  * `SPARK_GRAFT_CONF` session-conf injection (not even in a comment, where
   * it would document a switch that does not exist).
   */
 class NoKnobsSpec extends AnyFunSuite {
 
-  private val forbidden = Seq("spark.graft.", "SPARK_GRAFT_PROBE_")
+  private val forbidden = Seq("spark.graft.", "SPARK_GRAFT_PROBE_", "SPARK_GRAFT_CONF")
 
   test("main sources read no spark.graft.* conf key and no SPARK_GRAFT_PROBE_* variable") {
     val root = Paths.get("src/main/scala")

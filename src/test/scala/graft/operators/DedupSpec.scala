@@ -776,85 +776,14 @@ class DedupSpec extends SparkSpec {
     assert(semiLine.contains("__fp") && !semiLine.contains("__g"), spansPlan)
   }
 
-  test("trickle-batch point read: identical candidates and probe results, no state-table scan in the plan") {
-    // a trickle batch (distinct bh ≪ buckets·cap on a ≥16-bucket table)
-    // short-circuits the candidate stage to a driver-direct parquet point
-    // read (r17 verdict #3); equality vs the join shapes and vs live
-    // banding is the whole contract
-    val corpus = docs
-    val batch = Seq(
-      (100L, "the quick brown fox jumps over the lazy dog near the river bank extra"),
-      (101L, "genuinely novel content speaking about entirely unrelated astronomy topics"))
-      .toDF("doc_id", "text")
-    // 16 buckets: at the point-read floor, so all three candidate
-    // functions can run against the SAME table
-    Dedup.writeBandTable(corpus, "doc_id", "text", "pr_bands",
-      buckets = 16, bands = 16, rowsPerBand = 2)
-    try {
-      val bandRows = Dedup.bandedBatchKeys(batch, "doc_id", "text", 16, 2, 3)
-      val pr = Dedup.pointReadBandCandidates(bandRows, "pr_bands",
-        "doc_id", None)
-      assert(pr.isDefined, "trickle batch must be point-read eligible")
-      // the point-read result is driver-materialized rows: no join, no
-      // state-table scan anywhere in its plan
-      val prPlan = pr.get.queryExecution.executedPlan.toString
-      assert(!prPlan.contains("pr_bands") && !prPlan.contains("Join"), prPlan)
-      val prSet = pr.get.select("doc_a", "doc_b")
-        .as[(Long, Long)].collect().toSet
-      val joinSet = Dedup.joinBandCandidates(bandRows, "pr_bands",
-          "doc_id", None)
-        .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-      assert(prSet == joinSet && prSet.nonEmpty,
-        s"point read diverges from join shape: $prSet vs $joinSet")
-      // bandTableCandidates auto-picks the point read on the 16-bucket
-      // table — same set again
-      val auto = Dedup.bandTableCandidates(bandRows, "pr_bands",
-          "doc_id", None)
-      assert(!auto.queryExecution.executedPlan.toString.contains("Join"))
-      assert(auto.select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-        == joinSet)
-      // exclusion parity: excluding a corpus doc removes exactly its pairs
-      // on both paths
-      val ex = Some(Seq(1L).toDF("doc_id"))
-      val prEx = Dedup.pointReadBandCandidates(bandRows, "pr_bands",
-          "doc_id", ex).get
-        .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-      val joinEx = Dedup.joinBandCandidates(bandRows, "pr_bands",
-          "doc_id", ex)
-        .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-      assert(prEx == joinEx && prEx == joinSet.filterNot(_._2 == 1L))
-      // column-ORDER contract: the exclusion anti-join must not leak the
-      // USING-column-first schema (doc_b, doc_a) to positional consumers
-      assert(Dedup.joinBandCandidates(bandRows, "pr_bands", "doc_id", ex)
-        .columns.toSeq == Seq("doc_a", "doc_b"))
-      // the BYTE gate (the measured crossover): with the cap at 0 the
-      // point read must decline; an unbounded cap accepts
-      assert(Dedup.pointReadBandCandidates(bandRows, "pr_bands",
-        "doc_id", None, maxStateBytes = 0L).isEmpty, "byte gate must decline")
-      assert(Dedup.pointReadBandCandidates(bandRows, "pr_bands",
-        "doc_id", None, maxStateBytes = Long.MaxValue).isDefined,
-        "an unbounded cap must accept")
-      // end-to-end: the full probe through the point-read table equals
-      // live banding
-      val viaTable = Dedup.nearDupesAgainstTable(batch, corpus, "pr_bands",
-          "doc_id", "text", threshold = 0.5, bands = 16, rowsPerBand = 2)
-        .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-      val live = Dedup.nearDupesAgainst(batch, corpus, "doc_id", "text",
-          threshold = 0.5, bands = 16, rowsPerBand = 2)
-        .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-      assert(viaTable == live, s"probe diverged: $viaTable vs $live")
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS pr_bands")
-    }
-  }
-
-  test("bandTableCandidates: fused and composite branches emit identical candidates") {
+  test("joinBandCandidates: fused and composite branches emit identical candidates") {
     // the candidate stage has TWO join shapes (fused __bk broadcast for
     // micro-batches, composite (band,bh) for corpus-scale backfills) picked
     // by the planner's broadcast test; the fused branch is oracle-covered
     // (q5f/q6x) but until this spec nothing forced the composite branch and
     // compared — a drift between the shapes would silently change backfill
-    // results (r17 verdict #2)
+    // results (r17 verdict #2). Also pinned here: the strictly-prior
+    // exclusion and the full table probe against live banding
     val corpus = docs
     val batch = Seq(
       (100L, "the quick brown fox jumps over the lazy dog near the river bank extra"),
@@ -863,8 +792,8 @@ class DedupSpec extends SparkSpec {
     Dedup.writeBandTable(corpus, "doc_id", "text", "branch_bands",
       buckets = 4, bands = 16, rowsPerBand = 2)
     try {
-      val bandRows = Dedup.bandedBatchKeys(batch, "doc_id", "text", 16, 2, 3)
-      val fused = Dedup.bandTableCandidates(bandRows, "branch_bands",
+      val bandRows = Dedup.bandedKeys(batch, "doc_id", "text", 16, 2, 3)
+      val fused = Dedup.joinBandCandidates(bandRows, "branch_bands",
         "doc_id", None)
       // the small-batch branch now carries an explicit broadcast hint
       // (ADVICE r17): the eligibility probe and the executed plan must
@@ -874,6 +803,25 @@ class DedupSpec extends SparkSpec {
         "small-batch branch must broadcast the batch bands")
       val fusedSet = fused.select("doc_a", "doc_b")
         .as[(Long, Long)].collect().toSet
+      // excluding a corpus doc removes exactly that doc's pairs, and the
+      // exclusion anti-join must not leak its USING-column-first schema
+      // (doc_b, doc_a) to positional consumers
+      assert(fusedSet.exists(_._2 == 1L) && fusedSet.exists(_._2 != 1L),
+        s"candidates must name corpus doc 1 and another: $fusedSet")
+      val excluded = Dedup.joinBandCandidates(bandRows, "branch_bands",
+        "doc_id", Some(Seq(1L).toDF("doc_id")))
+      assert(excluded.columns.toSeq == Seq("doc_a", "doc_b"))
+      assert(excluded.as[(Long, Long)].collect().toSet ==
+        fusedSet.filterNot(_._2 == 1L))
+      // end to end: the full probe through the table equals live banding
+      val viaTable = Dedup.nearDupesAgainstTable(batch, corpus, "branch_bands",
+          "doc_id", "text", threshold = 0.5, bands = 16, rowsPerBand = 2)
+        .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
+      val live = Dedup.nearDupesAgainst(batch, corpus, "doc_id", "text",
+          threshold = 0.5, bands = 16, rowsPerBand = 2)
+        .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
+      assert(viaTable.nonEmpty && viaTable == live,
+        s"probe diverged: $viaTable vs $live")
       val thr0 = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
       val aqe0 = spark.conf.get("spark.sql.adaptive.enabled")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -881,7 +829,7 @@ class DedupSpec extends SparkSpec {
       // what the exchange-free assertion walks
       spark.conf.set("spark.sql.adaptive.enabled", "false")
       try {
-        val comp = Dedup.bandTableCandidates(bandRows, "branch_bands",
+        val comp = Dedup.joinBandCandidates(bandRows, "branch_bands",
           "doc_id", None)
         val plan = comp.queryExecution.executedPlan
         val planStr = plan.toString

@@ -150,6 +150,54 @@ class DocStreamSpec extends SparkSpec {
     } finally spark.sql("DROP TABLE IF EXISTS aqe_gate_bands")
   }
 
+  test("self-maintaining near-dup gate: one sink scan per verify, same plan every later trigger") {
+    // the verify side is corpus ∪ one scan of the sink's strictly-prior
+    // partitions: a scan per earlier partition would grow each trigger's
+    // plan, so no trigger could reuse the classes the last one generated
+    implicit val sqlCtx = spark.sqlContext
+    val corpus = Seq(
+      (10L, "the quick brown fox jumps over the lazy dog near the river bank today"))
+      .toDF("doc_id", "text")
+    val cave = "a planted novel document describing underwater cave systems and " +
+      "the slow formation of limestone structures"
+    val birds = "an entirely separate report on migratory bird routes across the " +
+      "northern hemisphere during the autumn season"
+    val water = "quarterly notes on municipal water treatment plants and the " +
+      "chemistry of chlorine dosing schedules"
+    val ice = "an unrelated account of alpine glaciers and their slow retreat"
+    spark.sql("DROP TABLE IF EXISTS scan_gate_bands")
+    Dedup.writeBandTable(corpus, "doc_id", "text", "scan_gate_bands",
+      buckets = 4, bands = 16, rowsPerBand = 2)
+    val work = java.nio.file.Files.createTempDirectory("g-scan").toString
+    val in = MemoryStream[(Long, String)]
+    var q: StreamingQuery = null
+    try {
+      val perExec = triggerExecutions {
+        q = DocStream.selfMaintainingNearDedupedIngest(
+          in.toDF().toDF("doc_id", "text"), corpus, "scan_gate_bands",
+          "doc_id", "text", s"$work/out", s"$work/ckpt",
+          threshold = 0.5, bands = 16, rowsPerBand = 2)
+        q
+      } {
+        in.addData((200L, cave), (210L, ice + " first"))
+        q.processAllAvailable()
+        in.addData((201L, cave + " with a tail"), (300L, birds))
+        q.processAllAvailable()
+        in.addData((301L, birds + " with a tail"), (400L, water))
+      }
+      val verifying = perExec.filter(_.exists(_.simpleString.contains("shinglejaccard")))
+      assert(verifying.size == 3, s"${verifying.size} executions run the verify")
+      val sinkScans = verifying.map(_.count(n => n.nodeName.startsWith("Scan parquet") &&
+        n.metadata.get("Location").exists(_.contains(s"$work/out"))))
+      assert(sinkScans == Seq(1, 1, 1), s"sink scans per trigger: $sinkScans")
+      assert(verifying(1).map(_.nodeName) == verifying(2).map(_.nodeName),
+        "triggers 2 and 3 planned different verify executions")
+      val kept = spark.read.parquet(s"$work/out").select("doc_id")
+        .as[Long].collect().toSeq.sorted
+      assert(kept == Seq(200L, 210L, 300L, 400L), s"gate output: $kept")
+    } finally spark.sql("DROP TABLE IF EXISTS scan_gate_bands")
+  }
+
   test("self-maintaining EXACT gate: one probe per trigger, AQE off, no cache; null ids keep by text") {
     implicit val sqlCtx = spark.sqlContext
     spark.sql("DROP TABLE IF EXISTS aqe_gate_fps")
