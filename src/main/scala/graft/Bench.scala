@@ -519,9 +519,8 @@ object Bench {
   private def writeDetail(results: Map[String, Double], sparkWall: Double,
                           duckdb: Map[String, Double], streams: Int,
                           sfDir: String,
-                          phases: Map[String, Double] = Map.empty,
-                          wallRuns: Int = 1,
-                          codegen: Map[String, Seq[(Long, Double)]] = Map.empty): Unit =
+                          phases: Map[String, Double], wallRuns: Int,
+                          codegen: Map[String, Seq[(Long, Double)]]): Unit =
     try {
       def obj(m: Map[String, Double]): String = m.toSeq.sortBy(_._1)
         .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")

@@ -281,10 +281,6 @@ object HashSketchExpressions {
   def minhashSig(shingles: Column, numHashes: Int): Column =
     ColumnBridge.column(MinHashSignature(ColumnBridge.expression(shingles), numHashes))
 
-  /** Column-level SimHash (see [[SimHash64]]). */
-  def simhash(tokens: Column): Column =
-    ColumnBridge.column(SimHash64(ColumnBridge.expression(tokens)))
-
   /** Column-level portable-hash SimHash (see [[Md5SimHash]]). */
   def md5Simhash(tokens: Column, bits: Int = 60): Column =
     ColumnBridge.column(Md5SimHash(ColumnBridge.expression(tokens), bits))

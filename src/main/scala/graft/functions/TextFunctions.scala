@@ -126,13 +126,6 @@ object TextFunctions {
     */
   def fingerprint64(text: Column): Column = xxhash64(text)
 
-  /** Content-defined fingerprint: hash of the sorted distinct token set —
-    * order-insensitive, catches shuffled near-dups with identical bags of
-    * words.
-    */
-  def bagFingerprint(text: Column): Column =
-    xxhash64(concat_ws(" ", array_sort(array_distinct(tokens(text)))))
-
   /** Word n-gram shingles (distinct), the MinHash/Jaccard input unit.
     * Native single-pass kernel (see [[graft.expressions.WordShingles]]);
     * [[shinglesComposable]] is the built-in-only formulation it must match.

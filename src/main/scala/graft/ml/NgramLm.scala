@@ -682,20 +682,6 @@ object NgramLm {
       s"discount must be in (0,1), got $discount")
   }
 
-  /** Fit a [[KnLm]]: the single-scan [[fit]] at kernel-embeddable caps,
-    * wrapped with the discount. Caps beyond [[KernelModelMaxRows]] would
-    * return a [[DistributedLm]], which has no KN kernel — the require
-    * points at the joined formulation as the generalization seam.
-    */
-  def fitKn(corpus: DataFrame, text: Column, uniCap: Int, biCap: Int,
-            discount: Double = 0.75): KnLm =
-    fit(corpus, text, uniCap, biCap) match {
-      case m: BigramLm => KnLm(m, discount)
-      case _ => throw new IllegalArgumentException(
-        s"KN caps $uniCap+$biCap exceed the kernel-embed ceiling " +
-          s"$KernelModelMaxRows; generalize scoreDocsKnJoined for larger models")
-    }
-
   /** Interpolated-KN scoring of `docs(id, text)` — [[scoreDocs]]'s output
     * shape (n_bigrams / oov_bigrams / lm_score / ppl, one row per document
     * with ≥ 2 tokens) with the KN readout: per bigram (v, w),

@@ -5,47 +5,18 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Corpus curation: the standard pretraining-data funnel composed from the
-  * engine's own operators — quality gate → language gate → exact dedup →
-  * near-dup dedup — plus greedy sequence packing into fixed token budgets.
-  * Every stage is a DataFrame transform; the funnel is one lazy DAG until
-  * the near-dup stage (which pipelines through the LSH block/verify jobs).
+/** Corpus curation operators: the pretraining-data funnel's audit
+  * (quality gate → language gate → token bounds → exact dedup), repetition
+  * signals, salient terms, chunking, greedy sequence packing into fixed
+  * token budgets, snapshot diffs, domain blocklists and rank buckets.
+  * Every operator is a DataFrame transform.
   */
 object Curate {
 
   case class Config(
       minQuality: Double = 0.5,
       lang: String = "en",
-      minTokens: Int = 10, maxTokens: Int = 100000,
-      nearDupThreshold: Double = 0.8)
-
-  /** The funnel. Returns surviving rows of `df` with `quality`, `lang`, and
-    * `n_tokens` columns attached (useful for audit aggregations).
-    */
-  def curate(df: DataFrame, id: String, text: String,
-             cfg: Config = Config()): DataFrame = {
-    // the three signal kernels are computed ONCE per row: the gate rides
-    // a Generate over a packed struct (KernelOps.explodeKept) — chained
-    // .filter()s here would be pushed below the projection with every
-    // signal kernel inlined into its predicate, scanning each document's
-    // text twice per signal (the round-15 pushdown hazard); the signal
-    // COLUMNS still come back attached, from the same single evaluation
-    val gated = df
-      .select(col("*"), graft.functions.KernelOps.explodeKept(
-        struct(TextFunctions.qualityScore(col(text)).as("q"),
-          TextFunctions.langId(col(text)).as("l"),
-          TextFunctions.tokenCount(col(text)).as("n")),
-        s => s.getField("q") >= cfg.minQuality &&
-          s.getField("l") === cfg.lang &&
-          s.getField("n").between(cfg.minTokens, cfg.maxTokens))
-        .as("__qln"))
-      .select(col("*"), col("__qln").getField("q").as("quality"),
-        col("__qln").getField("l").as("lang"),
-        col("__qln").getField("n").as("n_tokens"))
-      .drop("__qln")
-    val exactDeduped = Dedup.dropExactDupes(gated, id, text)
-    Dedup.dropNearDupes(exactDeduped, id, text, cfg.nearDupThreshold)
-  }
+      minTokens: Int = 10, maxTokens: Int = 100000)
 
   /** Per-stage survivor counts — the curation audit table.
     *
@@ -75,8 +46,8 @@ object Curate {
         coalesce(sum(when(lok, 1L).otherwise(0L)), lit(0L)).as("c2"),
         coalesce(sum(when(tok, 1L).otherwise(0L)), lit(0L)).as("c3"),
         // distinct on the 64-bit FINGERPRINT, not the raw text: matches
-        // the dedup key curate() actually uses and shuffles 8 bytes per
-        // doc instead of full document bodies
+        // the exact-dedup key (Dedup.dropExactDupes) and shuffles 8 bytes
+        // per doc instead of full document bodies
         countDistinct(when(tok, TextFunctions.fingerprint64(col(text)))).as("c4"))
       .select(explode(array(
         stage("0_total", col("c0")), stage("1_quality", col("c1")),

@@ -88,56 +88,6 @@ object Dedup {
     dropExactDupes(fresh, id, text)
   }
 
-  /** [[dropDupesAgainst]] with a Bloom-filter pre-gate — the 100 TB ingest
-    * shape. The corpus's fingerprint set is summarized once into a Bloom
-    * filter (built distributed via `bloom_filter_agg`, shipped to every
-    * task as a one-row broadcast); batch rows the filter definitely does
-    * NOT contain (no false negatives) pass straight through with ZERO
-    * join, and only the ~fpp fraction of bloom-positives pay the exact
-    * fingerprint anti-join. At a trillion-doc corpus the anti-join's
-    * probe side shrinks from |batch| to |true dups| + fpp·|batch| while
-    * the result stays EXACTLY equal to [[dropDupesAgainst]] (pinned by
-    * DedupSpec equality).
-    *
-    * `expectedItems` sizes the filter (bits ≈ −n·ln(fpp)/ln²2 — ~9.6
-    * bits/doc at fpp 1%); pass the corpus's approximate distinct count.
-    */
-  def bloomDedupAgainst(batch: DataFrame, corpus: DataFrame,
-                        id: String, text: String,
-                        expectedItems: Long, fpp: Double = 0.01): DataFrame = {
-    require(expectedItems > 0 && fpp > 0 && fpp < 1,
-      s"need expectedItems > 0 and fpp in (0,1), got $expectedItems / $fpp")
-    val numBits = math.ceil(
-      -expectedItems * math.log(fpp) / (math.log(2) * math.log(2))).toLong
-    // BloomFilterAggregate/MightContain are Catalyst-internal (they power
-    // runtime join filters, not the SQL surface) — reached through the
-    // expression bridge
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
-    import org.apache.spark.sql.graft.ColumnBridge
-    val fps = corpus.select(TextFunctions.fingerprint64(col(text)).as("__fp"))
-    val bloom = fps
-      .agg(ColumnBridge.column(
-        new BloomFilterAggregate(ColumnBridge.expression(col("__fp")),
-          Literal(expectedItems), Literal(numBits)).toAggregateExpression())
-        .as("__bf"))
-    // might_contain requires its filter side to be a constant or scalar
-    // subquery (the runtime-filter contract) — ship the one-row aggregate
-    // as a scalar subquery, which Spark broadcasts to every task
-    val bloomSub = org.apache.spark.sql.catalyst.expressions.ScalarSubquery(
-      bloom.queryExecution.analyzed)
-    val probed = batch
-      .withColumn("__fp", TextFunctions.fingerprint64(col(text)))
-      .withColumn("__maybe", ColumnBridge.column(BloomFilterMightContain(
-        bloomSub, ColumnBridge.expression(col("__fp")))))
-    val definiteFresh = probed.filter(!col("__maybe"))
-    val checked = probed.filter(col("__maybe"))
-      .join(fps.distinct(), Seq("__fp"), "left_anti")
-    dropExactDupes(
-      definiteFresh.unionByName(checked).drop("__maybe", "__fp"), id, text)
-  }
-
   /** C4-style repeated-line removal: a line whose exact text occurs in at
     * least `minRepeats` DISTINCT documents is boilerplate (navigation,
     * cookie banners, license footers) and is dropped from every document;
@@ -270,20 +220,12 @@ object Dedup {
       .select(col("doc"), col("bk.band"), col("bk.bh"))
   }
 
-  /** MinHash-LSH candidate pairs: band the signature (`bands` × `rowsPerBand`
-    * = numHashes), bucket-join on (band index, band hash), emit distinct
-    * (id_a < id_b) pairs. Probability a pair with Jaccard j collides:
-    * 1-(1-j^r)^b — tune r,b for the target threshold (~(1/b)^(1/r)).
-    */
-  def minhashCandidates(df: DataFrame, id: String, text: String,
-                        bands: Int = 8, rowsPerBand: Int = 4,
-                        shingleN: Int = 3): DataFrame =
-    minhashCandidatesRaw(df, id, text, bands, rowsPerBand, shingleN)
-      .distinct()
-
-  /** [[minhashCandidates]] WITHOUT the distinct — for callers that fold
-    * the dedup into their own keyed exchange ([[minhashNearDupes]] pairs
-    * it with the AQE-exempt verify spread, one exchange doing both jobs).
+  /** MinHash-LSH candidate pairs: band the signature (`bands` ×
+    * `rowsPerBand` = numHashes), bucket-join on (band index, band hash),
+    * emit (id_a < id_b) pairs. Probability a pair with Jaccard j collides:
+    * 1-(1-j^r)^b — tune r,b for the target threshold (~(1/b)^(1/r)). No
+    * distinct: [[minhashNearDupes]] folds the dedup into its AQE-exempt
+    * verify spread, one exchange doing both jobs.
     */
   private def minhashCandidatesRaw(df: DataFrame, id: String, text: String,
                                    bands: Int, rowsPerBand: Int,
@@ -295,41 +237,16 @@ object Dedup {
       .select(col("a.doc").as("doc_a"), col("b.doc").as("doc_b"))
   }
 
-  /** Exact Jaccard similarity over word n-gram shingle sets for given
-    * candidate pairs — the verify stage after LSH blocking.
+  /** Exact shingle Jaccard of candidate pairs, the verify stage after LSH
+    * blocking: `doc_a` resolves against `docsA`, `doc_b` against `docsB`.
+    * The candidate table is joined to the docs once per pair side, so
+    * candidates appear exactly once in the DAG (no diamond, nothing to
+    * persist); the pair metric is the fused
+    * [[graft.expressions.ShingleJaccard]] kernel, one pass over both
+    * texts.
     *
-    * Plan shape: the candidate table is joined to the docs table once per
-    * pair side (`doc_a`, then `doc_b`), so CANDIDATES APPEAR EXACTLY ONCE
-    * in the DAG — no diamond, nothing to persist, and callers can stay
-    * fully lazy. The docs scan runs twice, but that's a pruned parquet
-    * scan (id + text only); the earlier semi-join formulation consumed the
-    * candidate pipeline (a full LSH block) twice instead. The pair metric
-    * is the fused [[graft.expressions.ShingleJaccard]] kernel — one pass
-    * over both texts per evaluation — because Catalyst copies the jaccard
-    * expression into the join condition (threshold pushdown) AND the output
-    * projection, and the composed shingle/array_intersect form would
-    * re-shingle each pair at every copied site (measured ~8× per pair).
-    */
-  def verifyJaccard(candidates: DataFrame, docs: DataFrame, id: String,
-                    text: String, shingleN: Int = 3): DataFrame =
-    verifyJaccardBetween(candidates, docs, docs, id, text, shingleN)
-
-  /** [[verifyJaccard]] generalized to pairs spanning two tables: `doc_a`
-    * resolves against `docsA`, `doc_b` against `docsB` (the cross-corpus
-    * case). Same single-consumption plan shape.
-    */
-  def verifyJaccardBetween(candidates: DataFrame, docsA: DataFrame,
-                           docsB: DataFrame, id: String, text: String,
-                           shingleN: Int = 3): DataFrame =
-    candidates
-      .join(docsA.select(col(id).as("doc_a"), col(text).as("__ta")), Seq("doc_a"))
-      .join(docsB.select(col(id).as("doc_b"), col(text).as("__tb")), Seq("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        graft.expressions.WordShingles.shingleJaccard(
-          col("__ta"), col("__tb"), shingleN).as("jaccard"))
-
-  /** [[verifyJaccardBetween]] with the threshold applied INSIDE the
-    * verify projection: the keep rides a Generate
+    * The threshold is applied INSIDE the verify projection: the keep
+    * rides a Generate
     * ([[graft.functions.KernelOps.explodeKept]]), so the jaccard kernel
     * runs exactly once per candidate pair AND no barrier is needed —
     * the previous shape (verify → no-op min() aggregate → filter) paid
@@ -356,7 +273,7 @@ object Dedup {
   /** Full MinHash-LSH near-dup pipeline: block with banding, verify with
     * exact Jaccard, keep pairs at or above `threshold`.
     *
-    * Fully lazy — verifyJaccard consumes the candidate pipeline exactly
+    * Fully lazy — the verify consumes the candidate pipeline exactly
     * once, so there is no persist and no eager materialization here (and
     * therefore no cache to leak and no localCheckpoint to lose blocks under
     * dynamic-allocation executor loss). Multi-consumer callers
@@ -847,8 +764,9 @@ object Dedup {
 
   /** 64-bit SimHash over tokens: bit j of the result is the sign of
     * Σ_tokens (bit j of xxhash64(token) ? +1 : -1). Expression-level (per-bit
-    * vote via `aggregate` lambdas — interpreted, re-hashes tokens per bit);
-    * use [[simhashSignatures]] for the bulk path.
+    * vote via `aggregate` lambdas — interpreted, re-hashes tokens per bit).
+    * The native [[graft.expressions.SimHash64]] kernel behind the SQL
+    * function `simhash64` is pinned to it by DedupSpec.
     */
   def simhash64(text: Column): Column = {
     val toks = TextFunctions.tokens(text)
@@ -860,24 +778,13 @@ object Dedup {
     }.reduce(_.bitwiseOR(_))
   }
 
-  /** Bulk SimHash, one row per doc, via the native codegen'd
-    * [[graft.expressions.SimHash64]] kernel: one string hash + 64 bit-votes
-    * per token inside whole-stage codegen — zero shuffle. Identical values
-    * to [[simhash64]] (pinned by DedupSpec).
-    */
-  def simhashSignatures(df: DataFrame, id: String, text: String): DataFrame =
-    Par.spread(df.select(col(id).as("doc"), col(text).as("__t")))
-      .select(col("doc"),
-        graft.expressions.HashSketchExpressions.simhash(
-          TextFunctions.tokens(col("__t"))).as("sh"))
-
   /** 60-bit SimHash over tokens with an ENGINE-PORTABLE token hash: the
     * token's 64-bit value is the first 15 hex chars of its MD5 parsed as an
     * integer, so any engine with `md5` (DuckDB:
     * `CAST('0x' || substr(md5(t),1,15) AS BIGINT)`) reproduces the
     * signature bit-for-bit — which makes simhash near-dup results
-    * cross-engine verifiable, unlike the xxhash64-seeded
-    * [[simhashSignatures]] (Spark-internal hash). 15 hex chars = 60 bits
+    * cross-engine verifiable, unlike the xxhash64-seeded [[simhash64]]
+    * (Spark-internal hash). 15 hex chars = 60 bits
     * keeps the value inside a signed long in both engines.
     *
     * Plan shape: explode tokens, then ONE hash-aggregate per doc carrying
@@ -1045,23 +952,13 @@ object Dedup {
   /** Hamming distance between two 64-bit simhashes. */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
-  /** Driver-side hamming for tests/inspection. */
-  def hammingLongs(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
-
-  /** SimHash near-dup candidates with multi-band blocking: split the 64-bit
-    * signature into `bands` equal bit-blocks; a pair is a candidate if it
-    * agrees exactly on ANY band (pigeonhole: a pair with Hamming distance
-    * d < bands must share at least one clean band, so recall is EXACT for
-    * d <= maxHamming whenever bands > maxHamming — the classic simhash
-    * dedup structure). Candidates then filter on exact Hamming distance.
-    * Blocking fan-out is bands× rows; each band-join is an equi-join.
-    */
-  def simhashNearDupes(df: DataFrame, id: String, text: String,
-                       maxHamming: Int = 3, bands: Int = 8): DataFrame =
-    simhashNearDupesFromSigs(simhashSignatures(df, id, text), maxHamming, bands)
-
-  /** The banding machinery of [[simhashNearDupes]] over precomputed
-    * signatures (`doc`, `sh: long`) — any 64-bit-or-narrower SimHash works
+  /** SimHash near-dup candidates with multi-band blocking over precomputed
+    * signatures (`doc`, `sh: long`): split the 64-bit signature into
+    * `bands` equal bit-blocks; a pair is a candidate if it agrees exactly
+    * on ANY band (pigeonhole: a pair with Hamming distance d < bands must
+    * share at least one clean band, so recall is EXACT for d <= maxHamming
+    * whenever bands > maxHamming). Candidates then filter on exact Hamming
+    * distance. Any 64-bit-or-narrower SimHash works
     * (narrower sigs just leave the top band bits constant-zero, which
     * preserves the pigeonhole recall argument: Hamming over the 64-bit
     * representation equals Hamming over the sig's live bits).

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal column plumbing: image/audio/video as opaque `BINARY` columns
   * with typed metadata, processed by batched per-partition functions.
@@ -23,15 +22,6 @@ import org.apache.spark.sql.types._
   * header metadata is what a curation pipeline filters and plans on.
   */
 object Multimodal {
-
-  /** Canonical multimodal schema: payload + sidecar metadata. */
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("content", BinaryType, nullable = true),
-    StructField("media_type", StringType, nullable = false),
-    StructField("width", IntegerType, nullable = true),
-    StructField("height", IntegerType, nullable = true),
-    StructField("n_frames", IntegerType, nullable = true)))
 
   /** Wrap any table into media rows (payload = utf-8 bytes of a text
     * column) — lets the binary pipeline be exercised on the test tables.
@@ -95,35 +85,6 @@ object Multimodal {
       }
       .toDF()
   }
-
-  /** Video frame PIXEL extraction — TERMINALLY out of scope in this
-    * container, refused loudly rather than stubbed silently. Decoding
-    * frame pixels requires a native codec (H.264/MJPEG/…) that neither
-    * the JVM nor this environment ships; every pure-JVM part of the
-    * video path IS implemented ([[decodeVideo]] parses container
-    * headers: dimensions, codec fourcc, frame count, duration — the
-    * columns a data pipeline filters and plans on).
-    *
-    * EXTENSION POINT (the contract a codec-backed implementation must
-    * meet, mirroring [[decodeImages]]):
-    *   - input: (media_id LONG, content BINARY, media_type STRING) plus
-    *     `everyNth` frame sampling;
-    *   - output: one row per sampled frame — (media_id LONG, frame_ix
-    *     INT, width INT, height INT, pixels BINARY row-major RGB) —
-    *     nullable pixel fields for corrupt payloads, never a throw on
-    *     data;
-    *   - shape: `mapPartitions` with one decoder instance per partition
-    *     (codec init amortized across the partition's rows), rows
-    *     streamed, no driver collection — the [[decodeImages]] batch
-    *     iteration discipline.
-    */
-  def videoFrames(media: DataFrame, everyNth: Int = 1): DataFrame =
-    throw new UnsupportedOperationException(
-      "videoFrames: frame-pixel decode requires a native video codec " +
-        "this environment does not ship (documented-terminal, COVERAGE.md" +
-        "). Container metadata — dimensions, codec, frame count, " +
-        "duration — is served by decodeVideo; implement the extension " +
-        "contract in this method's scaladoc to add pixels.")
 
   /** Deterministic minimal-but-structurally-valid video container
     * synthesis (the [[synthesizePng]]/[[synthesizeWav]] pattern for

@@ -22,10 +22,6 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** Element sum of an array column. */
-  private def arraySum(a: Column): Column =
-    aggregate(a, lit(0.0), (acc, x) => acc + x)
-
   def dot(a: Column, b: Column): Column = vecDot(a, b)
 
   def norm(a: Column): Column = sqrt(dot(a, a))
@@ -1492,29 +1488,6 @@ object Similarity {
       }
     verified.filter(col("cos") >= threshold)
       .select(col("doc_a"), col("doc_b"), col("cos"))
-  }
-
-  /** Candidate-pair count for [[cosineNearDupes]]'s blocking stage at a
-    * given (planes, bands) — the growth probe SimilaritySpec pins (pairs
-    * must grow ~linearly under auto planes) and a capacity-planning helper.
-    */
-  def cosineCandidateCount(corpus: DataFrame, id: String,
-                           planes: Int, seed: Long = 42L,
-                           bands: Int = 8): Long = {
-    val c0 = corpus.select(col(id).as("doc"), col("embedding").as("e"))
-      .filter(norm(col("e")) > 0)
-    val banded = c0.select(col("doc"),
-      explode(array((0 until bands).map { bnd =>
-        struct(lit(bnd).as("band"),
-          srpSignature(col("e"), planes, seed + 1315423911L * bnd).as("sig"))
-      }: _*)).as("bk"))
-      .select(col("doc"), col("bk.band"), col("bk.sig"))
-    // Σ_buckets m·(m−1)/2 per band — counted from bucket sizes, no join
-    // (m·(m−1) is even, so halving the long sum on the driver is exact;
-    // Column `/` would widen to double)
-    banded.groupBy(col("band"), col("sig")).agg(count(lit(1)).as("m"))
-      .agg(coalesce(sum(col("m") * (col("m") - 1)), lit(0L)).as("p"))
-      .first().getLong(0) / 2
   }
 
   /** Per-group embedding centroids: mean vector per `groupCol` (domain /

@@ -36,14 +36,10 @@ object SlideRollup {
       .withColumn("pred", when(col("score") >= lit(threshold), 1).otherwise(0))
 
   /** Confidence of the predicted class — the reference's `so[sp]` pick
-    * (ipynb:1315,1503): P(pred) = score if pred==1 else 1-score.
+    * (ipynb:1315,1503): P(pred) = score if pred==1 else 1-score. The map is
+    * its own inverse, so applied to a confidence it is also the signed-score
+    * normalization for AUROC (ipynb:1251,1519): back to P(class 1).
     */
   def confidence(score: Column, pred: Column): Column =
     when(pred === 1, score).otherwise(lit(1.0) - score)
-
-  /** Signed-score normalization for AUROC (ipynb:1251,1519): convert a
-    * confidence-of-predicted-class back to P(class 1).
-    */
-  def probClass1(confOfPred: Column, pred: Column): Column =
-    when(pred === 1, confOfPred).otherwise(lit(1.0) - confOfPred)
 }

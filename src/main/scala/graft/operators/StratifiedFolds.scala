@@ -11,15 +11,12 @@ import org.apache.spark.sql.functions._
   * every fold carries a proportional share of every stratum, and assignment
   * is deterministic for a fixed seed/order.
   *
-  * Two implementations with different scale profiles:
-  *  - [[assignRoundRobin]] — exact per-stratum round-robin (fold sizes differ
-  *    by at most 1 within each stratum). Uses a window partitioned by the
-  *    stratum: correct at any size, but strata are few, so the shuffle is
-  *    skewed — intended for metadata-sized tables (the reference's 431
-  *    slides; fine to ~10^8 rows per stratum).
-  *  - [[assignHashed]] — `xxhash64(key, seed) mod k`: embarrassingly
-  *    parallel, no shuffle at all, balance holds in expectation (±O(1/sqrt n)
-  *    per stratum). This is the 100 TB path.
+  * Both assignments rank rows within a window partitioned by the stratum:
+  * [[assignRoundRobin]] (exact per-stratum round-robin, fold sizes differ by
+  * at most 1 within each stratum) and [[assignIterative]] (the order-1
+  * greedy's closed form). Correct at any size, but strata are few, so the
+  * shuffle is skewed — intended for metadata-sized tables (the reference's
+  * 431 slides; fine to ~10^8 rows per stratum).
   */
 object StratifiedFolds {
 
@@ -32,12 +29,6 @@ object StratifiedFolds {
     val w = Window.partitionBy(strata: _*).orderBy(orderBy)
     df.withColumn("fold", (row_number().over(w) - 1) % k)
   }
-
-  /** Shuffle-free stratum-agnostic fold hashing: balanced in expectation
-    * within every stratum because the hash is independent of the stratum.
-    */
-  def assignHashed(df: DataFrame, key: Column, k: Int, seed: Long = 42L): DataFrame =
-    df.withColumn("fold", pmod(xxhash64(key, lit(seed)), lit(k)).cast("int"))
 
   /** Order-1 iterative stratification (Sechidis et al. 2011, the public
     * scikit-multilearn greedy the reference calls at functions_v2.py:78-81)
@@ -63,7 +54,7 @@ object StratifiedFolds {
     * offsets via a triangular self-join (O(strata²) pairs — strata are few
     * by definition; NO unpartitioned window), broadcast back, plus the same
     * per-stratum rank window as [[assignRoundRobin]] (metadata-sized
-    * tables; use [[assignHashed]] at corpus scale).
+    * tables).
     */
   def assignIterative(df: DataFrame, strata: Seq[Column], k: Int,
                       orderBy: Column): DataFrame = {

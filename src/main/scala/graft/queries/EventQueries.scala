@@ -35,7 +35,7 @@ object EventQueries {
         .orderBy(col("event_type"))
     },
 
-    // ---- tumbling 1-hour windows (the batch twin of the streaming agg) -----
+    // ---- tumbling 1-hour windows -------------------------------------------
     QueryDef.sql("q61_hourly_windows",
       """SELECT epoch_us(date_trunc('hour', ts)) AS win_start,
         |  count(*) AS n, count(DISTINCT user_id) AS n_users,
@@ -164,8 +164,8 @@ object EventQueries {
     },
 
     // ---- sliding 2-hour windows every 30 minutes ---------------------------
-    // The batch twin of EventStream.slidingCounts; the oracle replays the
-    // window fan-out with generate_series (each event hits 4 windows).
+    // The oracle replays the window fan-out with generate_series (each
+    // event hits 4 windows).
     QueryDef.sql("q67_sliding_windows",
       """WITH w AS (
         |  SELECT epoch_us(time_bucket(INTERVAL 30 MINUTE, ts) - to_minutes(k * 30)) AS win_start,

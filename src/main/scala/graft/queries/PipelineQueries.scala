@@ -55,8 +55,8 @@ object PipelineQueries {
 
     // ---- B5/F5 + C1: path synthesis -> parse -> broadcast metadata join ----
     // Tile paths are synthesized from lineitem (the driver tables contain no
-    // image files); the parse + broadcast-join + per-slide aggregation is
-    // exactly the Sources.tileInventory shape (dataset_classes_v1.py:56-74).
+    // image files); the parse + broadcast join is Sources.tileInventory
+    // (dataset_classes_v1.py:56-74), then a per-slide aggregation.
     QueryDef.sql("q35_tile_paths",
       """WITH p AS (SELECT printf('/tiles/s%d/s%d_%d_%d.jpg',
         |    l_suppkey, l_suppkey, l_partkey % 100, l_linenumber) AS path FROM lineitem),
@@ -89,9 +89,7 @@ object PipelineQueries {
       val meta = Tables.supplier(s, d).select(
         concat(lit("s"), col("s_suppkey").cast("string")).as("slide_name"),
         col("s_nationkey"))
-      paths
-        .select((col("path") +: Sources.parseTilePath(col("path"))): _*)
-        .join(broadcast(meta), Seq("slide_name"))
+      Sources.tileInventory(paths, meta)
         .groupBy(col("slide_name"))
         .agg(count(lit(1)).as("n_tiles"),
           max(col("col")).as("max_col"), max(col("row")).as("max_row"),

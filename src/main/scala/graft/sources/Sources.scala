@@ -110,50 +110,6 @@ object Sources {
       .select((col("path") +: parseTilePath(col("path"))): _*)
       .join(broadcast(meta), Seq("slide_name"), "inner")
 
-  /** Hive-style partitioned parquet sink: one directory per distinct value
-    * combination of `partitionCols` (e.g. ingest date, source). The 100 TB
-    * layout default — a filter on a partition column prunes whole
-    * directories at PLANNING time (`PartitionFilters` in the scan, zero
-    * bytes read for pruned partitions), which no row-level pushdown can
-    * match. Keep partition cardinality moderate (date, source — not
-    * user_id) so file counts stay manageable.
-    */
-  def writePartitioned(df: DataFrame, path: String,
-                       partitionCols: Seq[String]): Unit =
-    df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
-
-  /** Bucketed-table sink: co-locates future equi-joins/aggregations on
-    * `bucketCol` — both sides of a join bucketed the same way need NO
-    * exchange at read time, the standard 100 TB trick for repeatedly-joined
-    * fact tables. (Requires a table catalog; pass the table name, read back
-    * with `spark.table`.)
-    */
-  def writeBucketed(df: DataFrame, table: String, bucketCol: String,
-                    buckets: Int): Unit =
-    df.write.mode("overwrite")
-      .bucketBy(buckets, bucketCol)
-      .sortBy(bucketCol)
-      .format("parquet")
-      .saveAsTable(table)  // managed table under spark.sql.warehouse.dir
-
-  /** Size-controlled parquet sink: exactly `files` output files of ~equal
-    * row count, regardless of upstream partitioning. The two pathologies
-    * this prevents are both fatal at 100 TB: a small-files explosion (one
-    * file per upstream task × partition — metadata pressure that slows
-    * every later LIST + planning step) and giant single files (one
-    * straggler task writes forever, and a non-splittable consumer can't
-    * parallelize the read). Round-robin repartition gives near-uniform
-    * file sizes; `maxRecordsPerFile` caps any residual imbalance.
-    */
-  def writeSized(df: DataFrame, path: String, files: Int,
-                 maxRecordsPerFile: Long = 0L): Unit = {
-    require(files > 0, s"files must be positive, got $files")
-    val w = df.repartition(files).write.mode("overwrite")
-    (if (maxRecordsPerFile > 0)
-       w.option("maxRecordsPerFile", maxRecordsPerFile)
-     else w).parquet(path)
-  }
-
   /** Deterministic shard id for the training-output global shuffle:
     * `pseudoRand(key) mod nShards`. A pure function of the row key — the
     * whole "shuffle and shard" step of corpus prep without a global sort

@@ -4,7 +4,6 @@ import java.util.concurrent.{ExecutionException, ForkJoinPool}
 
 import scala.util.Try
 
-import graft.functions.TextFunctions
 import graft.operators.{Dedup, Similarity}
 import org.apache.spark.sql.{classic, Column, DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.execution.SQLExecution
@@ -12,18 +11,20 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-/** Streaming document ingest — the streaming face of the batch ingest gate
-  * (`Dedup.dropDupesAgainst`): documents arrive continuously, exact
-  * duplicates of the historical corpus AND re-sends within the stream are
-  * dropped before the sink.
+/** Streaming document ingest gates. Each gate drops incoming documents on
+  * one axis: near-duplicate text (MinHash-LSH), exact duplicate text,
+  * semantic duplicate (embedding cosine), or a per-row quality signal
+  * (perplexity, DSIR importance weight, a learned quality margin).
   *
-  * Scale design: the corpus side collapses to DISTINCT 64-bit text
-  * fingerprints (8 bytes per historical doc — persist/bucket this table
-  * between ingests) and the membership probe is a STATELESS stream-static
-  * join evaluated per micro-batch; only the within-stream dedup keeps
-  * state, keyed by fingerprint and bounded by the watermark horizon, so
-  * state is O(docs-in-horizon), independent of corpus size and stream
-  * length.
+  * The three self-maintaining gates ([[selfMaintainingNearDedupedIngest]],
+  * [[selfMaintainingDedupedIngest]], [[selfMaintainingSemGatedIngest]]) run
+  * one `foreachBatch` trigger skeleton (`selfMaintaining`): a batch is
+  * gated against the corpus plus every earlier batch's survivors, held in
+  * a persisted bucketed or partitioned table rather than the state store,
+  * so state grows with the stream on storage and replays are exact. The
+  * per-row gates (perplexity, DSIR, quality) are stateless filters in
+  * append mode. Every gate has a bounded `replay*` twin that streams a
+  * static table through it, so a query's oracle can check it.
   */
 object DocStream {
 
@@ -54,37 +55,9 @@ object DocStream {
   private def tuneTriggerSession(spark: SparkSession): Unit =
     spark.conf.set("spark.sql.adaptive.enabled", "false")
 
-  /** `docs` is a STREAMING DataFrame with `tsCol` event time and `textCol`;
-    * `corpus` is a static DataFrame of already-ingested documents. Emits
-    * the surviving stream rows (original columns).
-    *
-    * The corpus probe is a left-outer join + null filter rather than a
-    * left-anti join: stream-static anti joins are not in Structured
-    * Streaming's supported-join matrix, the outer+filter form is
-    * ("stateless per micro-batch"), and the two are row-equivalent here
-    * because the corpus side is distinct fingerprints (no duplication on
-    * match).
-    */
-  def dedupedIngest(docs: DataFrame, corpus: DataFrame,
-                    textCol: String = "text", tsCol: String = "ts",
-                    watermark: String = "10 minutes"): DataFrame = {
-    val fps = corpus
-      .select(TextFunctions.fingerprint64(col(textCol)).as("__fp"))
-      .distinct()
-      .withColumn("__seen", lit(1))
-    docs
-      .withColumn("__fp", TextFunctions.fingerprint64(col(textCol)))
-      .withWatermark(tsCol, watermark)
-      .join(fps, Seq("__fp"), "left_outer")
-      .filter(col("__seen").isNull)
-      .dropDuplicatesWithinWatermark("__fp")
-      .drop("__fp", "__seen")
-  }
-
-  /** Streaming NEAR-dup ingest gate — the LSH face of [[dedupedIngest]]:
-    * documents arrive continuously and are dropped when they are a
-    * near-duplicate (shingle-Jaccard ≥ threshold) of the historical
-    * corpus.
+  /** Streaming NEAR-dup ingest gate: documents arrive continuously and
+    * are dropped when they are a near-duplicate (shingle-Jaccard ≥
+    * threshold) of the historical corpus.
     *
     * Shape: `foreachBatch`. The LSH probe is a multi-stage plan
     * (band-key blocking join → candidate distinct → verify-kernel
@@ -317,9 +290,9 @@ object DocStream {
 
   /** SELF-MAINTAINING streaming EXACT-dup gate — the growing-state
     * discipline (q6c near-dup, q6p semantic) on the exact axis, with
-    * UNBOUNDED horizon and ZERO state-store state: [[dedupedIngest]]'s
-    * within-stream dedup is bounded by its watermark horizon, while this
-    * gate's state is the persisted bucketed fingerprint table. One
+    * UNBOUNDED horizon and ZERO state-store state: the gate's state is the
+    * persisted bucketed fingerprint table, not a watermark-bounded
+    * state-store dedup. One
     * [[selfMaintaining]] trigger per batch:
     *
     *   - probe: drop exact dupes of the corpus AND of every earlier

@@ -17,87 +17,20 @@ case class SessionAcc(start_us: Long, end_us: Long, n_events: Long,
 case class ClosedSession(user_id: Long, start_us: Long, end_us: Long,
                          n_events: Long, total_value: Double)
 
-/** Structured Streaming surface over the event schema
+/** Streaming sessionization over the event schema
   * `(event_id, ts TIMESTAMP, user_id, event_type, value)`.
   *
-  * Each transform takes a DataFrame that may be batch OR streaming — the
-  * logical plan is identical (the batch twins are exercised by the oracle
-  * queries q60-q66; the streaming behavior — watermarks, late-data drop,
-  * session windows, stateful dedup — is pinned by EventStreamSpec with
-  * MemoryStream sources).
+  * [[statefulSessions]] is a custom `flatMapGroupsWithState` sessionizer
+  * that takes a batch or streaming DataFrame; [[replaySessions]] runs it as
+  * a real streaming query over a bounded table, so query q6a can check the
+  * streaming engine against the batch sessionizer (`Events.sessionize`) and
+  * the DuckDB gaps-and-islands SQL. EventStreamSpec pins watermark timeouts,
+  * gap splits and sub-millisecond boundaries with MemoryStream sources.
   *
-  * Scale design: state is keyed by (window[, type]) / session_window /
-  * event_id — all bounded by the watermark horizon, so state size is
-  * O(keys-in-horizon), independent of total stream length.
+  * Scale design: state is one open-session accumulator per user, bounded by
+  * the active users inside the watermark horizon, not by stream length.
   */
 object EventStream {
-
-  /** Tumbling-window counts per event type with late-data tolerance
-    * `watermark` (e.g. "2 hours"). Append-mode safe: windows finalize once
-    * the watermark passes window end.
-    */
-  def tumblingTypeCounts(events: DataFrame, windowDur: String,
-                         watermark: String): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), windowDur), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("total_value"))
-      .select(col("window.start").as("win_start"), col("window.end").as("win_end"),
-        col("event_type"), col("n"), col("total_value"))
-
-  /** Sliding-window event rate: counts over `windowDur` windows advancing
-    * every `slideDur`.
-    */
-  def slidingCounts(events: DataFrame, windowDur: String, slideDur: String,
-                    watermark: String): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), windowDur, slideDur))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("win_start"), col("n"))
-
-  /** Session windows per user (native `session_window`, `gap` e.g.
-    * "30 minutes") — the streaming twin of Events.sessionize; state per
-    * open session, closed by the watermark.
-    */
-  def sessionAgg(events: DataFrame, gap: String, watermark: String): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(session_window(col("ts"), gap), col("user_id"))
-      .agg(count(lit(1)).as("n_events"), sum(col("value")).as("total_value"))
-      .select(col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"),
-        col("user_id"), col("n_events"), col("total_value"))
-
-  /** Watermarked stream-stream interval join: each `leftType` event joins
-    * the `rightType` events of the same user within `(left.ts, left.ts +
-    * within]`. Both sides carry watermarks and the join condition bounds
-    * event-time distance, so Spark can expire join state — the streaming
-    * twin of Events.funnelPairs with bounded memory.
-    */
-  def streamStreamFunnel(events: DataFrame, leftType: String, rightType: String,
-                         within: String, watermark: String): DataFrame = {
-    val l = events.filter(col("event_type") === leftType)
-      .select(col("user_id"), col("ts").as("l_ts"), col("event_id").as("l_id"))
-      .withWatermark("l_ts", watermark)
-    val r = events.filter(col("event_type") === rightType)
-      .select(col("user_id").as("r_user"), col("ts").as("r_ts"),
-        col("event_id").as("r_id"))
-      .withWatermark("r_ts", watermark)
-    l.join(r,
-      col("user_id") === col("r_user") &&
-        col("r_ts") > col("l_ts") &&
-        col("r_ts") <= col("l_ts") + expr(s"INTERVAL $within"))
-      .select(col("user_id"), col("l_id"), col("r_id"), col("l_ts"), col("r_ts"))
-  }
-
-  /** Exactly-once-per-event-id dedup bounded by the watermark horizon —
-    * the streaming ingest guard for at-least-once sources.
-    */
-  def dedupByEventId(events: DataFrame, watermark: String): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark("event_id")
 
   /** Custom stateful sessionization via `flatMapGroupsWithState` — the
     * escape hatch for session semantics `session_window` can't express
@@ -162,13 +95,6 @@ object EventStream {
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(update)
   }
-
-  /** Stateless high-value alert stream (filter + project only — no state,
-    * no shuffle; runs fully pipelined).
-    */
-  def highValueAlerts(events: DataFrame, threshold: Double): DataFrame =
-    events.filter(col("value") >= threshold)
-      .select(col("event_id"), col("ts"), col("user_id"), col("value"))
 
   private val replayCounter = new java.util.concurrent.atomic.AtomicInteger(0)
 

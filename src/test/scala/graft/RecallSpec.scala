@@ -47,16 +47,15 @@ class RecallSpec extends SparkSpec {
     val all = docs.unionByName(dupes)
     // ground truth: planted pairs whose ACTUAL hamming distance qualifies
     // (appending " tail" to a short doc can flip more than maxHamming bits)
-    val sigs = Dedup.simhashSignatures(all, "doc_id", "text")
-      .as[(Long, Long)].collect().toMap
+    val signed = all.select(col("doc_id").as("doc"), Dedup.simhash64(col("text")).as("sh"))
+    val sigs = signed.as[(Long, Long)].collect().toMap
     val plantedPairs: Set[(Long, Long)] = dupes
       .select((col("doc_id") - 1000000).as("a"), col("doc_id").as("b"))
       .as[(Long, Long)].collect().toSet
     val qualifying = plantedPairs.filter(p =>
-      Dedup.hammingLongs(sigs(p._1), sigs(p._2)) <= 6)
+      java.lang.Long.bitCount(sigs(p._1) ^ sigs(p._2)) <= 6)
     assert(qualifying.size >= 80, s"most planted dupes should be close, got ${qualifying.size}")
-    val found = Dedup.simhashNearDupes(all, "doc_id", "text",
-        maxHamming = 6, bands = 8)
+    val found = Dedup.simhashNearDupesFromSigs(signed, maxHamming = 6, bands = 8)
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     // pigeonhole: bands(8) > maxHamming(6) makes recall EXACT on qualifiers
     assert(qualifying.subsetOf(found),

@@ -707,14 +707,13 @@ class NgramLmSpec extends SparkSpec {
     }
   }
 
-  test("fitKn rejects caps beyond the kernel-embed ceiling") {
-    intercept[IllegalArgumentException] {
-      NgramLm.fitKn(corpus, col("text"),
-        uniCap = NgramLm.KernelModelMaxRows, biCap = 1)
-    }
-    // in-ceiling caps come back as the wrapped base fit
-    val kn = NgramLm.fitKn(corpus, col("text"), uniCap = 10, biCap = 10)
+  test("KnLm wraps only an in-ceiling bigram fit") {
+    // q5v's construction: KnLm(base, D) over a kernel-embeddable BigramLm
+    assert(!NgramLm.fit(corpus, col("text"),
+      uniCap = NgramLm.KernelModelMaxRows, biCap = 1).isInstanceOf[NgramLm.BigramLm])
+    val kn = NgramLm.KnLm(fitB(corpus, col("text"), uniCap = 10, biCap = 10))
     assert(kn.base.uniArr.toMap == Map("a" -> 5L, "b" -> 3L))
     assert(kn.discount == 0.75)
+    intercept[IllegalArgumentException](NgramLm.KnLm(kn.base, discount = 1.0))
   }
 }

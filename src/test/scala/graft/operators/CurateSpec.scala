@@ -17,13 +17,6 @@ class CurateSpec extends SparkSpec {
     (5L, "word word word")                          // too short
   ).toDF("doc_id", "text")
 
-  test("curate keeps one high-quality english doc per near-dup cluster") {
-    val kept = Curate.curate(docs, "doc_id", "text",
-        Curate.Config(minQuality = 0.5, minTokens = 10, nearDupThreshold = 0.5))
-      .select("doc_id").as[Long].collect().toSeq
-    assert(kept == Seq(1L), s"got $kept")
-  }
-
   test("funnelAudit reports monotone survivor counts per stage") {
     val audit = Curate.funnelAudit(docs, "doc_id", "text",
         Curate.Config(minQuality = 0.5, minTokens = 10))

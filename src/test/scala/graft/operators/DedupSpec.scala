@@ -14,6 +14,11 @@ class DedupSpec extends SparkSpec {
     (5L, "unrelated words forming another document entirely separate topic")
   ).toDF("doc_id", "text")
 
+  private def hamming(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
+
+  private def simhashes(df: org.apache.spark.sql.DataFrame) =
+    df.select(col("doc_id").as("doc"), Dedup.simhash64(col("text")).as("sh"))
+
   test("exact dedup groups identical texts, keeper = min id") {
     val out = Dedup.exact(docs, col("doc_id"), col("text"))
       .orderBy("keeper_id")
@@ -46,13 +51,6 @@ class DedupSpec extends SparkSpec {
     assert(pairs.contains((1L, 3L)) || pairs.contains((2L, 3L)),
       s"near dup should collide with 16x2 bands, got $pairs")
     assert(!pairs.exists(p => p._1 == 4L || p._2 == 4L))
-  }
-
-  test("verifyJaccard computes exact shingle Jaccard") {
-    val cand = Seq((1L, 2L)).toDF("doc_a", "doc_b")
-    val j = Dedup.verifyJaccard(cand, docs, "doc_id", "text")
-      .select("jaccard").as[Double].collect()(0)
-    assert(j == 1.0)
   }
 
   test("decontaminate removes docs sharing any n-gram with the eval set") {
@@ -122,10 +120,10 @@ class DedupSpec extends SparkSpec {
   test("simhash: identical text -> hamming 0; near text -> small; far -> large") {
     val sh = docs.select(col("doc_id"), Dedup.simhash64(col("text")).as("sh"))
       .as[(Long, Long)].collect().toMap
-    assert(Dedup.hammingLongs(sh(1L), sh(2L)) == 0)
-    assert(Dedup.hammingLongs(sh(1L), sh(3L)) <= 12,
+    assert(hamming(sh(1L), sh(2L)) == 0)
+    assert(hamming(sh(1L), sh(3L)) <= 12,
       "one-word change should flip few bits")
-    assert(Dedup.hammingLongs(sh(1L), sh(4L)) > 12,
+    assert(hamming(sh(1L), sh(4L)) > 12,
       "unrelated docs should be far apart")
   }
 
@@ -137,10 +135,11 @@ class DedupSpec extends SparkSpec {
       .as[(Long, Seq[Long])].collect().toMap
     assert(bulkM == exprM)
 
-    val exprS = docs.select(col("doc_id").as("doc"),
-        Dedup.simhash64(col("text")).as("sh"))
-      .as[(Long, Long)].collect().toMap
-    val bulkS = Dedup.simhashSignatures(docs, "doc_id", "text")
+    // the SimHash64 kernel, reached through its SQL function
+    graft.GraftExtensions.register(spark)
+    val exprS = simhashes(docs).as[(Long, Long)].collect().toMap
+    val bulkS = docs.select(col("doc_id").as("doc"), call_function("simhash64",
+        graft.functions.TextFunctions.tokens(col("text"))).as("sh"))
       .as[(Long, Long)].collect().toMap
     assert(bulkS == exprS)
   }
@@ -202,8 +201,8 @@ class DedupSpec extends SparkSpec {
     assert(j == 1.0)
   }
 
-  test("simhashNearDupes blocks + filters by hamming") {
-    val pairs = Dedup.simhashNearDupes(docs, "doc_id", "text",
+  test("simhashNearDupesFromSigs blocks + filters by hamming") {
+    val pairs = Dedup.simhashNearDupesFromSigs(simhashes(docs),
         maxHamming = 12, bands = 16)
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     assert(pairs.contains((1L, 2L)))
@@ -264,22 +263,6 @@ class DedupSpec extends SparkSpec {
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     assert(pairs.contains((102L, 4L)), s"exact cross-dup must verify: $pairs")
     assert(!pairs.exists(_._1 == 101L), s"fresh doc must not pair: $pairs")
-  }
-
-  test("bloomDedupAgainst == dropDupesAgainst exactly (bloom gate adds no drops)") {
-    val corpus = (1L to 200L).map(i => (i, s"corpus document number $i"))
-      .toDF("doc_id", "text")
-    val batch = ((1L to 50L).map(i => (1000 + i, s"corpus document number $i")) ++ // dups
-      (1L to 60L).map(i => (2000 + i, s"fresh batch document $i")) ++
-      Seq((3001L, "fresh batch document 1"))) // within-batch dup of 2001
-      .toDF("doc_id", "text")
-    val viaBloom = Dedup.bloomDedupAgainst(batch, corpus, "doc_id", "text",
-        expectedItems = 200L, fpp = 0.01)
-      .select("doc_id").as[Long].collect().toSet
-    val exact = Dedup.dropDupesAgainst(batch, corpus, "doc_id", "text")
-      .select("doc_id").as[Long].collect().toSet
-    assert(viaBloom == exact, s"bloom path diverged: ${viaBloom.diff(exact)} / ${exact.diff(viaBloom)}")
-    assert(exact == (2001L to 2060L).toSet, s"got $exact")
   }
 
   test("persisted band table: same pairs as live banding, no corpus-side exchange") {

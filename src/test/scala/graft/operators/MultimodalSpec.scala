@@ -188,15 +188,6 @@ class MultimodalSpec extends SparkSpec {
     assert(counts == expected)
   }
 
-  test("videoFrames refuses loudly: frame pixels need a native codec (documented-terminal)") {
-    val media = Multimodal.synthesizeVideo(Seq(1L).toDF("id"), "id")
-    val e = intercept[UnsupportedOperationException] {
-      Multimodal.videoFrames(media)
-    }
-    assert(e.getMessage.contains("native video codec") &&
-      e.getMessage.contains("decodeVideo"))
-  }
-
   test("sampleFrames emits every stride-th frame index") {
     val df = Seq((1L, 10), (2L, 1)).toDF("media_id", "nf")
     val out = Multimodal.sampleFrames(df, col("nf"), stride = 4)

@@ -14,6 +14,24 @@ class SimilaritySpec extends SparkSpec {
     (4L, Seq(-1.0f, 0.0f, 0.0f))   // opposite
   ).toDF("vec_id", "embedding")
 
+  /** Candidate-pair count of [[Similarity.cosineNearDupes]]' blocking stage
+    * at (planes, bands): Σ_buckets m·(m−1)/2 per band, counted from bucket
+    * sizes with no join.
+    */
+  private def candidateCount(corpus: org.apache.spark.sql.DataFrame,
+                             planes: Int, bands: Int): Long = {
+    val banded = corpus.select(col("vec_id").as("doc"), col("embedding").as("e"))
+      .filter(Similarity.norm(col("e")) > 0)
+      .select(col("doc"), explode(array((0 until bands).map { bnd =>
+        struct(lit(bnd).as("band"),
+          Similarity.srpSignature(col("e"), planes, 42L + 1315423911L * bnd).as("sig"))
+      }: _*)).as("bk"))
+      .select(col("doc"), col("bk.band"), col("bk.sig"))
+    banded.groupBy(col("band"), col("sig")).agg(count(lit(1)).as("m"))
+      .agg(coalesce(sum(col("m") * (col("m") - 1)), lit(0L)).as("p"))
+      .first().getLong(0) / 2
+  }
+
   test("cosine: identical=1, orthogonal=0, opposite=-1") {
     val a = vecs.as("a"); val b = vecs.as("b")
     val cos = a.join(b, col("a.vec_id") === 0)
@@ -227,10 +245,8 @@ class SimilaritySpec extends SparkSpec {
     // both sizes sit in the unclamped regime of autoPlanes (>= 8 bits
     // before the floor), where the ~32-row occupancy target is active
     val small = 32768; val big = 262144
-    val pSmall = Similarity.cosineCandidateCount(corpus(small), "vec_id",
-      Similarity.autoPlanes(small), bands = 4)
-    val pBig = Similarity.cosineCandidateCount(corpus(big), "vec_id",
-      Similarity.autoPlanes(big), bands = 4)
+    val pSmall = candidateCount(corpus(small), Similarity.autoPlanes(small), bands = 4)
+    val pBig = candidateCount(corpus(big), Similarity.autoPlanes(big), bands = 4)
     assert(pSmall > 0, "probe needs some collisions to be meaningful")
     val ratio = pBig.toDouble / pSmall
     assert(ratio < 3.0 * (big.toDouble / small),

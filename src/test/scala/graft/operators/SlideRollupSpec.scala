@@ -29,10 +29,10 @@ class SlideRollupSpec extends SparkSpec {
     assert(out.toSeq == Seq(1, 0)) // exactly 0.5 -> predicted 1 (>= semantics)
   }
 
-  test("confidence and probClass1 are inverses through the pred gate") {
+  test("confidence is its own inverse through the pred gate") {
     val df = Seq((1, 0.8), (0, 0.3)).toDF("pred", "score1")
       .withColumn("conf", SlideRollup.confidence(col("score1"), col("pred")))
-      .withColumn("back", SlideRollup.probClass1(col("conf"), col("pred")))
+      .withColumn("back", SlideRollup.confidence(col("conf"), col("pred")))
     val rows = df.select("score1", "conf", "back").as[(Double, Double, Double)].collect()
     assert(rows(0) == ((0.8, 0.8, 0.8)))
     assert(math.abs(rows(1)._2 - 0.7) < 1e-12 && math.abs(rows(1)._3 - 0.3) < 1e-12)

@@ -86,18 +86,6 @@ class StratifiedFoldsSpec extends SparkSpec {
     assert(bySet == Map("val" -> 2L, "test" -> 4L, "train" -> 7L))
   }
 
-  test("assignHashed: balanced in expectation within each stratum, no shuffle") {
-    val big = spark.range(20000).select(col("id"), (col("id") % 4).as("stratum"))
-    val f = StratifiedFolds.assignHashed(big, col("id"), 5)
-    val counts = f.groupBy("stratum", "fold").count().select("count").as[Long].collect()
-    val expected = 20000.0 / 4 / 5 // = 1000 per (stratum, fold)
-    counts.foreach(c => assert(math.abs(c - expected) < expected * 0.15,
-      s"hashed fold count $c deviates >15% from $expected"))
-    // no Exchange in the plan: hashing is shuffle-free
-    val plan = f.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"), "assignHashed must not shuffle")
-  }
-
   test("audit reports per-fold class counts and means") {
     val f = StratifiedFolds.assignRoundRobin(
       slides.withColumn("age", col("id").cast("double")),

@@ -45,45 +45,6 @@ class SourcesSpec extends SparkSpec {
     assert(plan.contains("BroadcastHashJoin"), s"C1 must broadcast:\n$plan")
   }
 
-  test("bucketed tables join without a shuffle on either side") {
-    for (t <- Seq("b_facts", "b_dims")) {
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val loc = Paths.get("spark-warehouse", t)
-      if (Files.exists(loc)) {
-        import scala.jdk.CollectionConverters._
-        Files.walk(loc).iterator().asScala.toSeq.reverse.foreach(Files.delete)
-      }
-    }
-    val n = 500
-    val facts = (0 until n).map(i => (i.toLong % 50, i.toDouble)).toDF("k", "v")
-    val dims = (0L until 50L).map(i => (i, s"d$i")).toDF("k", "name")
-    Sources.writeBucketed(facts, "b_facts", "k", 8)
-    Sources.writeBucketed(dims, "b_dims", "k", 8)
-    val joined = spark.table("b_facts").join(spark.table("b_dims").hint("merge"), "k")
-    assert(joined.count() == n)
-    val plan = joined.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange hashpartitioning"),
-      s"bucketed SMJ must not shuffle either side:\n$plan")
-  }
-
-  test("partitioned sink prunes partitions at planning time") {
-    val dir = fixtureDir("partitioned")
-    val df = spark.range(300).select(col("id"),
-      (col("id") % 3).cast("string").as("src"),
-      (col("id") * 2).as("v"))
-    Sources.writePartitioned(df, dir, Seq("src"))
-    val filtered = spark.read.parquet(dir).filter(col("src") === "1")
-    assert(filtered.count() == 100)
-    val scan = filtered.queryExecution.executedPlan.toString
-    // the src filter must be a PARTITION filter (directory pruning), not a
-    // row-level pushed filter over all files
-    assert(scan.contains("PartitionFilters") &&
-      "PartitionFilters: \\[[^\\]]*src".r.findFirstIn(scan).isDefined,
-      s"src=1 not applied as a partition filter:\n$scan")
-    val partsRead = filtered.select(countDistinct(col("src"))).as[Long].head()
-    assert(partsRead == 1)
-  }
-
   test("JSONL sink + schema'd scan round-trip, including newlines-in-text") {
     val dir = fixtureDir("jsonl_roundtrip")
     val df = Seq(
@@ -98,22 +59,6 @@ class SourcesSpec extends SparkSpec {
       Set((1L, Some("line one\nline two"), "en"),
         (2L, Some("tabs\tand \"quotes\" survive"), "de"),
         (3L, None, "fr")))
-  }
-
-  test("writeSized: exact file count from skewed input; maxRecordsPerFile splits") {
-    val dir = fixtureDir("sized_sink")
-    // skewed upstream: 1000 rows in one partition, 5 in another
-    val df = spark.range(1000).coalesce(1)
-      .union(spark.range(2000, 2005).coalesce(1))
-    Sources.writeSized(df.toDF("id"), dir, files = 4)
-    def parquetFiles = new java.io.File(dir).listFiles()
-      .count(f => f.getName.endsWith(".parquet"))
-    assert(parquetFiles == 4, s"expected 4 files, got $parquetFiles")
-    assert(spark.read.parquet(dir).count() == 1005)
-    // a records-per-file cap splits oversized partitions
-    Sources.writeSized(df.toDF("id"), dir, files = 1, maxRecordsPerFile = 300L)
-    assert(parquetFiles >= 4, s"cap must split the single partition: $parquetFiles")
-    assert(spark.read.parquet(dir).count() == 1005)
   }
 
   test("schema evolution: mergeSchema unions columns across file generations") {

@@ -22,10 +22,6 @@ class DocStreamSpec extends SparkSpec {
   private def t(minute: Int): Timestamp =
     Timestamp.valueOf(f"2024-01-01 00:$minute%02d:00")
 
-  private def corpus = Seq(
-    (10L, "already ingested text one"),
-    (11L, "already ingested text two")).toDF("doc_id", "text")
-
   test("foreachBatch runs on a per-stream session clone: gate AQE tuning cannot leak") {
     // the r19 trigger tuning (DocStream.tuneTriggerSession) mutates
     // spark.sql.adaptive.enabled on the session foreachBatch hands it —
@@ -258,65 +254,6 @@ class DocStreamSpec extends SparkSpec {
     assert(seg == Seq(None, Some(200L)), s"appended segment: $seg")
   }
 
-  test("streaming ingest gate: corpus dups and stream re-sends drop, fresh docs pass") {
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[Doc]
-    val q = DocStream.dedupedIngest(in.toDF(), corpus)
-      .writeStream.format("memory").queryName("doc_sink")
-      .outputMode("append").start()
-    try {
-      in.addData(
-        Doc(20L, t(1), "already ingested text one"), // corpus dup -> drop
-        Doc(21L, t(2), "brand new text"),
-        Doc(22L, t(3), "brand new text"),            // in-batch re-send -> drop
-        Doc(23L, t(4), "another new text"))
-      q.processAllAvailable()
-      in.addData(
-        Doc(24L, t(6), "brand new text"),            // cross-batch re-send -> drop
-        Doc(25L, t(7), "already ingested text two"), // corpus dup -> drop
-        Doc(26L, t(8), "third new text"))
-      q.processAllAvailable()
-    } finally q.stop()
-    val kept = spark.table("doc_sink").select("doc_id").as[Long].collect().sorted
-    assert(kept.toSeq == Seq(21L, 23L, 26L), s"got ${kept.toSeq}")
-  }
-
-  test("checkpoint recovery: kill/restart mid-stream drops nothing, dups nothing") {
-    // exactly-once across a crash: parquet sink + real checkpoint dir,
-    // stop the query between micro-batches, restart from the SAME
-    // checkpoint, and require (a) the within-stream dedup STATE survived
-    // (a post-restart re-send still drops) and (b) the final keeper set
-    // equals the batch gate run over everything — no loss, no dups.
-    implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft-docrec").toString
-    val in = MemoryStream[Doc]
-    def start() = DocStream.dedupedIngest(in.toDF(), corpus)
-      .writeStream.format("parquet")
-      .option("path", s"$dir/out")
-      .option("checkpointLocation", s"$dir/ckpt")
-      .outputMode("append").start()
-    val batch1 = Seq(
-      Doc(20L, t(1), "already ingested text one"), // corpus dup -> drop
-      Doc(21L, t(2), "brand new text"),
-      Doc(22L, t(3), "another new text"))
-    val batch2 = Seq(
-      Doc(23L, t(5), "brand new text"),            // re-send ACROSS restart
-      Doc(24L, t(6), "already ingested text two"), // corpus dup -> drop
-      Doc(25L, t(7), "post-restart fresh text"))
-    val q1 = start()
-    try { in.addData(batch1: _*); q1.processAllAvailable() } finally q1.stop()
-    val q2 = start()                               // recover from checkpoint
-    try { in.addData(batch2: _*); q2.processAllAvailable() } finally q2.stop()
-    val survived = spark.read.parquet(s"$dir/out")
-      .select("doc_id").as[Long].collect().sorted.toSeq
-    assert(survived == survived.distinct, s"duplicated rows after recovery: $survived")
-    val batched = Dedup.dropDupesAgainst(
-        (batch1 ++ batch2).toDF().drop("ts"), corpus, "doc_id", "text")
-      .select("doc_id").as[Long].collect().sorted.toSeq
-    assert(survived == batched,
-      s"recovered stream $survived != batch gate $batched")
-  }
-
   test("streaming NEAR-dup gate: LSH probe per micro-batch equals the batch gate") {
     implicit val sqlCtx = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("graft-neargate").toString
@@ -483,26 +420,6 @@ class DocStreamSpec extends SparkSpec {
     val scan = spark.read.parquet(s"$work/cells")
       .filter(col("cell").isin(1)).queryExecution.executedPlan.toString
     assert(scan.contains("PartitionFilters: [") && scan.contains("cell"), scan)
-  }
-
-  test("stream gate matches the batch gate's keeper set on the same data") {
-    implicit val sqlCtx = spark.sqlContext
-    val batch = Seq(
-      Doc(20L, t(1), "already ingested text one"),
-      Doc(21L, t(2), "brand new text"),
-      Doc(22L, t(3), "brand new text"),
-      Doc(23L, t(4), "another new text")).toSeq
-    val in = MemoryStream[Doc]
-    val q = DocStream.dedupedIngest(in.toDF(), corpus)
-      .writeStream.format("memory").queryName("doc_sink_parity")
-      .outputMode("append").start()
-    try { in.addData(batch: _*); q.processAllAvailable() } finally q.stop()
-    val streamed = spark.table("doc_sink_parity")
-      .select("doc_id").as[Long].collect().toSet
-    val batched = Dedup.dropDupesAgainst(
-        batch.toDF().drop("ts"), corpus, "doc_id", "text")
-      .select("doc_id").as[Long].collect().toSet
-    assert(streamed == batched, s"stream $streamed != batch $batched")
   }
 
   test("streaming ppl gate == batch pplGate; batch split cannot change it") {

@@ -3,7 +3,6 @@ package graft.streaming
 import java.sql.Timestamp
 
 import graft.SparkSpec
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -15,10 +14,6 @@ class EventStreamSpec extends SparkSpec {
 
   private def t(minute: Int): Timestamp =
     Timestamp.valueOf(f"2024-01-01 ${minute / 60}%02d:${minute % 60}%02d:00")
-
-  /** Minutes from t(0) (epoch-absolute window starts, relative assertions). */
-  private def minutesFromT0(winStartUs: Column): Column =
-    (winStartUs - lit(t(0).getTime * 1000L)) / 60000000L
 
   private var sinkId = 0
   private def nextSink(): String = { sinkId += 1; s"es_sink_$sinkId" }
@@ -37,75 +32,6 @@ class EventStreamSpec extends SparkSpec {
     try batches.foreach { b => in.addData(b); q.processAllAvailable() }
     finally q.stop()
     sink
-  }
-
-  test("tumbling window counts finalize in append mode once watermark passes") {
-    val early = Seq(
-      Ev(1, t(5), 1, "view", 1.0), Ev(2, t(10), 2, "view", 2.0),
-      Ev(3, t(65), 1, "click", 3.0))
-    // batch 2 pushes event time far enough that hour-0 and hour-1 close
-    val late = Seq(Ev(4, t(400), 3, "view", 4.0))
-    val sink = run(Seq(early, late), "append")(
-      EventStream.tumblingTypeCounts(_, "1 hour", "10 minutes"))
-    val out = spark.table(sink)
-      .select(minutesFromT0(unix_micros(col("win_start"))), col("event_type"), col("n"))
-      .as[(Double, String, Long)].collect().toSet
-    assert(out.contains((0.0, "view", 2L)), s"hour-0 views, got $out")
-    assert(out.contains((60.0, "click", 1L)), s"hour-1 clicks, got $out")
-  }
-
-  test("late event beyond the watermark is dropped") {
-    val batches = Seq(
-      Seq(Ev(1, t(5), 1, "view", 1.0)),
-      Seq(Ev(2, t(600), 2, "view", 1.0)),      // advances watermark to 590min
-      Seq(Ev(3, t(7), 1, "view", 1.0)),        // hour-0 already finalized -> dropped
-      Seq(Ev(4, t(1200), 9, "view", 1.0)))     // flush
-    val sink = run(batches, "append")(
-      EventStream.tumblingTypeCounts(_, "1 hour", "10 minutes"))
-    val hour0 = spark.table(sink)
-      .filter(col("win_start") === lit(t(0)))
-      .select(col("n")).as[Long].collect()
-    assert(hour0.toSeq == Seq(1L), "late event must not reopen the closed window")
-  }
-
-  test("session windows merge events within gap, split across it") {
-    val batch = Seq(
-      Ev(1, t(0), 1, "view", 1.0), Ev(2, t(10), 1, "view", 1.0),  // session A
-      Ev(3, t(120), 1, "view", 1.0),                              // session B (gap > 30m)
-      Ev(4, t(0), 2, "view", 1.0))                                // other user
-    val flush = Seq(Ev(5, t(2000), 9, "view", 1.0))
-    val sink = run(Seq(batch, flush), "append")(
-      EventStream.sessionAgg(_, "30 minutes", "10 minutes"))
-    val sessions = spark.table(sink)
-      .select(col("user_id"), col("n_events")).as[(Long, Long)].collect()
-      .groupBy(_._1).view.mapValues(_.map(_._2).sorted.toSeq).toMap
-    assert(sessions(1L) == Seq(1L, 2L), s"user 1 sessions: $sessions")
-    assert(sessions(2L) == Seq(1L))
-  }
-
-  test("dedupByEventId drops re-delivered events within the watermark") {
-    val batches = Seq(
-      Seq(Ev(1, t(0), 1, "view", 1.0), Ev(2, t(1), 1, "view", 1.0)),
-      Seq(Ev(1, t(0), 1, "view", 1.0), Ev(3, t(2), 1, "view", 1.0)))  // 1 re-delivered
-    val sink = run(batches, "append")(EventStream.dedupByEventId(_, "1 hour"))
-    val ids = spark.table(sink).select("event_id").as[Long].collect().sorted
-    assert(ids.toSeq == Seq(1L, 2L, 3L))
-  }
-
-  test("streaming tumbling counts equal the batch groupBy on the same data") {
-    val evs = (0 until 100).map(i =>
-      Ev(i.toLong, t(i * 3), i % 7L, if (i % 3 == 0) "click" else "view", i.toDouble))
-    val flush = Seq(Ev(999, t(5000), 9, "view", 0.0))
-    val sink = run(Seq(evs, flush), "append")(
-      EventStream.tumblingTypeCounts(_, "1 hour", "0 seconds"))
-    val streamed = spark.table(sink)
-      .filter(col("win_start") < lit(t(300)))
-      .select(col("win_start"), col("event_type"), col("n"), col("total_value"))
-      .as[(Timestamp, String, Long, Double)].collect().toSet
-    val batch = EventStream.tumblingTypeCounts(evs.toDF(), "1 hour", "0 seconds")
-      .select(col("win_start"), col("event_type"), col("n"), col("total_value"))
-      .as[(Timestamp, String, Long, Double)].collect().toSet
-    assert(streamed == batch)
   }
 
   test("statefulSessions: gap split emits immediately, timeout closes the tail") {
@@ -167,22 +93,6 @@ class EventStreamSpec extends SparkSpec {
     assert(streamed == batch, s"stream=$streamed\nbatch=$batch")
   }
 
-  test("file-sink streaming (parquet + checkpoint) equals the batch filter") {
-    val evs = (0 until 50).map(i => Ev(i.toLong, t(i), i % 5L, "view", i.toDouble))
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[Ev]
-    val dir = java.nio.file.Files.createTempDirectory("es_file_sink").toString
-    val q = EventStream.highValueAlerts(in.toDF(), 25.0).writeStream
-      .format("parquet").option("path", s"$dir/out")
-      .option("checkpointLocation", s"$dir/ckpt")
-      .outputMode("append").start()
-    try { in.addData(evs); q.processAllAvailable() } finally q.stop()
-    val streamed = spark.read.parquet(s"$dir/out")
-      .select("event_id").as[Long].collect().toSet
-    val batch = evs.filter(_.value >= 25.0).map(_.event_id).toSet
-    assert(streamed == batch, s"file sink rows: $streamed")
-  }
-
   test("replaySessions (bounded streaming replay) matches the batch sessionizer exactly") {
     // integer-valued doubles so total_value is summation-order-exact
     val evs = (0 until 40).map(i =>
@@ -197,98 +107,5 @@ class EventStreamSpec extends SparkSpec {
       .select(cols.map(col): _*)
       .as[(Long, Long, Long, Long, Double)].collect().toSet
     assert(streamed == batch, s"stream=$streamed\nbatch=$batch")
-  }
-
-  test("stream-stream funnel join matches the batch funnel on the same data") {
-    val evs = (0 until 80).map { i =>
-      Ev(i.toLong, t(i * 7 % 240), i % 5L,
-        if (i % 2 == 0) "view" else "click", 1.0)
-    }
-    val sink = run(Seq(evs), "append")(
-      EventStream.streamStreamFunnel(_, "view", "click", "30 MINUTES", "0 seconds"))
-    val streamed = spark.table(sink)
-      .select("l_id", "r_id").as[(Long, Long)].collect().toSet
-    val batch = graft.operators.Events.funnelPairs(
-        evs.toDF().withColumn("ts_us", unix_micros(col("ts")))
-          .withColumn("from_id", col("event_id")),
-        "view", "click", withinUs = 30L * 60 * 1000000)
-      .count()
-    assert(streamed.size.toLong == batch, s"stream=${streamed.size} batch=$batch")
-    assert(streamed.nonEmpty)
-  }
-
-  test("sliding windows overlap: each event lands in window/slide windows") {
-    val evs = Seq(Ev(1, t(65), 1, "view", 1.0))
-    val flush = Seq(Ev(2, t(4000), 9, "view", 0.0))
-    val sink = run(Seq(evs, flush), "append")(
-      EventStream.slidingCounts(_, "1 hour", "15 minutes", "0 seconds"))
-    val wins = spark.table(sink)
-      .filter(col("n") === 1)
-      .select(minutesFromT0(unix_micros(col("win_start")))).as[Double]
-      .collect().toSet
-    assert(wins == Set(15.0, 30.0, 45.0, 60.0), s"got $wins")
-  }
-
-  test("file-source streaming over the real events parquet equals batch") {
-    // the realistic ingest: readStream over a parquet directory, with the
-    // same explicit-TimestampType schema Tables.events uses for the
-    // micros-form batch path (stored int64 micros land verbatim)
-    val dir = java.nio.file.Paths.get("target", "tmp", "stream_events")
-    java.nio.file.Files.createDirectories(dir)
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"),
-      dir.resolve("events.parquet"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    val ddl = "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE, props STRING"
-    val streamIn = spark.readStream
-      .schema(org.apache.spark.sql.types.StructType.fromDDL(ddl))
-      .parquet(dir.toString)
-    val q = EventStream.tumblingTypeCounts(streamIn, "1 hour", "1 minute")
-      .writeStream.format("memory").queryName("es_file_sink")
-      .outputMode("complete").start()
-    try q.processAllAvailable() finally q.stop()
-    val streamed = spark.table("es_file_sink")
-      .select("win_start", "event_type", "n").as[(Timestamp, String, Long)]
-      .collect().toSet
-    val batch = EventStream.tumblingTypeCounts(
-        spark.read.schema(
-          org.apache.spark.sql.types.StructType.fromDDL(ddl))
-          .parquet(dir.toString), "1 hour", "1 minute")
-      .select("win_start", "event_type", "n").as[(Timestamp, String, Long)]
-      .collect().toSet
-    assert(streamed == batch)
-    assert(streamed.nonEmpty)
-  }
-
-  test("foreachBatch sinks windowed aggregates to parquet (production sink path)") {
-    implicit val sqlCtx = spark.sqlContext
-    val outDir = java.nio.file.Paths.get("target", "tmp", "fb_sink").toAbsolutePath
-    org.apache.commons.io.FileUtils.deleteQuietly(outDir.toFile)
-    val in = MemoryStream[Ev]
-    val q = EventStream.tumblingTypeCounts(in.toDF(), "1 hour", "0 seconds")
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        batch.write.mode("append").parquet(outDir.toString)
-      }
-      .start()
-    try {
-      in.addData(Seq(Ev(1, t(5), 1, "view", 1.0), Ev(2, t(10), 2, "view", 2.0)))
-      q.processAllAvailable()
-      in.addData(Seq(Ev(3, t(500), 3, "view", 0.0)))  // closes hour-0
-      q.processAllAvailable()
-    } finally q.stop()
-    val sunk = spark.read.parquet(outDir.toString)
-      .filter(col("win_start") === lit(t(0)))
-      .select("event_type", "n").as[(String, Long)].collect().toSet
-    assert(sunk == Set(("view", 2L)), s"got $sunk")
-  }
-
-  test("highValueAlerts is stateless filter+project (no aggregation in plan)") {
-    val df = Seq(Ev(1, t(0), 1, "view", 5.0), Ev(2, t(1), 1, "view", 50.0)).toDF()
-    val out = EventStream.highValueAlerts(df, 10.0)
-    assert(out.select("event_id").as[Long].collect().toSeq == Seq(2L))
-    assert(!out.queryExecution.executedPlan.toString.contains("Exchange"),
-      "alerts path must not shuffle")
   }
 }
