@@ -36,7 +36,9 @@ object Metrics {
     val perClass = df.select(gc :+ label.as("__y") :+ pred.as("__p"): _*)
       .groupBy(gc :+ col("__y"): _*)
       .agg(avg(when(col("__p") === col("__y"), 1.0).otherwise(0.0)).as("__recall"))
-    if (gc.isEmpty) perClass.agg(avg(col("__recall")).as("balanced_accuracy"))
+    // ungrouped: the per-class table (one row per class) on one task, so
+    // the global avg plans no exchange of its own
+    if (gc.isEmpty) Par.oneTask(perClass).agg(avg(col("__recall")).as("balanced_accuracy"))
     else perClass.groupBy(gc: _*).agg(avg(col("__recall")).as("balanced_accuracy"))
   }
 
@@ -138,13 +140,15 @@ object Metrics {
     * collapses the row set ONCE into its joint (groups, score, label)
     * distribution — a single map-side-combined hash aggregation, after
     * which both metrics are arithmetic over a table bounded by
-    * |groups| × |distinct scores| × |classes|, shuffle-free at any input
-    * scale. At 100× sf0.1 (60 M scored rows) this took the 4-model
-    * evaluation from 7.2 s to the cost of the upstream join alone.
+    * |groups| × |distinct scores| × |classes|. At 100× sf0.1 (60 M scored
+    * rows) this took the 4-model evaluation from 7.2 s to the cost of the
+    * upstream join alone.
     *
-    * The two metric branches share the joint aggregate via Spark's
-    * exchange reuse (identical subtree); if reuse is disabled the tiny
-    * aggregation recomputes — a perf detail, never a correctness one.
+    * The chain is linear: joint aggregate → per-score aggregate → ranking
+    * window → one final aggregate computing both metrics. On a
+    * hash-partitioned input each step re-groups and plans its own
+    * exchange (three); on a single-partition input (Experiment.evaluate's
+    * slide table, `Par.oneTask`) it plans none.
     *
     * BA's prediction is `score >= threshold → 1 else 0` (the roll-up
     * convention, SlideRollup.rollup1); labels must be 0/1. Returns
@@ -158,14 +162,9 @@ object Metrics {
       .select(gc :+ score.as("__s") :+ label.cast("long").as("__y"): _*)
       .groupBy(gc :+ col("__s") :+ col("__y"): _*)
       .agg(count(lit(1)).as("__jn"))
-    // ONE LINEAR DAG: joint -> per-score -> window -> final aggregate
-    // computing BOTH metrics. The earlier shape branched `joint` into a BA
-    // subtree and an AUROC subtree joined at the end — logically one pass,
-    // but physically the whole upstream pipeline (for q36: a mapPartitions
-    // scoring stage over every tile) was planned TWICE, and AQE stage
-    // reuse, not the plan, decided whether it RAN twice (measured: 2
-    // lineitem scans, 0 ReusedExchange in q36's executed plan). A linear
-    // chain cannot re-execute upstream by construction.
+    // one linear chain, no BA/AUROC branch join: a branched shape plans
+    // the whole upstream pipeline twice and leaves it to AQE's stage reuse
+    // whether it also RUNS twice; a chain cannot re-execute upstream
     val byScore = joint.groupBy(gc :+ col("__s"): _*)
       .agg(sum(when(col("__y") === 1L, col("__jn")).otherwise(0L)).as("__pos"),
         sum(col("__jn")).as("__n"))

@@ -47,6 +47,9 @@ object Experiment {
     */
   def prepare(meta: DataFrame, cfg: Config): DataFrame = {
     val a = cfg.ageCol
+    // slide metadata on one task: the stats collect below and the fold
+    // window plan no exchange
+    val slides = Par.oneTask(meta)
     // Scalar fills as LITERALS, via bounded one-row collects (r18).
     // Attached as broadcast cross-joins (the previous shape), the stats
     // and per-column mode subtrees are UN-PRUNABLE: a join may change the
@@ -89,13 +92,13 @@ object Experiment {
     val baseAggs = Seq(avg(col(a)).cast("double").as("__mean"),
       min(col(a)).cast("double").as("__min"),
       max(col(a)).cast("double").as("__max")) ++ catAggs
-    val statsRow = meta.agg(baseAggs.head, baseAggs.tail: _*).head()
+    val statsRow = slides.agg(baseAggs.head, baseAggs.tail: _*).head()
     def dlit(i: Int): Column =
       if (statsRow.isNullAt(i)) lit(null).cast("double")
       else lit(statsRow.getDouble(i))
     val (meanL, minL, maxL) = (dlit(0), dlit(1), dlit(2))
     val span = maxL - minL
-    val scaled = meta
+    val scaled = slides
       .withColumn(a, coalesce(col(a), meanL))
       // same constant-column guard as Encode.scale01: span 0 scales to 0.0
       .withColumn(s"${a}_scaled",
@@ -145,13 +148,16 @@ object Experiment {
     // of the slide exchange over every scored tile); int/double-only
     // buffers keep it a HashAggregate. Dropping `set` from the broadcast
     // side also narrows the build relation.
-    val slides = SlideRollup.rollup1(
+    // the tile stage (scoring, broadcast join, partial roll-up) stays
+    // parallel; from the roll-up's exchange on, the slide table is one
+    // task, so evalSuite and the caller's orderBy plan no exchange
+    val slides = Par.oneTask(SlideRollup.rollup1(
       tileScores.join(
         broadcast(prepared.select(col(cfg.slideCol), col(cfg.labelCol),
           col("fold"))),
         Seq(cfg.slideCol)),
       col(cfg.slideCol), col("score1"), col(cfg.labelCol),
-      threshold = cfg.rollupThreshold, carry = Seq("fold"))
+      threshold = cfg.rollupThreshold, carry = Seq("fold")))
       .withColumn("set",
         StratifiedFolds.setCol(col("fold"), cfg.nVal, cfg.nTest))
     // ONE pass over the scored slides: separate balancedAccuracyBy + aurocBy

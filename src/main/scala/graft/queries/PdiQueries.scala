@@ -117,13 +117,14 @@ object PdiQueries {
         |  CAST(sum(CASE WHEN c_mktsegment = 'BUILDING' THEN 1 ELSE 0 END) AS BIGINT) AS n_building,
         |  round(avg(c_acctbal), 2) AS mean_bal
         |FROM f GROUP BY fold ORDER BY fold""".stripMargin) { (s, d) =>
-      StratifiedFolds.assignRoundRobin(
-          Tables.customer(s, d), Seq(col("c_mktsegment")), 5, col("c_custkey"))
-        .groupBy(col("fold").cast("long").as("fold"))
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("c_mktsegment") === "BUILDING", 1L).otherwise(0L)).as("n_building"),
-          round(avg(col("c_acctbal")), 2).as("mean_bal"))
-        .orderBy(col("fold"))
+      // audit's output is ordered by fold; the projection keeps that order
+      StratifiedFolds.audit(
+          StratifiedFolds.assignRoundRobin(
+            Tables.customer(s, d), Seq(col("c_mktsegment")), 5, col("c_custkey")),
+          Map("c_mktsegment" -> Seq("BUILDING")), Seq("c_acctbal"))
+        .select(col("fold").cast("long").as("fold"), col("n"),
+          col("n_c_mktsegment_BUILDING").as("n_building"),
+          round(col("mean_c_acctbal"), 2).as("mean_bal"))
     },
 
     // ---- D1 variant: order-1 iterative stratification (functions_v2.py:78-81)

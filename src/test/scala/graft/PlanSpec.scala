@@ -140,6 +140,22 @@ class PlanSpec extends SparkSpec {
       s"the persisted band side must be a bucketed read (no shuffle to join):\n$p")
   }
 
+  Seq("q36_pipeline_e2e", "q5h_fusion_pipeline").foreach { name =>
+    test(s"$name: one exchange, the roll-up's; the slide-level tail plans none") {
+      val p = plan(name)
+      val lines = p.linesIterator.toIndexedSeq
+      val hash = lines.indices.filter(i => lines(i).contains("Exchange hashpartitioning"))
+      assert(hash.size == 1, s"expected only the roll-up's exchange:\n$p")
+      assert(!p.contains("rangepartitioning") && !p.contains("Exchange SinglePartition"),
+        s"the slide-level tail must not exchange:\n$p")
+      // the exchange's child is the roll-up's partial aggregate, so the
+      // tile stage below it stays parallel
+      val child = lines(hash.head + 1)
+      assert(child.contains("HashAggregate") && child.contains("partial_avg"),
+        s"the roll-up's partial aggregate must sit below its exchange:\n$p")
+    }
+  }
+
   test("q4t incremental dedup: anti-join probes fingerprints, not text") {
     val p = plan("q4t_incremental_dedup")
     assert(p.contains("LeftAnti"), s"anti-join required:\n$p")

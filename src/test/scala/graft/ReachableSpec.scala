@@ -308,7 +308,6 @@ class ReachableSpec extends AnyFunSuite {
     "Sources.withSlideId" -> paper("C1 (stable slide_id key)"),
     "Encode.quantileBuckets" -> paper("D1 (continuous stratum discretization)"),
     "Metrics.recallByClass" -> paper("E5 (per-class recall)"),
-    "StratifiedFolds.audit" -> paper("E6 (stratification audit)"),
     "Encode.oneHotArray" -> paper("F2 (list-valued one-hot)"),
     "FusionModels.metaFeatures" -> paper("H4 (fusion model metadata extractor)"),
     "FusionModels.weightedScore" -> paper("H4 (weighted fusion model)"),

@@ -1,7 +1,11 @@
 package graft.pipeline
 
+import java.util.concurrent.atomic.AtomicInteger
+
 import graft.SparkSpec
 import graft.operators.{Encode, Impute, StratifiedFolds}
+import org.apache.spark.graft.ListenerBusAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 class ExperimentSpec extends SparkSpec {
@@ -115,6 +119,29 @@ class ExperimentSpec extends SparkSpec {
       assert(fused == seq, s"catCols=$cats: fused $fused vs sequential $seq")
       assert(fused.isEmpty == (df eq noAge), s"catCols=$cats")
     }
+  }
+
+  test("prepare runs exactly one job: the stats collect plans no exchange") {
+    // two cohorts over several input partitions, as the pipeline's
+    // metadata arrives; the one job is prepare's eager stats collect
+    val meta = Experiment.ingest(Seq(cohort(40, 0), cohort(40, 100)))
+    assert(meta.rdd.getNumPartitions > 1)
+    val group = "experiment-prepare"
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "Experiment.prepare")
+      try Experiment.prepare(meta, Experiment.Config())
+      finally sc.clearJobGroup()
+      ListenerBusAccess.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get == 1, s"prepare ran ${jobs.get} jobs")
   }
 
   test("evaluate: separable injected scores give BA and AUROC ~ 1 per (fold,set)") {
