@@ -7,12 +7,12 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
   * then the same oracle SQL in DuckDB (via tools/duckdb_bench.py), with the
   * SAME measurement discipline on both engines:
   *
-  *   1. per-query sequential latency — best of SPARK_GRAFT_RUNS (default 2)
-  *      runs; run 1 warms Janino codegen / broadcast builds / page cache,
-  *      run 2 is the steady state a repeated production query sees (DuckDB
-  *      side: GRAFT_RUNS, same default);
-  *   2. suite throughput — best-of-runs wall-clock of the whole (warm)
-  *      query set drained by SPARK_GRAFT_STREAMS (default 12) concurrent
+  *   1. per-query sequential latency — best of [[Runs]] runs; run 1 warms
+  *      Janino codegen / broadcast builds / page cache, run 2 is the steady
+  *      state a repeated production query sees (DuckDB side: GRAFT_RUNS,
+  *      passed the same count);
+  *   2. suite throughput — best-of-[[WallRuns]] wall-clock of the whole
+  *      (warm) query set drained by [[Streams]] concurrent
   *      streams from one longest-first queue, one FAIR scheduler pool per
   *      stream. The DuckDB side runs the same queue at ITS OWN
   *      measured-best concurrency (GRAFT_DUCK_STREAMS cursor threads over
@@ -27,7 +27,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
   * suite latency therefore measures 90 × (Spark's per-query constant), a
   * number that only shrinks by removing Spark from the benchmark. The
   * constant is LATENCY, not work: with N streams the scheduling gaps
-  * overlap and the 32 local cores stay busy with real operators — exactly
+  * overlap and the local cores stay busy with real operators — exactly
   * the regime a multi-tenant cluster or a production pipeline (many
   * queries in flight) runs in. Per-query sequential latencies are still
   * measured, reported in the line (`queries`) and in BENCH_DETAIL.json,
@@ -50,36 +50,57 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
   * for the judge to read directly.
   */
 object Bench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "2").toInt.max(1)
-    // stream-count knee moves with suite size and tail shape: 12 beat 8/16
-    // at 94 queries (r6), 16 beat 12/20 at 101 (r7), 20 beat 16/24 at 103
-    // (r8), 24 beat 20/28 at 106 (r9); on the 112-query r10 suite the knee
-    // moved to 28 streams WITH shuffle=2 (same-session sweep, spark-only
-    // walls: 24/4 9.84, 20/4 10.92, 28/4 10.36, 32/4 12.46, 24/2 8.95,
-    // 28/2 8.72-8.96, 28/3 9.47, 24/1 12.21) — re-sweep when the suite
-    // grows again
-    val streams = sys.env.getOrElse("SPARK_GRAFT_STREAMS", "28").toInt.max(1)
-    // optional comma-separated name-prefix filter for config experiments
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSet)
-    // shuffle partitions sized for the BENCH data (~600k-row tables), not
-    // the core count: per-stage cost at toy scale is tasks × launch
-    // overhead, and even CPU-bound verify stages finish faster with a few
-    // fat tasks. Early 8-stream FAIR walls at sf0.1 found the knee at 4
-    // (32 parts 21.1s, 8 parts 15.1s, 4 parts 10.7s, 2 parts 15.3s); at
-    // the r10 suite's 28-stream contention the knee moved to 2 (see the
-    // sweep above — at 28 concurrent streams, in-stage parallelism is
-    // already supplied by the OTHER streams, so fewer, fatter tasks per
-    // stage win; 1 over-serializes the big aggregations). At cluster
-    // scale partitions are sized by data; this is the same sizing
-    // discipline applied to a small input.
-    val shufParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "2")
-    val spark = SparkSession.builder()
+  /** Concurrent streams of the suite-throughput pass and the session's
+    * shuffle partitions: the best cell of a Spark-only streams
+    * {4, 8, 16, 28} × partitions {1, 2, 4} sweep of the 159-query suite at
+    * sf0.1 on a 4-cpu host, ahead of the old 28/2 in 2 of 3 confirmation
+    * pairs (table in tools/bench_gate.md). Re-sweep when the suite or the
+    * host changes.
+    */
+  private val Streams = 4
+  private val ShufflePartitions = 1
+  /** Sequential runs per query (best of): run 1 warms codegen, broadcast
+    * builds and the page cache, run 2 is the steady state. */
+  private val Runs = 2
+  /** Suite-throughput wall passes per attempt (best of): one pass is
+    * hostage to one bad interleave or contention burst. */
+  private val WallRuns = 3
+  /** Whole seq+wall attempts before the gate gives up on a quiet window. */
+  private val MaxAttempts = 4
+  /** Quiet-window bar on the best-of-3 DuckDB canary, seconds; the shell
+    * copy in tools/canary.sh must match. */
+  private val CanaryBar = 0.032
+  /** Max/min across one attempt's wall passes above this is a mid-suite
+    * burst. */
+  private val WallDispBar = 1.25
+  /** An attempt whose sequential sum exceeds the committed record's by
+    * this factor ran in a slower window than the engine has shown. */
+  private val SeqRecordFactor = 1.15
+
+  /** How many attempts, sequential runs per query and wall passes one
+    * invocation takes. */
+  private[graft] final case class Passes(attempts: Int, runs: Int, wallRuns: Int)
+
+  /** A graft.ScaleData copy (each table a directory of part files) is a
+    * scale run: its canary reads the scaled lineitem, so it is above the
+    * quiet bar by construction and a retry could never land a quiet
+    * window, and one pass each keeps a 10× suite near 20 minutes on 4
+    * cpus. Every other sf dir gets the full gate.
+    */
+  private[graft] def passes(sfDir: String): Passes =
+    if (scaleCopy(sfDir)) Passes(attempts = 1, runs = 1, wallRuns = 1)
+    else Passes(MaxAttempts, Runs, WallRuns)
+
+  private def scaleCopy(sfDir: String): Boolean =
+    new java.io.File(s"$sfDir/lineitem.parquet").isDirectory
+
+  /** The session shape Bench measures and Plans captures, so captured
+    * plans match the benchmarked ones by construction.
+    */
+  private[graft] def session(cpus: String): SparkSession =
+    SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufParts)
+      .config("spark.sql.shuffle.partitions", ShufflePartitions.toString)
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.ui.enabled", "false")
       .config("spark.locality.wait", "0")
@@ -90,6 +111,15 @@ object Bench {
       // concurrent jobs so streams actually overlap
       .config("spark.scheduler.mode", "FAIR")
       .getOrCreate()
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
+    // optional comma-separated name-prefix filter for experiments
+    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSet)
+    val Passes(maxAttempts, runs, wallRuns) = passes(sfDir)
+    val spark = session(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // phase walls (warmup/seq/each wall pass) + host canaries AROUND the
     // Spark passes: the DuckDB-side canary certifies only DuckDB's window,
@@ -103,10 +133,9 @@ object Bench {
       phases(name) = (System.nanoTime() - t0) / 1e9
       r
     }
-    // a graft.ScaleData dir holds each table as a directory of part files
     val canaryLi = {
       val p = s"$sfDir/lineitem.parquet"
-      if (new java.io.File(p).isDirectory) s"$p/*.parquet" else p
+      if (scaleCopy(sfDir)) s"$p/*.parquet" else p
     }
     /** Warm DuckDB canary aggregate via python3, BEST OF THREE (~quiet
       * <= 0.03 s, degraded >= 0.2 s — tools/bench_gate.md); -1 if
@@ -189,7 +218,7 @@ object Bench {
       val queue = new java.util.concurrent.ConcurrentLinkedQueue[String]()
       order.toSeq.sortBy(-_._2).foreach { case (n, _) => queue.add(n) }
       val t0 = System.nanoTime()
-      val workers = (1 to streams).map { i =>
+      val workers = (1 to Streams).map { i =>
         new Thread(() => {
           // one scheduler pool PER STREAM: FAIR mode is fair ACROSS pools,
           // but jobs inside a single pool (all jobs, if none is assigned —
@@ -209,16 +238,12 @@ object Bench {
       workers.foreach(_.join())
       (System.nanoTime() - t0) / 1e9
     }
-    // the wall IS the headline and a single pass is hostage to one bad
-    // interleave or contention burst — take best of SPARK_GRAFT_WALL_RUNS
-    // (default 3) and record every pass so the artifact shows the spread
-    val wallRuns = sys.env.getOrElse("SPARK_GRAFT_WALL_RUNS", "3").toInt.max(1)
     // SELF-DEFENDING suite: a whole seq+wall attempt whose endpoint
-    // canaries exceed the quiet bar (~0.032 s — tools/bench_gate.md) was
+    // canaries exceed the quiet bar (tools/bench_gate.md) was
     // taken in a contended window and would report the host, not the
     // engine (the r15 gate artifact read 1.68× in a window the builder's
     // own discipline would have rejected, against a 0.985× certified quiet
-    // reading). Re-run the suite up to SPARK_GRAFT_BENCH_ATTEMPTS times
+    // reading). Re-run the suite up to `maxAttempts` times
     // until an attempt's three endpoint canaries are all quiet, keep the
     // per-query and wall MINIMA across the CLEAN attempts only (noisy
     // attempts' numbers are discarded once a clean window exists — a
@@ -226,32 +251,23 @@ object Bench {
     // certificate), and certify the emitted canary_spark from the
     // quietest kept attempt. A canary of -1 (no python3/duckdb) can't
     // certify anything and stops the loop.
-    val canaryBar = sys.env.getOrElse("SPARK_GRAFT_CANARY_BAR", "0.032").toDouble
-    // 4 attempts (was 3): v2's steadiness triggers reject more windows
-    // than the canary alone did, and the first live run spent all three
-    // without landing a fully-quiet one — the budget buys the retry loop
-    // room to actually find the window it now knows how to recognize
-    val maxAttempts = sys.env.getOrElse("SPARK_GRAFT_BENCH_ATTEMPTS", "4").toInt.max(1)
     // SELF-DEFENSE v2 (r16 verdict): the endpoint canaries certify only the
     // instants AROUND the suite — the r16 artifact of record shipped a
     // 17.96 s wall under clean canaries while its own three wall runs read
     // 17.96/26.66/20.25 s (48% dispersion) and quiet windows read 12.7 s.
     // Two in-suite triggers close that blind spot:
     //   (a) wall-run dispersion — max/min across the attempt's own wall
-    //       passes above SPARK_GRAFT_WALL_DISP_BAR (1.25) means a burst hit
-    //       MID-suite where no endpoint canary looks;
+    //       passes above WallDispBar means a burst hit MID-suite where no
+    //       endpoint canary looks;
     //   (b) the committed record — an attempt whose sequential sum exceeds
     //       the last committed BENCH_DETAIL.json's by more than
-    //       SPARK_GRAFT_SEQ_RECORD_FACTOR (1.15, over the shared query set)
-    //       is slower than this same engine has already demonstrably run,
-    //       so the window, not the engine, regressed.
+    //       SeqRecordFactor (over the shared query set) is slower than this
+    //       same engine has already demonstrably run, so the window, not
+    //       the engine, regressed.
     // Both only trigger RETRIES — they never alter numbers — and the kept
     // attempt preference degrades honestly: fully-quiet attempts first,
     // then canary-clean ones, then everything (the artifact's canary_spark
     // and wall_disp fields self-document what certificate it ships under).
-    val dispBar = sys.env.getOrElse("SPARK_GRAFT_WALL_DISP_BAR", "1.25").toDouble
-    val recFactor =
-      sys.env.getOrElse("SPARK_GRAFT_SEQ_RECORD_FACTOR", "1.15").toDouble
     // the record: per-query sequential seconds from the last committed
     // full-suite detail artifact, usable only for the same sf dir
     val record: Map[String, Double] = recordedSeq(sfDir)
@@ -276,12 +292,12 @@ object Bench {
       def dispersion: Double =
         if (walls.size < 2 || walls.min <= 0) -1.0 else walls.max / walls.min
       def clean: Boolean = Seq(cPreSeq, cPreWall, cPostWall)
-        .forall(c => c >= 0 && c <= canaryBar)
+        .forall(c => c >= 0 && c <= CanaryBar)
       // unknown dispersion cannot trigger a retry (there is nothing to
-      // re-measure with WALL_RUNS=1) but it ships as -1, not as steady
-      def steady: Boolean = dispersion < 0 || dispersion <= dispBar
+      // re-measure with one wall pass) but it ships as -1, not as steady
+      def steady: Boolean = dispersion < 0 || dispersion <= WallDispBar
       def underRecord: Boolean = {
-        val r = seqVsRecord(res); r < 0 || r <= recFactor
+        val r = seqVsRecord(res); r < 0 || r <= SeqRecordFactor
       }
       // the QUIET tier demands in-suite evidence, not just endpoints: with
       // a single wall pass dispersion is unknowable, so the best-of-3
@@ -327,7 +343,7 @@ object Bench {
     // artifact self-documents its contention.
     val kept = {
       val quiet = attempts.filter(_.quiet)
-      // the acceptable tier matters at WALL_RUNS=1, where `quiet` is
+      // the acceptable tier matters with one wall pass, where `quiet` is
       // unreachable (it requires >= 2 wall passes): without it the kept
       // set degraded straight to canary-clean, letting an attempt that
       // FAILED the seq-vs-record trigger supply the shipped wall under a
@@ -364,7 +380,7 @@ object Bench {
                  else phase("duckdb")(duckdbBaseline(spark, sfDir, runs, wallRuns))
     // experiments must not clobber the committed full-suite artifact
     if (only.isEmpty)
-      writeDetail(results, sparkWall, duckdb, streams, sfDir, phases.toMap,
+      writeDetail(results, sparkWall, duckdb, Streams, sfDir, phases.toMap,
         wallRuns, codegen.toMap)
     // THREE printed lines, compact-full-compact: the driver records only
     // the last ~2000 chars of the run's output and json.loads the lines it
@@ -374,10 +390,10 @@ object Bench {
     // inside a tail-anchored window, and the one printed BEFORE serves any
     // front-anchored consumer. Identical content, so whichever line a
     // parser keeps, the totals agree.
-    val compact = emitCompactLine(results, sparkWall, duckdb, streams, sfDir,
+    val compact = emitCompactLine(results, sparkWall, duckdb, Streams, sfDir,
       phases.toMap)
     println(compact)
-    println(emitLine(results, sparkWall, duckdb, streams, sfDir,
+    println(emitLine(results, sparkWall, duckdb, Streams, sfDir,
       phases.toMap))
     println(compact)
     spark.stop()
@@ -438,7 +454,7 @@ object Bench {
       phases.getOrElse("canary_post_wall", -1.0))
     // self-defense v2's in-suite certificate: dispersion across the kept
     // attempt's own wall passes (1.0 = perfectly steady; above
-    // SPARK_GRAFT_WALL_DISP_BAR the suite itself saw a mid-run burst the
+    // WallDispBar the suite itself saw a mid-run burst the
     // endpoint canaries cannot)
     val wallDisp = phases.getOrElse("wall_disp", -1.0)
     Totals(sparkBest, seqTotal, dWall, dSeqTotal, dFailed, dq.isEmpty,
@@ -591,24 +607,20 @@ object Bench {
     * full run (including degraded ones) overwrites the working-tree copy,
     * and a record that degrades to "whatever the previous attempt wrote"
     * would neuter trigger (b) across back-to-back runs. Falls back to the
-    * working-tree file outside a git checkout; SPARK_GRAFT_RECORD forces
-    * a specific snapshot file (and skips git). Empty when absent,
-    * unparsable, or taken at a DIFFERENT sf dir (a record certifies only
-    * its own workload).
+    * file at `path` outside a git checkout or when git has no such blob.
+    * Empty when absent, unparsable, or taken at a DIFFERENT sf dir (a
+    * record certifies only its own workload).
     */
   private[graft] def recordedSeq(sfDir: String,
-                                 path: String = sys.env.getOrElse(
-                                   "SPARK_GRAFT_RECORD", "BENCH_DETAIL.json"))
+                                 path: String = "BENCH_DETAIL.json")
       : Map[String, Double] = try {
     val txt =
-      if (!sys.env.contains("SPARK_GRAFT_RECORD")) {
-        try {
-          import scala.sys.process._
-          val out = Seq("git", "show", s"HEAD:$path").!!(
-            ProcessLogger(_ => ()))
-          if (out.contains("\"spark\"")) out else readRecordFile(path)
-        } catch { case _: Throwable => readRecordFile(path) }
-      } else readRecordFile(path)
+      try {
+        import scala.sys.process._
+        val out = Seq("git", "show", s"HEAD:$path").!!(
+          ProcessLogger(_ => ()))
+        if (out.contains("\"spark\"")) out else readRecordFile(path)
+      } catch { case _: Throwable => readRecordFile(path) }
     if (txt.isEmpty || !parseRecordSf(txt).contains(sfDir)) return Map.empty
     parseRecordSpark(txt)
   } catch { case _: Throwable => Map.empty }

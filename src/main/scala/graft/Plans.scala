@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Plan-capture main for the optimization rounds: writes each declared
@@ -10,8 +9,7 @@ import org.apache.spark.sql.execution.ExplainMode
   *
   * Usage: runMain graft.Plans <outDir> <tag> [namePrefix,...]
   * Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-  *      SPARK_GRAFT_CPUS, SPARK_GRAFT_SHUFFLE — same session shape as
-  *      Bench so the captured plans match what the bench executes.
+  *      SPARK_GRAFT_CPUS. The session is [[Bench.session]].
   *
   * NOTE: a query fn may run internal jobs (model fits, streaming
   * replays) before returning its final frame; the captured plan is the
@@ -29,14 +27,7 @@ object Plans {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors.toString)
-    val shufParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "2")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufParts)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .config("spark.scheduler.mode", "FAIR")
-      .getOrCreate()
+    val spark = Bench.session(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(outDir)
     val selected = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (n, _) =>

@@ -4,7 +4,6 @@ import graft.expressions.{BackoffLmScore, BigramLmScore, WordShingles}
 import graft.functions.TextFunctions
 import graft.plans.GroupedTopK
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Corpus n-gram language model for LM-based quality filtering — the
@@ -169,9 +168,9 @@ object NgramLm {
         ctxCap, gramCap, order)
     } else {
       // caps beyond the kernel-embed bound: the exact per-n trim replays
-      // the same (count desc, gram asc) order as a rank over the ≤ 2k
-      // GroupedTopK survivors (2 window partitions, each bounded by k —
-      // never the raw gram table), and the model persists cluster-side.
+      // the same (count desc, gram asc) top-k over the ≤ 2k GroupedTopK
+      // survivors (never the raw gram table), and the model persists
+      // cluster-side.
       // The survivors are PERSISTED for the two trims — without this, each
       // distTable call re-runs the full corpus aggregation off the lazy
       // GroupedTopK lineage and the "ONE scan" fit silently becomes two
@@ -209,10 +208,8 @@ object NgramLm {
     */
   private def distTable(top: DataFrame, n: Int, cap: Int,
                         gramCol: String): DataFrame = {
-    val w = Window.partitionBy(col("n")).orderBy(col("c").desc, col("g").asc)
-    val t = top.where(col("n") === n)
-      .withColumn("__rn", row_number().over(w))
-      .where(col("__rn") <= cap)
+    val t = GroupedTopK.perGroup(top.where(col("n") === n), Seq(col("n")),
+        struct((-col("c")).as("nc"), col("g").as("gg")), cap)
       .select(col("g").as(gramCol), col("c"))
       .persist()
     t.count() // materialize now: no lazy-lineage refits (r9 advisory)

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Grouped/seeded sampling — the reference's per-slide tile subsampling
@@ -9,27 +8,22 @@ import org.apache.spark.sql.functions._
   * `random.sample(tiles_of_slide, min(len, nr_tiles))` with a fixed seed)
   * and the DataLoader shuffle (training_scripts/ExperimentSetup_v2.py:173).
   *
-  * Scale: the window partitions by the group key (slides/documents — high
-  * cardinality), so the shuffle is well spread; within each group only a
-  * rank is computed, no materialized sort of the whole table.
+  * Scale: per-group sampling clusters by the group key (slides/documents —
+  * high cardinality), so the shuffle is well spread; each group keeps a
+  * bounded heap of k rows, and nothing sorts the whole table.
   */
 object Sampling {
 
-  /** Keep at most `k` rows per group, chosen by the given deterministic
-    * order. `k <= 0` keeps all rows (the reference's `nr_tiles = 0`,
-    * dataset_classes_v1.py:47). Window phrasing sorts each group in full;
-    * for huge groups with small k prefer the bounded-heap physical operator
-    * [[graft.plans.GroupedTopK]] (same semantics under a total order).
+  /** Keep at most `k` rows per group: those with the smallest `order`
+    * value (nulls first), through [[graft.plans.GroupedTopK]]. `k <= 0`
+    * keeps all rows (the reference's `nr_tiles = 0`,
+    * dataset_classes_v1.py:47). Pass a total order when the sample must
+    * be reproducible: ties at the k boundary are unspecified.
     */
   def takePerGroup(df: DataFrame, groupCols: Seq[Column], k: Int,
-                   orderBy: Column): DataFrame =
+                   order: Column): DataFrame =
     if (k <= 0) df
-    else {
-      val w = Window.partitionBy(groupCols: _*).orderBy(orderBy)
-      df.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") <= k)
-        .drop("__rn")
-    }
+    else graft.plans.GroupedTopK.perGroup(df, groupCols, order, k)
 
   /** Engine-independent pseudo-random order key from an integer column —
     * a Knuth multiplicative hash kept in Long range so the same expression
@@ -45,14 +39,13 @@ object Sampling {
     pmod(pmod(key.cast("long"), lit(1000000007L)) * lit(2654435761L),
       lit(1000000007L))
 
-  /** Spark-native seeded variant (`rand(seed)` — per-partition determinism
-    * requires a stable prior ordering, SURVEY.md §7.4 risk 4).
+  /** Spark-native seeded order key: `xxhash64(stableKey, seed)`, a pure
+    * function of the row's key, so the order is the same under any
+    * partitioning or rerun (unlike `rand(seed)`, which depends on each
+    * row's position in its partition, SURVEY.md §7.4 risk 4).
     */
-  def seededOrder(df: DataFrame, stableKey: Column, seed: Long): Column = {
-    // rand(seed) is deterministic per (partition, row-position); anchoring on
-    // a repartition-by-key keeps results stable across reruns.
+  def seededOrder(stableKey: Column, seed: Long): Column =
     xxhash64(stableKey, lit(seed))
-  }
 
   private val M = 1000000007L
 

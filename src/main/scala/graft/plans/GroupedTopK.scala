@@ -13,15 +13,27 @@ import org.apache.spark.sql.graft.ColumnBridge
   * smallest `order` value per group (lexicographic for struct orders; wrap
   * descending columns by negation or struct tricks).
   *
-  * Why a custom operator: the DataFrame phrasing —
-  * `row_number().over(Window.partitionBy(g).orderBy(o)) <= k` — must SORT
-  * every group in full (O(n log n) per group, full materialization in the
-  * window buffer) just to discard all but k rows. This physical operator
-  * keeps a bounded max-heap per group (O(n log k), O(groups·k) memory) after
-  * the same single clustered shuffle. The classic D3 shape (per-slide tile
-  * sampling, dataset_classes_v1.py:44-51) at 100 TB: billions of tiles,
-  * k≈100 — the sort buffer is the difference between fitting in memory and
-  * spilling.
+  * Why a custom operator: Spark 4.1 plans the window phrasing —
+  * `row_number().over(Window.partitionBy(g).orderBy(o)) <= k` — as a
+  * two-phase `WindowGroupLimit` (Partial below the exchange, Final above
+  * it), so both forms shuffle at most partition-groups × k rows. They
+  * differ inside a group: the window form sorts each partition's rows to
+  * keep k (O(n log n)), this operator keeps a bounded max-heap per group
+  * (O(n log k), O(groups·k) memory). Measured with graft.Bench on the 20
+  * queries that reach it (q16, q4a, q4d, q4k, q4x, q4z, q5y, q6h, q6n,
+  * q6q, q6u, q6y, q77 and the LM fits q5k, q5o, q5p, q5s, q5t, q5u, q7a),
+  * `perGroup`'s body swapped for the window form, three alternating pairs
+  * on 4 cpus with quiet sf0.1 canaries (0.022–0.025 s):
+  *   - sf0.1: spark_seq 7.05/7.24/7.86 s (operator) vs 7.95/7.87/7.55 s
+  *     (window), 2 of 3 pairs won; 20-query wall 2.16/2.15/2.27 vs
+  *     2.84/2.30/2.42 s; q16 0.20–0.21 vs 0.26–0.28 s;
+  *   - graft.ScaleData 10× copy: spark_seq 12.58/12.04/13.09 vs
+  *     13.88/14.79/13.45 s and wall 5.41/6.08/5.58 vs 8.61/6.33/6.29 s,
+  *     every pair won; q16 0.76/0.62/0.86 vs 1.30/1.07/0.97 s, q4x
+  *     0.75/0.67/0.69 vs 0.95/0.96/0.77 s, q5y 0.57/0.61/0.74 vs
+  *     0.67/1.01/0.80 s.
+  * The heap's edge is small at sf0.1 and clear at 10×, so the operator
+  * stays the one grouped top-k path.
   *
   * Mechanism demo for the whole custom-operator ladder: LogicalPlan node →
   * SparkStrategy (via SparkSessionExtensions.injectPlannerStrategy or
@@ -131,9 +143,12 @@ object GroupedTopKStrategy extends SparkStrategy {
 }
 
 object GroupedTopK {
-  /** Keep the k rows with the smallest `order` value per group. */
+  /** Keep the k rows with the smallest `order` value per group (nulls
+    * first). `k` must be at least 1: the heap has no empty form.
+    */
   def perGroup(df: DataFrame, groupCols: Seq[Column], order: Column,
                k: Int): DataFrame = {
+    require(k >= 1, s"grouped top-k needs k >= 1, got $k")
     val spark = df.sparkSession
     if (!spark.experimental.extraStrategies.contains(GroupedTopKStrategy)) {
       spark.experimental.extraStrategies =

@@ -168,7 +168,7 @@ object PdiQueries {
         |WHERE rn <= 10
         |ORDER BY c_mktsegment, c_custkey""".stripMargin) { (s, d) =>
       Sampling.takePerGroup(Tables.customer(s, d), Seq(col("c_mktsegment")), 10,
-          Sampling.pseudoRand(col("c_custkey")).asc_nulls_first)
+          struct(Sampling.pseudoRand(col("c_custkey")), col("c_custkey")))
         .select(col("c_mktsegment"), col("c_custkey"))
         .orderBy(col("c_mktsegment"), col("c_custkey"))
     },

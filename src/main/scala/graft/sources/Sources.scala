@@ -140,7 +140,7 @@ object Sources {
     df.withColumn("shard", shardId(key, nShards))
       .repartition(col("shard"))
       .sortWithinPartitions(col("shard"),
-        graft.operators.Sampling.seededOrder(df, key, 7L), key)
+        graft.operators.Sampling.seededOrder(key, 7L), key)
       .write.mode("overwrite").partitionBy("shard").parquet(path)
   }
 }

@@ -163,6 +163,19 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.parseRecordSpark("""{"duckdb":{"q01_x":0.9}}""").isEmpty)
   }
 
+  test("passes: a ScaleData copy runs one attempt, one sequential run and one wall pass") {
+    // graft.ScaleData writes each table as a directory of part files; the
+    // testdata dirs hold one file per table
+    val scaled = java.nio.file.Files.createTempDirectory("graft_scaled")
+    java.nio.file.Files.createDirectories(scaled.resolve("lineitem.parquet"))
+    val flat = java.nio.file.Files.createTempDirectory("graft_flat")
+    java.nio.file.Files.createFile(flat.resolve("lineitem.parquet"))
+    assert(Bench.passes(scaled.toString) ==
+      Bench.Passes(attempts = 1, runs = 1, wallRuns = 1))
+    assert(Bench.passes(flat.toString) ==
+      Bench.Passes(attempts = 4, runs = 2, wallRuns = 3))
+  }
+
   test("codegenJson lists each sequential run's compiles in order") {
     val js = Bench.codegenJson(Map("q02_y" -> Seq((0L, 0.0)),
       "q01_x" -> Seq((12L, 0.25), (0L, 0.0))))

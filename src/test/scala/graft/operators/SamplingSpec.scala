@@ -69,8 +69,8 @@ class SamplingSpec extends SparkSpec {
   }
 
   test("seededOrder varies with seed") {
-    val a = tiles.orderBy(Sampling.seededOrder(tiles, col("tile"), 1)).select("tile").as[Int].collect()
-    val b = tiles.orderBy(Sampling.seededOrder(tiles, col("tile"), 2)).select("tile").as[Int].collect()
+    val a = tiles.orderBy(Sampling.seededOrder(col("tile"), 1)).select("tile").as[Int].collect()
+    val b = tiles.orderBy(Sampling.seededOrder(col("tile"), 2)).select("tile").as[Int].collect()
     assert(a.toSeq != b.toSeq)
   }
 

@@ -21,6 +21,18 @@ class GroupedTopKSpec extends SparkSpec {
     assert(heap == window)
   }
 
+  test("k below 1 is rejected when the frame is built, not inside a task") {
+    // an empty heap has no head to compare against (k = 0) and a
+    // PriorityQueue cannot be sized below 1 (k < 0): unchecked, both
+    // fail only inside a task, at collect()
+    Seq(0, -1).foreach { k =>
+      val e = intercept[IllegalArgumentException] {
+        GroupedTopK.perGroup(df, Seq(col("g")), struct(col("score"), col("id")), k)
+      }
+      assert(e.getMessage.contains(s"got $k"), e.getMessage)
+    }
+  }
+
   test("k larger than group size keeps everything") {
     val out = GroupedTopK.perGroup(df, Seq(col("g")),
       struct(col("score"), col("id")), k = 1000)

@@ -2,10 +2,12 @@
 # Auto-retrying quiet-window bench (tools/bench_gate.md's canary recipe,
 # automated): wait until the host canary is quiet, run the full graft.Bench,
 # and KEEP the artifact only if the emitted line's own canary fields are
-# also quiet (<= 0.032 on both engines) — the r8 verdict's re-certification
+# also quiet (<= the bar on both engines) — the r8 verdict's re-certification
 # rule. On success writes the one-line JSON to $OUT and snapshots
 # BENCH_DETAIL.json (which every full run overwrites, including degraded
-# ones) to ${OUT%.json}_detail.json.
+# ones) to ${OUT%.json}_detail.json. Bench's record trigger reads the
+# committed BENCH_DETAIL.json through git itself, so the record cannot
+# drift across this loop's runs.
 #
 # Usage: tools/bench_quiet.sh [max_attempts] [out_json]
 # Bench runs on every core of the host (nproc).
@@ -14,20 +16,6 @@ MAX=${1:-8}
 OUT=${2:-/tmp/BENCH_QUIET.json}
 . "$(dirname "$0")/canary.sh"
 BAR=$CANARY_BAR
-
-# pin self-defense v2's record trigger to the COMMITTED detail before the
-# first run: every full Bench run overwrites BENCH_DETAIL.json, so without
-# a snapshot the "record" would degrade to whatever the previous (possibly
-# degraded) attempt wrote. Prefer the git-committed copy (same source
-# Bench itself reads) and fall back to the working tree outside a git
-# checkout; either way the snapshot is immutable across the loop's runs.
-REC=/tmp/bench_quiet_record_$$.json
-if git show HEAD:BENCH_DETAIL.json > "$REC" 2>/dev/null && [ -s "$REC" ]; then
-  export SPARK_GRAFT_RECORD="$REC"
-elif [ -f BENCH_DETAIL.json ]; then
-  cp BENCH_DETAIL.json "$REC"
-  export SPARK_GRAFT_RECORD="$REC"
-fi
 
 for i in $(seq 1 "$MAX"); do
   c=$(canary)
@@ -57,7 +45,8 @@ except Exception:
     print(9)")
   # self-defense v2: also reject a window whose kept attempt saw >25%
   # dispersion across its own wall runs (mid-suite burst the endpoint
-  # canaries cannot see); -1 (unknown) passes — old artifacts lack the key
+  # canaries cannot see; Bench.WallDispBar); -1 (unknown) passes — old
+  # artifacts lack the key
   disp=$(python3 -c "
 import json
 try:

@@ -1,8 +1,9 @@
 # Shared host-noise canary (sourced, not executed): best-of-3 warm DuckDB
 # aggregate over the sf0.1 lineitem fixture. Quiet <= $CANARY_BAR (0.032),
-# degraded >= 0.2 — tools/bench_gate.md. The same recipe lives as a Scala
-# port in Bench.hostCanary(); change all three together.
-CANARY_BAR=${CANARY_BAR:-0.032}
+# degraded >= 0.2 — tools/bench_gate.md. The bar's one Scala home is the
+# constant Bench.CanaryBar, and the recipe's is Bench.hostCanary(); this
+# shell copy must match both.
+CANARY_BAR=0.032
 
 # Fail-CLOSED (ADVICE r17): python3/duckdb absent or erroring emits the
 # sentinel -1 (Bench.hostCanary's convention), which canary_quiet rejects

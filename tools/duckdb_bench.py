@@ -52,7 +52,7 @@ import duckdb
 def main() -> None:
     sf_dir, oracle_path = sys.argv[1], sys.argv[2]
     runs = max(1, int(os.environ.get("GRAFT_RUNS", "2")))
-    # wall passes must match the Spark side's SPARK_GRAFT_WALL_RUNS: taking
+    # wall passes must match the Spark side's wall-pass count: taking
     # best-of-N over a DIFFERENT N per engine would bias the headline ratio
     # toward whichever engine sampled more (ADVICE r8). The caller passes
     # its own wall count through; default stays symmetric with `runs`.
