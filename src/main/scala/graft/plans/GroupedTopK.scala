@@ -19,21 +19,24 @@ import org.apache.spark.sql.graft.ColumnBridge
   * it), so both forms shuffle at most partition-groups × k rows. They
   * differ inside a group: the window form sorts each partition's rows to
   * keep k (O(n log n)), this operator keeps a bounded max-heap per group
-  * (O(n log k), O(groups·k) memory). Measured with graft.Bench on the 20
-  * queries that reach it (q16, q4a, q4d, q4k, q4x, q4z, q5y, q6h, q6n,
-  * q6q, q6u, q6y, q77 and the LM fits q5k, q5o, q5p, q5s, q5t, q5u, q7a),
-  * `perGroup`'s body swapped for the window form, three alternating pairs
-  * on 4 cpus with quiet sf0.1 canaries (0.022–0.025 s):
-  *   - sf0.1: spark_seq 7.05/7.24/7.86 s (operator) vs 7.95/7.87/7.55 s
-  *     (window), 2 of 3 pairs won; 20-query wall 2.16/2.15/2.27 vs
-  *     2.84/2.30/2.42 s; q16 0.20–0.21 vs 0.26–0.28 s;
-  *   - graft.ScaleData 10× copy: spark_seq 12.58/12.04/13.09 vs
-  *     13.88/14.79/13.45 s and wall 5.41/6.08/5.58 vs 8.61/6.33/6.29 s,
-  *     every pair won; q16 0.76/0.62/0.86 vs 1.30/1.07/0.97 s, q4x
-  *     0.75/0.67/0.69 vs 0.95/0.96/0.77 s, q5y 0.57/0.61/0.74 vs
-  *     0.67/1.01/0.80 s.
-  * The heap's edge is small at sf0.1 and clear at 10×, so the operator
-  * stays the one grouped top-k path.
+  * (O(n log k), O(groups·k) memory). Measured with graft.Bench on the 21
+  * queries that reach it (q16, q27, q4a, q4d, q4k, q4x, q4z, q5y, q6h,
+  * q6n, q6q, q6u, q6y, q77 and the LM fits q5k, q5o, q5p, q5s, q5t, q5u,
+  * q7a), `perGroup`'s body swapped for the window form, 28 streams and 2
+  * shuffle partitions on 4 cpus, alternating pairs:
+  *   - graft.ScaleData 10× copy, 10 pairs: neither form wins the set.
+  *     spark_seq median 17.11 s (operator) vs 16.02 s (window), the
+  *     operator ahead in 4 of 10 pairs; 21-query wall median 7.27 vs
+  *     7.77 s, 8 of 10. Per query the split is steady: the operator wins
+  *     q4x in 9 of 10 pairs and q16, q5y and q27 in 8 (q5y 0.83 vs
+  *     1.02 s), and loses q4k in 9 with one tie (0.75 vs 0.40 s) and q6u
+  *     in 8. An earlier 3-pair set on 20 of these queries read 3 of 3 for
+  *     the operator; the 10 pairs did not confirm it.
+  *   - sf0.1, 3 pairs on the 20: unresolved, spark_seq 7.05/7.24/7.86 s
+  *     (operator) vs 7.95/7.87/7.55 s, 2 of 3.
+  * Neither form met 9 of 10 pairs on the set, so the operator stays, as
+  * the incumbent, the one grouped top-k path. Why q4k loses is open
+  * (ROADMAP item 3).
   *
   * Mechanism demo for the whole custom-operator ladder: LogicalPlan node →
   * SparkStrategy (via SparkSessionExtensions.injectPlannerStrategy or

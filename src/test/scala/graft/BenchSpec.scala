@@ -176,6 +176,21 @@ class BenchSpec extends AnyFunSuite {
       Bench.Passes(attempts = 4, runs = 2, wallRuns = 3))
   }
 
+  test("the shell gate scripts carry Bench's canary and dispersion bars") {
+    // tools/canary.sh and tools/bench_quiet.sh gate runs outside the JVM, so
+    // they hold their own copies of the two bars; a drifted copy would
+    // certify windows Bench itself rejects
+    def shellConst(file: String, name: String): Double = {
+      val src = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(file)), "UTF-8")
+      val m = s"(?m)^$name=([0-9.]+)$$".r.findAllMatchIn(src).toList
+      assert(m.size == 1, s"$file: expected one $name= line, found ${m.size}")
+      m.head.group(1).toDouble
+    }
+    assert(shellConst("tools/canary.sh", "CANARY_BAR") == Bench.CanaryBar)
+    assert(shellConst("tools/bench_quiet.sh", "DISP_BAR") == Bench.WallDispBar)
+  }
+
   test("codegenJson lists each sequential run's compiles in order") {
     val js = Bench.codegenJson(Map("q02_y" -> Seq((0L, 0.0)),
       "q01_x" -> Seq((12L, 0.25), (0L, 0.0))))

@@ -16,6 +16,9 @@ MAX=${1:-8}
 OUT=${2:-/tmp/BENCH_QUIET.json}
 . "$(dirname "$0")/canary.sh"
 BAR=$CANARY_BAR
+# max/min across the kept attempt's wall passes; Bench.WallDispBar, pinned
+# equal by BenchSpec
+DISP_BAR=1.25
 
 for i in $(seq 1 "$MAX"); do
   c=$(canary)
@@ -45,8 +48,7 @@ except Exception:
     print(9)")
   # self-defense v2: also reject a window whose kept attempt saw >25%
   # dispersion across its own wall runs (mid-suite burst the endpoint
-  # canaries cannot see; Bench.WallDispBar); -1 (unknown) passes — old
-  # artifacts lack the key
+  # canaries cannot see); -1 (unknown) passes — old artifacts lack the key
   disp=$(python3 -c "
 import json
 try:
@@ -54,8 +56,8 @@ try:
     print(d.get('wall_disp', -1))
 except Exception:
     print(9)")
-  if ! awk -v d="$disp" 'BEGIN{exit !(d <= 1.25)}'; then
-    echo "[bench_quiet] attempt $i wall dispersion $disp > 1.25, retrying"
+  if ! awk -v d="$disp" -v b="$DISP_BAR" 'BEGIN{exit !(d <= b)}'; then
+    echo "[bench_quiet] attempt $i wall dispersion $disp > $DISP_BAR, retrying"
     sleep 60
     continue
   fi

@@ -1,8 +1,8 @@
 # Shared host-noise canary (sourced, not executed): best-of-3 warm DuckDB
 # aggregate over the sf0.1 lineitem fixture. Quiet <= $CANARY_BAR (0.032),
 # degraded >= 0.2 — tools/bench_gate.md. The bar's one Scala home is the
-# constant Bench.CanaryBar, and the recipe's is Bench.hostCanary(); this
-# shell copy must match both.
+# constant Bench.CanaryBar, and BenchSpec fails when this copy differs; the
+# recipe's Scala home is Bench.hostCanary().
 CANARY_BAR=0.032
 
 # Fail-CLOSED (ADVICE r17): python3/duckdb absent or erroring emits the
